@@ -38,11 +38,13 @@ object SparkEntry {
       GraphOps.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB
-    * on the same parquet tables. EVERY registered query has an oracle:
-    * the index-building ops (x03/x06/x12) construct their structures in
-    * exact engine-neutral arithmetic precisely so SQL can reproduce
-    * them, and the HLL sketch (x13) emits exact counts plus
-    * within-tolerance booleans. */
+    * on the same parquet tables. Every registered query has one except
+    * the six sketch/sampled twins (x13b/x25b/x34b/x35b/x70b/x61b), whose
+    * output no SQL reproduces: TwinAgreement pins them against their
+    * exact counterparts. The index-building ops (x03/x06/x12) construct
+    * their structures in exact engine-neutral arithmetic precisely so
+    * SQL can reproduce them, and the HLL sketch (x13) emits exact
+    * counts plus within-tolerance booleans. */
   def oracleSql: Map[String, String] =
     CoreQueries.oracleSql ++ DedupOps.oracleSql ++ SimilarityOps.oracleSql ++
       TextOps.oracleSql ++ MultimodalOps.oracleSql ++ SketchOps.oracleSql ++

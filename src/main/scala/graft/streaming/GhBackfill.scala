@@ -135,13 +135,23 @@ object GhBackfill {
     * analogue. Row counts come from ONE partition-columns-only
     * aggregate (satisfied from parquet row-group metadata, no data
     * pages read); the deletes are driver-side metadata ops. Returns
-    * the number of partitions dropped. */
+    * the number of partitions dropped. Refuses a streaming file sink's
+    * output (a `startIngest` bronze table). */
   def trimToMaxEvents(spark: SparkSession, dir: String, maxEvents: Long,
                       dateCol: String = "event_date",
                       hourCol: String = "event_hour"): Int = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(path)) return 0
+    // a streaming file sink's table: readers list files from its
+    // `_spark_metadata` log, not the directory, so a deleted logged
+    // file fails every later read of the table
+    val sinkLog = new Path(path, "_spark_metadata")
+    if (fs.exists(sinkLog))
+      throw new UnsupportedOperationException(
+        s"trimToMaxEvents: $dir is a streaming file sink's output; its log $sinkLog " +
+        "still lists every file, so deleting partitions would break every later " +
+        "read of the table. Refusing to trim it.")
     // a table whose partitions were ALL expired/trimmed is an existing
     // dir with no data (just _SUCCESS) — schema inference would throw
     if (!fs.listStatus(path).exists(st =>
@@ -175,47 +185,6 @@ object GhBackfill {
       .filter(st => fs.listStatus(st.getPath).isEmpty)
       .foreach(st => fs.delete(st.getPath, true))
     dropped
-  }
-
-  /** Upsert (hour, login, score) rows carrying FULL current scores into
-    * the hourly table: keep the untouched rows of touched partitions
-    * (anti-join on the upsert keys), add the new values, overwrite only
-    * those partitions. Idempotent — applying the same update twice
-    * yields the same table. Used by the streaming incremental rollup. */
-  def upsertHourlyScores(spark: SparkSession, updates: DataFrame,
-                         hourlyDir: String): Unit = {
-    val u = updates
-      .withColumn("score_date", date_format(col("hour"), "yyyy-MM-dd"))
-      .withColumn("score_hour", hour(col("hour")))
-      .select("hour", "login", "score", "score_date", "score_hour")
-    val touched = u.select(col("score_date"), col("score_hour")).distinct()
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    if (touched.isEmpty) return
-    val existingParts = existingHourPartitions(spark, hourlyDir)
-    val merged =
-      if (existingParts.intersect(touched).isEmpty) u
-      else {
-        val existing = spark.read.parquet(hourlyDir)
-          .filter(concat_ws(":", col("score_date"), col("score_hour"))
-            .isin(touched.map { case (dt, h) => s"$dt:$h" }.toSeq: _*))
-          .select("hour", "login", "score", "score_date", "score_hour")
-        existing
-          .join(u.select(col("score_date").as("ud"), col("score_hour").as("uh"),
-                         col("login").as("ul")),
-            col("score_date") === col("ud") && col("score_hour") === col("uh") &&
-              col("login") === col("ul"),
-            "left_anti")
-          .unionByName(u)
-      }
-    // The merge reads the table it overwrites: materialize first
-    // (eager localCheckpoint severs the lineage to the source files).
-    // A production deployment would use a transactional table format;
-    // plain parquet + checkpoint keeps the same semantics here.
-    // (dynamic overwrite as a writer option — see writeHourlyScores.)
-    merged.localCheckpoint(true).write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("score_date", "score_hour")
-      .parquet(hourlyDir)
   }
 
   /** Daily rollup recomputed from the hourly table (A2, idempotent). */

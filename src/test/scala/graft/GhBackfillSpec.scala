@@ -105,6 +105,17 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
     assert(graft.streaming.GhBackfill.trimToMaxEvents(spark, out, 10) === 0)
   }
 
+  test("size-bounded trim refuses a streaming sink's table and deletes nothing") {
+    val tmp = Files.createTempDirectory("graft-bf-trim4").toString
+    GhIngest.startIngest(spark, fixtureDir, s"$tmp/bronze", s"$tmp/ckpt")
+      .awaitTermination(60000)
+    val err = intercept[UnsupportedOperationException](
+      GhBackfill.trimToMaxEvents(spark, s"$tmp/bronze", 0))
+    assert(err.getMessage.contains("_spark_metadata"))
+    // every logged file is still there: the table reads in full
+    assert(spark.read.parquet(s"$tmp/bronze").count() === 15)
+  }
+
   test("partition listing tolerates foreign and malformed directories") {
     val out = Files.createTempDirectory("graft-bf5").toString + "/hourly"
     GhBackfill.backfillMissingHours(spark, cleanedEvents, out)

@@ -110,15 +110,20 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     assert(out.select($"event_date").distinct().count() === 2)
   }
 
-  test("maxFilesPerTrigger paginates the backlog into micro-batches (B2)") {
-    // split the fixture into 3 one-per-file inputs
-    val in = Files.createTempDirectory("graft-paged")
+  /** The fixture split into 3 input files, in order. */
+  private def pagedFixture(prefix: String): java.nio.file.Path = {
+    val in = Files.createTempDirectory(prefix)
     val lines = scala.io.Source.fromInputStream(
       getClass.getResourceAsStream("/gh_events.ndjson")).getLines().toSeq
     lines.grouped((lines.size + 2) / 3).zipWithIndex.foreach { case (chunk, i) =>
       Files.write(in.resolve(s"chunk$i.ndjson"),
         chunk.mkString("\n").getBytes("UTF-8"))
     }
+    in
+  }
+
+  test("maxFilesPerTrigger paginates the backlog into micro-batches (B2)") {
+    val in = pagedFixture("graft-paged")
     val tmp = Files.createTempDirectory("graft-paged-out").toString
     val q = GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt",
       maxFilesPerTrigger = Some(1))
@@ -126,6 +131,30 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     // one micro-batch per file → at least 3 batches in the progress log
     assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
     assert(spark.read.parquet(s"$tmp/out").count() === 15)   // same result
+  }
+
+  test("each micro-batch writes at most one parquet file per (event_date, event_hour)") {
+    val in = pagedFixture("graft-files")
+    val tmp = Files.createTempDirectory("graft-files-out").toString
+    GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt",
+      maxFilesPerTrigger = Some(1)).awaitTermination(60000)
+    // the file sink's log holds one file per micro-batch, listing the
+    // data files that batch wrote
+    val log = new java.io.File(s"$tmp/out/_spark_metadata")
+    val batches = log.listFiles().filter(_.getName.forall(_.isDigit)).map { f =>
+      val src = scala.io.Source.fromFile(f)
+      try "\"path\":\"([^\"]+)\"".r.findAllMatchIn(src.mkString).map(_.group(1)).toSeq
+      finally src.close()
+    }
+    assert(batches.length >= 3)
+    batches.foreach { paths =>
+      val perHour = paths.groupBy(p => p.substring(0, p.lastIndexOf('/')))
+      assert(perHour.values.forall(_.size == 1), perHour)
+    }
+    // the log accounts for every data file in the table
+    assert(batches.map(_.size).sum === Files.walk(java.nio.file.Paths.get(s"$tmp/out"))
+      .filter(_.toString.endsWith(".parquet")).count())
+    assert(spark.read.parquet(s"$tmp/out").count() === 15)
   }
 
   test("live ingest picks up files that arrive after the stream starts") {
