@@ -13,7 +13,11 @@ import graft.functions.GhFunctions._
   *  - ingest (`insert-events.js` + `insert-events-into-db.lua`): NDJSON
   *    file-drop → bot filter (F1) → watermark + dropDuplicatesWithinWatermark
   *    (the 300 s dedup-TTL analogue, W3) → append to the bronze events
-  *    table partitioned by date/hour.
+  *    table partitioned by date/hour. The dedup state lives in ONE state
+  *    partition: it holds at most a 5-minute horizon of ids, and a
+  *    poll-sized trigger pays a store commit per partition (see
+  *    `startIngest` for the bound, the no-data batches it keeps, and
+  *    older checkpoints).
   *  - backfill (`update-contributor-scores.js`): batch read of hour
   *    files (`.json.gz` decompresses natively) → F2+F3 filters →
   *    1-hour tumbling-window count per login (A1) → idempotent
@@ -198,10 +202,36 @@ object GhIngest {
       .withWatermark("created_at", DedupWatermark)
       .dropDuplicatesWithinWatermark(Seq("id"))
 
+  /** Number of dedup state partitions (the "state width") a fresh
+    * ingest checkpoint is started with. */
+  private val IngestStateWidth = 1
+
   /** Bronze append sink, partitioned by event date+hour — the analogue
     * of the XADD stream + its retention (drop old partitions instead of
     * MAXLEN-trimming rows). `AvailableNow` backfills all pending files
-    * then stops, the W5 catch-up semantics. */
+    * then stops, the W5 catch-up semantics.
+    *
+    * The query starts with `spark.sql.shuffle.partitions` set to
+    * `IngestStateWidth`, 1 (the caller's value is restored once
+    * `start()` returns, so other queries on `spark` keep theirs): a
+    * trigger runs one scan task and one task that dedups, commits the
+    * single state store and writes one file per touched (date, hour). A
+    * poll-sized trigger is mostly fixed cost, and every state partition
+    * adds a store commit to it. One partition is enough: the state holds
+    * at most one `DedupWatermark` horizon of event ids, O(10⁵) ids at
+    * GitHub's public event rate (SCALE.md, State), a few MB in one
+    * store; bulk history goes through the batch backfill, not this
+    * stream. Spark records the width in the checkpoint's offset log
+    * when the query first runs, and that recorded width governs every
+    * restart: a checkpoint started at another width resumes at it. Keep
+    * such a checkpoint rather than starting a fresh one, which would
+    * re-ingest the whole input directory.
+    *
+    * No-data micro-batches stay on (the default): `AvailableNow` ends
+    * its drain with a batch that only advances the watermark and evicts
+    * expired ids, and `dropDuplicatesWithinWatermark` probes state
+    * before it evicts, so without that batch an id re-sent after its
+    * horizon would be dropped instead of re-admitted. */
   def startIngest(spark: SparkSession, inputDir: String, outDir: String,
                   checkpointDir: String,
                   availableNow: Boolean = true,
@@ -209,16 +239,18 @@ object GhIngest {
     val cleaned = streamClean(spark, inputDir, maxFilesPerTrigger)
       .withColumn("event_date", date_format(col("created_at"), "yyyy-MM-dd"))
       .withColumn("event_hour", hour(col("created_at")))
-      // each hour's rows in one task: a trigger writes one file per hour
-      .repartition(col("event_date"), col("event_hour"))
     val writer = cleaned.writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
       .partitionBy("event_date", "event_hour")
       .outputMode("append")
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.set(key, IngestStateWidth.toLong)
+    // start() clones the session's conf into the query
+    try (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   /** Streaming hourly scoring over the bronze table, by recompute: a

@@ -171,6 +171,71 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     } finally q.stop()
   }
 
+  private def push(id: String, at: String): String =
+    s"""{"id": "$id", "type": "PushEvent", "actor": {"id": 1, "login": "octocat"}, "created_at": "2025-08-10T$at:00Z"}"""
+
+  /** Lands one page of (id, "HH:mm") push events as a new input file. */
+  private def land(in: java.nio.file.Path, page: String, events: (String, String)*): Unit =
+    Files.write(in.resolve(s"$page.ndjson"),
+      events.map { case (id, at) => push(id, at) }.mkString("\n").getBytes("UTF-8"))
+
+  private def bronzeIds(out: String): Seq[String] =
+    spark.read.parquet(out).select($"id").as[String].collect().toSeq.sorted
+
+  test("a fresh checkpoint runs every micro-batch with one state partition") {
+    val in = pagedFixture("graft-width")
+    val tmp = Files.createTempDirectory("graft-width-out").toString
+    val q = GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt",
+      maxFilesPerTrigger = Some(1))
+    q.awaitTermination(60000)
+    val ops = q.recentProgress.toSeq.flatMap(_.stateOperators)
+    assert(q.recentProgress.count(_.numInputRows > 0) >= 3)
+    assert(ops.nonEmpty && ops.forall(_.numShufflePartitions == 1),
+      ops.map(_.numShufflePartitions))
+    // the caller's session keeps its own width
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === "4")
+    assert(spark.read.parquet(s"$tmp/out").count() === 15)
+  }
+
+  test("a checkpoint started at the session's width resumes at it and keeps its dedup state") {
+    val in = Files.createTempDirectory("graft-resume")
+    val tmp = Files.createTempDirectory("graft-resume-out").toString
+    land(in, "page1", "A" -> "10:00", "B" -> "10:01")
+    // the ingest plan as it was before the width was pinned: it starts
+    // at the session's width and records that width in the checkpoint
+    GhIngest.streamClean(spark, in.toString)
+      .withColumn("event_date", date_format($"created_at", "yyyy-MM-dd"))
+      .withColumn("event_hour", hour($"created_at"))
+      .writeStream.format("parquet")
+      .option("path", s"$tmp/out").option("checkpointLocation", s"$tmp/ckpt")
+      .partitionBy("event_date", "event_hour").outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination(60000)
+    // the next page re-sends A and B inside their 5-minute horizon
+    land(in, "page2", "A" -> "10:02", "B" -> "10:03", "C" -> "10:04")
+    val q = GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt")
+    q.awaitTermination(60000)
+    val ops = q.recentProgress.toSeq.flatMap(_.stateOperators)
+    assert(ops.nonEmpty && ops.forall(_.numShufflePartitions == 4),
+      ops.map(_.numShufflePartitions))
+    // the re-sent ids are dropped by the resumed state, not as late rows
+    assert(ops.map(_.numRowsDroppedByWatermark).sum === 0)
+    assert(bronzeIds(s"$tmp/out") === Seq("A", "B", "C"))
+  }
+
+  test("an id re-sent after its horizon is re-admitted across a restart (W3)") {
+    val in = Files.createTempDirectory("graft-ttl")
+    val tmp = Files.createTempDirectory("graft-ttl-out").toString
+    land(in, "page1", "A" -> "10:00", "B" -> "10:20")
+    GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt")
+      .awaitTermination(60000)
+    // the watermark is now 10:15: A's id has expired, B's has not
+    land(in, "page2", "A" -> "10:21", "B" -> "10:20")
+    GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt")
+      .awaitTermination(60000)
+    assert(bronzeIds(s"$tmp/out") === Seq("A", "A", "B"))
+  }
+
   test("streaming/batch parity (W5): backfill equals batch result") {
     val tmp = Files.createTempDirectory("graft-parity").toString
     val q = GhIngest.startIngest(spark, fixtureDir, s"$tmp/out", s"$tmp/ckpt")
