@@ -31,7 +31,7 @@ private[graft] object ArtifactBuild {
     * sessions never alias and entries evict with their session;
     * in-process only, like Tables' cache. Mutable state dirs
     * (streaming `sets/bands/labels` batches) must NOT go through
-    * this — they use StateMaintenance.readOr. */
+    * this — they read through StateMaintenance.PartialTable. */
   private val readCache = new graft.SessionCache[org.apache.spark.sql.DataFrame]
 
   def readCached(s: SparkSession, path: String): org.apache.spark.sql.DataFrame =

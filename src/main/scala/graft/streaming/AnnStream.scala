@@ -15,19 +15,17 @@ import graft.operators.{CoreQueries, SimilarityOps}
   *
   * Same partial-state discipline as the postings/card/sketch streams:
   * (batch_id, bucket)-partitioned, replay-safe dynamic overwrite,
-  * retention = batch-partition drop, compaction =
-  * StateMaintenance.compactBatches with the identity merge (vector
-  * rows are disjoint across batches, like postings). */
+  * retention = batch-partition drop, compaction with the identity
+  * merge (vector rows are disjoint across batches, like postings). */
 object AnnStream {
 
-  private val stateSchema: org.apache.spark.sql.types.StructType = {
+  private val vectors = new StateMaintenance.PartialTable("", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("vec_id", LongType),
       StructField("e", ArrayType(DoubleType)),
-      StructField("batch_id", LongType),
       StructField("bucket", IntegerType)))
-  }
+  }, extras = Seq("bucket"))
 
   /** One micro-batch of (vec_id, embedding) rows: signature each
     * vector (the x06 codegen expression) and land it in its
@@ -35,13 +33,11 @@ object AnnStream {
   def processVectorBatch(batch: DataFrame, stateDir: String,
                          batchId: Long): Unit = {
     val s = batch.sparkSession
-    batch
+    vectors.append(batch
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("bucket",
-        SimilarityOps.lshSignature(s, col("e")).cast("int"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "bucket").parquet(stateDir)
+        SimilarityOps.lshSignature(s, col("e")).cast("int")),
+      stateDir, batchId)
   }
 
   /** Start the index-maintenance stream over a parquet file-drop of
@@ -66,7 +62,7 @@ object AnnStream {
   def servedAnnLsh(spark: SparkSession, stateDir: String,
                    probeE: Seq[Double], excludeId: Long = -1L): DataFrame = {
     import spark.implicits._
-    val state = StateMaintenance.readOr(spark, stateDir, stateSchema)
+    val state = vectors.read(spark, stateDir)
     val probe = Seq(probeE).toDF("qe")
       .select(col("qe"),
         SimilarityOps.lshSignature(spark, col("qe")).cast("int").as("qb"))
@@ -100,7 +96,7 @@ object AnnStream {
     * compaction. */
   def servedIncomingNearDups(spark: SparkSession, stateDir: String,
                              batch: DataFrame): DataFrame = {
-    val state = StateMaintenance.readOr(spark, stateDir, stateSchema)
+    val state = vectors.read(spark, stateDir)
     val probes = batch
       .select(col("vec_id").as("new_id"),
         col("embedding").cast("array<double>").as("ne"))
@@ -121,6 +117,5 @@ object AnnStream {
     * partitioning preserved). */
   def compactVectors(spark: SparkSession, stateDir: String,
                      upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, stateDir, upTo,
-      identity, extraPartitions = Seq("bucket"))
+    vectors.compact(spark, stateDir, upTo)
 }

@@ -28,23 +28,20 @@ import graft.operators.BpeOps
   * vocabulary instead of re-reading the corpus. */
 object BpeStream {
 
-  private val vocabSchema: org.apache.spark.sql.types.StructType = {
+  /** Vocab partials RE-SUM per word. */
+  private val vocab = new StateMaintenance.PartialTable("vocab", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("word", StringType),
-      StructField("freq", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("freq", LongType)))
+  }, merge = _.groupBy(col("word")).agg(sum(col("freq")).as("freq")))
 
   /** One micro-batch of (doc_id, text) rows: land the batch's word
     * counts as a mergeable partial. Dynamic partition overwrite keyed
     * by batch_id makes foreachBatch replays idempotent. */
   def processDocBatch(batch: DataFrame, stateDir: String,
                       batchId: Long): Unit =
-    BpeOps.vocabOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/vocab")
+    vocab.append(BpeOps.vocabOf(batch), stateDir, batchId)
 
   /** Start the maintenance stream over a parquet file-drop of
     * documents (AvailableNow = drain-and-stop). */
@@ -60,8 +57,7 @@ object BpeStream {
   /** The retained window's merged (word, freq) vocabulary (Σ partials
     * per word — counts are additive over disjoint batches). */
   def servedVocab(spark: SparkSession, stateDir: String): DataFrame =
-    StateMaintenance.readOr(spark, s"$stateDir/vocab", vocabSchema)
-      .groupBy(col("word")).agg(sum(col("freq")).as("freq"))
+    vocab.merged(spark, stateDir)
 
   /** Retrain the tokenizer from the maintained vocabulary — no corpus
     * scan; bit-identical to `bpeTrain` over the retained documents. */
@@ -72,6 +68,5 @@ object BpeStream {
   /** Fold a committed prefix: vocab partials RE-SUM per word — the
     * associative merge the serving path already applies. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, s"$stateDir/vocab", upTo,
-      _.groupBy(col("word")).agg(sum(col("freq")).as("freq")))
+    vocab.compact(spark, stateDir, upTo)
 }

@@ -55,13 +55,14 @@ import graft.operators.DedupOps
   */
 object ClusterStream {
 
-  private val labelsSchema: org.apache.spark.sql.types.StructType = {
+  /** A doc's label row is unique across partitions (it stays in its
+    * landing partition even when remapped): identity merge. */
+  private val labels = new StateMaintenance.PartialTable("labels", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
-      StructField("rep", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("rep", LongType)))
+  })
 
   /** One micro-batch of (doc_id, text): land the dedup partials AND
     * fold the batch into the persisted labels.
@@ -86,10 +87,9 @@ object ClusterStream {
     // cross edges: batch bands vs the persisted (pre-batch) index —
     // the x56 ingest-gate probe; self-pairs filtered for replay
     // safety (a replayed batch sees its own bands in the index)
-    val cSets = StateMaintenance.readOr(spark, s"$stateDir/sets",
-        DedupStream.setsSchema).select($"doc_id", $"s")
-    val cBands = StateMaintenance.readOr(spark, s"$stateDir/bands",
-        DedupStream.bandsSchema)
+    val cSets = DedupStream.sets.read(spark, stateDir)
+      .select($"doc_id", $"s")
+    val cBands = DedupStream.bands.read(spark, stateDir)
       .select($"doc_id".as("cdoc"), $"band", $"key")
     val cand = bBands.join(cBands, Seq("band", "key"))
       .filter($"doc_id" =!= $"cdoc")
@@ -107,8 +107,7 @@ object ClusterStream {
     // contract old endpoints to their reps, converge the tiny graph
     // (ccLabelsOf checkpoints its input eagerly — this is the action
     // that drains every read of the pre-batch sets/bands state)
-    val oldLabels = StateMaintenance.readOr(spark, s"$stateDir/labels",
-        labelsSchema)
+    val oldLabels = labels.read(spark, stateDir)
       .select($"doc_id", $"rep", $"batch_id".cast("long").as("batch_id"))
     val crossC = cross
       .join(oldLabels.select($"doc_id".as("db"), $"rep".as("brep")), Seq("db"))
@@ -142,12 +141,8 @@ object ClusterStream {
         .localCheckpoint(true))
 
     // all reads are drained — land the partials and the labels
-    bSets.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/sets")
-    bBands.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "band").parquet(s"$stateDir/bands")
+    DedupStream.sets.append(bSets, stateDir, batchId)
+    DedupStream.bands.append(bBands, stateDir, batchId)
     // ONE dynamic overwrite covers the fresh landing partition AND the
     // merge-rewritten partitions: two separate writes would open a
     // torn-read window (a crash between them leaves a merged component
@@ -158,9 +153,8 @@ object ClusterStream {
       .join(comp.select($"doc_id", $"rep".as("crep")), Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"crep", $"doc_id").as("rep"),
         lit(batchId).as("batch_id"))
-    rewritten.fold(landing)(landing.unionByName(_))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/labels")
+    labels.overwrite(rewritten.fold(landing)(landing.unionByName(_)),
+      stateDir)
   }
 
   /** Start the label-maintenance stream over a parquet file-drop of
@@ -178,8 +172,7 @@ object ClusterStream {
     * state — must equal `dedupClustersOf` over the same docs
     * (spec-pinned under growth, merges, replay, and removals). */
   def servedLabels(spark: SparkSession, stateDir: String): DataFrame =
-    StateMaintenance.readOr(spark, s"$stateDir/labels", labelsSchema)
-      .select(col("doc_id"), col("rep"))
+    labels.merged(spark, stateDir)
       .orderBy(col("doc_id"))
 
   /** x57's serving-path removal: drop the takedown CLOSURE's label
@@ -188,17 +181,15 @@ object ClusterStream {
     * dedup partials. */
   def applyRemovals(spark: SparkSession, stateDir: String,
                     removedIds: Seq[Long]): Unit = {
-    StateMaintenance.removeDocs(spark, s"$stateDir/labels", removedIds)
+    labels.remove(spark, stateDir, removedIds)
     DedupStream.applyRemovals(spark, stateDir, removedIds)
   }
 
   /** Fold a committed prefix of batches into one partition per
-    * artifact — a doc's label row is unique across partitions (it
-    * stays in its landing partition even when remapped), so labels
-    * compact by identity like the sets/bands partials. */
+    * artifact — labels compact by identity like the sets/bands
+    * partials. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
-    StateMaintenance.compactBatches(spark, s"$stateDir/labels", upTo,
-      identity)
+    labels.compact(spark, stateDir, upTo)
     DedupStream.compact(spark, stateDir, upTo)
   }
 }

@@ -30,22 +30,20 @@ import graft.operators.DedupOps
   * compaction = identity merge (docs are disjoint across batches). */
 object DedupStream {
 
-  private[streaming] val setsSchema: org.apache.spark.sql.types.StructType = {
+  private[streaming] val sets = new StateMaintenance.PartialTable("sets", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
-      StructField("s", ArrayType(LongType)),
-      StructField("batch_id", LongType)))
-  }
+      StructField("s", ArrayType(LongType))))
+  })
 
-  private[streaming] val bandsSchema: org.apache.spark.sql.types.StructType = {
+  private[streaming] val bands = new StateMaintenance.PartialTable("bands", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
       StructField("key", LongType),
-      StructField("batch_id", LongType),
       StructField("band", IntegerType)))
-  }
+  }, extras = Seq("band"))
 
   /** Test seam (DedupStreamChaosSpec): invoked after the batch's sets
     * partition has landed but BEFORE the bands write and the streaming
@@ -60,15 +58,11 @@ object DedupStream {
     * and band keys into its own partitions. */
   def processDocBatch(batch: DataFrame, stateDir: String,
                       batchId: Long): Unit = {
-    val sets = DedupOps.shingleSetsOf(batch).localCheckpoint(false)
-    sets.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/sets")
+    val bSets = DedupOps.shingleSetsOf(batch).localCheckpoint(false)
+    sets.append(bSets, stateDir, batchId)
     onSetsWritten(batchId)
-    DedupOps.bandKeys(DedupOps.minhashSignatures(sets))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "band").parquet(s"$stateDir/bands")
+    bands.append(DedupOps.bandKeys(DedupOps.minhashSignatures(bSets)),
+      stateDir, batchId)
   }
 
   /** Start the index-maintenance stream over a parquet file-drop of
@@ -87,11 +81,10 @@ object DedupStream {
     * exact-Jaccard verify against the persisted identity sets — the
     * x02 output over exactly the retained documents. */
   def servedDupPairs(spark: SparkSession, stateDir: String): DataFrame = {
-    val sets = StateMaintenance.readOr(spark, s"$stateDir/sets", setsSchema)
-      .select(col("doc_id"), col("s"))
-    val bands = StateMaintenance.readOr(spark, s"$stateDir/bands", bandsSchema)
-      .select(col("doc_id"), col("band"), col("key"))
-    DedupOps.verifyJaccard(DedupOps.candidatesFromBands(bands), sets,
+    DedupOps.verifyJaccard(
+        DedupOps.candidatesFromBands(bands.read(spark, stateDir)
+          .select(col("doc_id"), col("band"), col("key"))),
+        sets.read(spark, stateDir).select(col("doc_id"), col("s")),
         DedupOps.JaccardThreshold)
       .orderBy(col("da"), col("db"))
   }
@@ -107,9 +100,8 @@ object DedupStream {
     * pairs within the already-retained window). */
   def servedIncomingDups(spark: SparkSession, stateDir: String,
                          batch: DataFrame): DataFrame = {
-    val cSets = StateMaintenance.readOr(spark, s"$stateDir/sets", setsSchema)
-      .select(col("doc_id"), col("s"))
-    val cBands = StateMaintenance.readOr(spark, s"$stateDir/bands", bandsSchema)
+    val cSets = sets.read(spark, stateDir).select(col("doc_id"), col("s"))
+    val cBands = bands.read(spark, stateDir)
       .select(col("doc_id").as("cdoc"), col("band"), col("key"))
     val bSets = DedupOps.shingleSetsOf(batch).localCheckpoint(false)
     val cand = DedupOps.bandKeys(DedupOps.minhashSignatures(bSets))
@@ -134,18 +126,15 @@ object DedupStream {
     * corpus. */
   def applyRemovals(spark: SparkSession, stateDir: String,
                     removedIds: Seq[Long]): Unit = {
-    StateMaintenance.removeDocs(spark, s"$stateDir/sets", removedIds)
-    StateMaintenance.removeDocs(spark, s"$stateDir/bands", removedIds,
-      extraPartitions = Seq("band"))
+    sets.remove(spark, stateDir, removedIds)
+    bands.remove(spark, stateDir, removedIds)
   }
 
   /** Fold a committed prefix of batches into one partition per
     * artifact (docs are disjoint across batches — identity merge;
     * bands keep their band partitioning). */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
-    StateMaintenance.compactBatches(spark, s"$stateDir/sets", upTo,
-      identity)
-    StateMaintenance.compactBatches(spark, s"$stateDir/bands", upTo,
-      identity, extraPartitions = Seq("band"))
+    sets.compact(spark, stateDir, upTo)
+    bands.compact(spark, stateDir, upTo)
   }
 }

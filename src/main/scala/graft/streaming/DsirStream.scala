@@ -27,25 +27,24 @@ import graft.operators.TextOps
   * rows) and broadcast to score each new ingest batch. */
 object DsirStream {
 
-  private val countsSchema: org.apache.spark.sql.types.StructType = {
+  /** Count partials RE-SUM per bucket. */
+  private val counts = new StateMaintenance.PartialTable("counts", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("b", LongType),
       StructField("ct_r", LongType),
-      StructField("ct_t", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("ct_t", LongType)))
+  }, merge = _.groupBy(col("b"))
+    .agg(sum(col("ct_r")).as("ct_r"), sum(col("ct_t")).as("ct_t")))
 
   /** One micro-batch of (doc_id, text, lang) rows: land the batch's
     * fused raw/target bucket counts as a mergeable partial. */
   def processDocBatch(batch: DataFrame, stateDir: String,
                       batchId: Long): Unit =
-    TextOps.dsirToksOf(batch)
+    counts.append(TextOps.dsirToksOf(batch)
       .groupBy(col("b"))
-      .agg(count(lit(1)).as("ct_r"), count_if(col("is_t")).as("ct_t"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/counts")
+      .agg(count(lit(1)).as("ct_r"), count_if(col("is_t")).as("ct_t")),
+      stateDir, batchId)
 
   /** Start the maintenance stream over a parquet file-drop of
     * documents (AvailableNow = drain-and-stop). */
@@ -61,14 +60,9 @@ object DsirStream {
   /** The retained window's log-ratio table, derived from the merged
     * count partials by the one-shot query's own integer algebra. */
   def servedRatios(spark: SparkSession, stateDir: String): DataFrame =
-    TextOps.dsirRatiosFromCounts(
-      StateMaintenance.readOr(spark, s"$stateDir/counts", countsSchema)
-        .groupBy(col("b"))
-        .agg(sum(col("ct_r")).as("ct_r"), sum(col("ct_t")).as("ct_t")))
+    TextOps.dsirRatiosFromCounts(counts.merged(spark, stateDir))
 
   /** Fold a committed prefix: count partials RE-SUM per bucket. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, s"$stateDir/counts", upTo,
-      _.groupBy(col("b"))
-        .agg(sum(col("ct_r")).as("ct_r"), sum(col("ct_t")).as("ct_t")))
+    counts.compact(spark, stateDir, upTo)
 }

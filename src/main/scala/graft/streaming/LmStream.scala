@@ -31,25 +31,24 @@ import graft.operators.TextOps
   * broadcast join while the model tracks the corpus. */
 object LmStream {
 
-  private val c12Schema: org.apache.spark.sql.types.StructType = {
+  /** Bigram-count partials RE-SUM per (w1, w2) — counts are additive
+    * over disjoint batches. */
+  private val c12 = new StateMaintenance.PartialTable("c12", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("w1", LongType),
       StructField("w2", LongType),
-      StructField("c12", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("c12", LongType)))
+  }, merge = _.groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12")))
 
   /** One micro-batch of (doc_id, text) rows: land the batch's bigram
     * counts as a mergeable partial. Dynamic partition overwrite keyed
     * by batch_id makes foreachBatch replays idempotent. */
   def processDocBatch(batch: DataFrame, stateDir: String,
                       batchId: Long): Unit =
-    TextOps.bigramsOfFrame(batch)
-      .groupBy(col("w1"), col("w2")).agg(count("*").as("c12"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/c12")
+    c12.append(TextOps.bigramsOfFrame(batch)
+      .groupBy(col("w1"), col("w2")).agg(count("*").as("c12")),
+      stateDir, batchId)
 
   /** Start the maintenance stream over a parquet file-drop of
     * documents (AvailableNow = drain-and-stop). */
@@ -62,22 +61,15 @@ object LmStream {
         stateDir, batchId)
     }
 
-  /** The retained window's merged bigram counts (Σ partials per key —
-    * counts are additive over disjoint batches). */
-  private def mergedCounts(spark: SparkSession, stateDir: String): DataFrame =
-    StateMaintenance.readOr(spark, s"$stateDir/c12", c12Schema)
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12"))
-
   /** The (w1, w2, sp) scoring table of the RETAINED window, derived
     * from the merged partials by the one-shot build's own algebra —
     * integer arithmetic end to end, so it equals `ensureLmModel`'s
     * model over the same documents bit for bit. */
   def servedModel(spark: SparkSession, stateDir: String): DataFrame =
-    TextOps.lmModelFromCounts(mergedCounts(spark, stateDir))
+    TextOps.lmModelFromCounts(c12.merged(spark, stateDir))
 
   /** Fold a committed prefix: c12 partials RE-SUM per bigram — the
     * associative merge the serving path already applies. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, s"$stateDir/c12", upTo,
-      _.groupBy(col("w1"), col("w2")).agg(sum(col("c12")).as("c12")))
+    c12.compact(spark, stateDir, upTo)
 }

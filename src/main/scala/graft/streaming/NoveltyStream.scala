@@ -35,13 +35,14 @@ import graft.operators.DedupOps
   * materializes anyway, here pre-built and incrementally owned. */
 object NoveltyStream {
 
-  private val pairsSchema: org.apache.spark.sql.types.StructType = {
+  /** Pair partials merge by distinct-union (a doc re-landed by
+    * several batches counts once). */
+  private val pairs = new StateMaintenance.PartialTable("docpairs", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
-      StructField("sh", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("sh", LongType)))
+  }, merge = _.distinct())
 
   /** One micro-batch of (doc_id, text): land the batch's distinct
     * (doc_id, shingle) pairs in its own partition. The codegen shingle
@@ -49,11 +50,9 @@ object NoveltyStream {
     * distinct pass is needed within a batch. */
   def processNoveltyBatch(batch: DataFrame, stateDir: String,
                           batchId: Long): Unit =
-    DedupOps.shingleSetsOf(batch.select(col("doc_id"), col("text")))
-      .select(col("doc_id"), explode(col("s")).as("sh"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/docpairs")
+    pairs.append(DedupOps.shingleSetsOf(batch.select(col("doc_id"), col("text")))
+      .select(col("doc_id"), explode(col("s")).as("sh")),
+      stateDir, batchId)
 
   /** Start the novelty-maintenance stream over a parquet file-drop of
     * documents (AvailableNow = drain-and-stop). */
@@ -66,17 +65,12 @@ object NoveltyStream {
     }
 
   /** x78's exact schema and values over every retained batch partition
-    * (the shared noveltyFromPairs core over the re-deduplicated pair
-    * state — the distinct makes a doc re-landed by several batches
-    * count once). */
+    * (the shared noveltyFromPairs core over the merged pair state). */
   def servedNovelty(spark: SparkSession, stateDir: String): DataFrame =
-    DedupOps.noveltyFromPairs(StateMaintenance
-      .readOr(spark, s"$stateDir/docpairs", pairsSchema)
-      .select(col("doc_id"), col("sh")).distinct())
+    DedupOps.noveltyFromPairs(pairs.merged(spark, stateDir))
 
   /** Fold a committed prefix of batches into one partial: the merge is
     * distinct-union, so the fold is a re-distinct. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, s"$stateDir/docpairs", upTo,
-      _.distinct())
+    pairs.compact(spark, stateDir, upTo)
 }

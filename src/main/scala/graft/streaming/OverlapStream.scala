@@ -36,24 +36,21 @@ import graft.operators.DedupOps
   * batch. */
 object OverlapStream {
 
-  private val pairsSchema: org.apache.spark.sql.types.StructType = {
+  /** Pair partials merge by distinct-union. */
+  private val pairs = new StateMaintenance.PartialTable("srcpairs", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("source", StringType),
-      StructField("sh", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("sh", LongType)))
+  }, merge = _.distinct())
 
   /** One micro-batch of (doc_id, source, text): land the batch's
     * distinct (source, shingle) pairs in its own partition. */
   def processOverlapBatch(batch: DataFrame, stateDir: String,
                           batchId: Long): Unit =
-    DedupOps.sourcePairsOf(
+    pairs.append(DedupOps.sourcePairsOf(
         batch.select(col("doc_id"), col("source"), col("text")))
-      .distinct()
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/srcpairs")
+      .distinct(), stateDir, batchId)
 
   /** Start the matrix-maintenance stream over a parquet file-drop of
     * documents (AvailableNow = drain-and-stop). */
@@ -70,21 +67,19 @@ object OverlapStream {
     * overlapMatrixFrom aggregate over the re-deduplicated pair
     * state). */
   def servedMatrix(spark: SparkSession, stateDir: String): DataFrame = {
-    val pairs = StateMaintenance
-      .readOr(spark, s"$stateDir/srcpairs", pairsSchema)
-      .select(col("source"), col("sh"))
-    // the same runtime choice as the batch operator: bit_or masks at
-    // ≤ 64 sources (the source list reads one dictionary-encoded state
-    // column), collect_set beyond
-    val srcs = DedupOps.sortedSourcesOf(pairs.select(col("source")))
+    val raw = pairs.read(spark, stateDir).select(col("source"), col("sh"))
+    // the same runtime choice as the batch operator: bit_or masks over
+    // the raw partials at ≤ 64 sources (the source list reads one
+    // dictionary-encoded state column), collect_set over the merged
+    // pairs beyond
+    val srcs = DedupOps.sortedSourcesOf(raw.select(col("source")))
     if (srcs.nonEmpty && srcs.length <= 64)
-      DedupOps.matrixFromMasks(DedupOps.sourceMasks(pairs, srcs), srcs)
-    else DedupOps.overlapMatrixFrom(pairs.distinct())
+      DedupOps.matrixFromMasks(DedupOps.sourceMasks(raw, srcs), srcs)
+    else DedupOps.overlapMatrixFrom(pairs.merged(spark, stateDir))
   }
 
   /** Fold a committed prefix of batches into one partial: the merge is
     * distinct-union, so the fold is a re-distinct. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, s"$stateDir/srcpairs", upTo,
-      _.distinct())
+    pairs.compact(spark, stateDir, upTo)
 }

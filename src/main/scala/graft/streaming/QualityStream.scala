@@ -23,24 +23,23 @@ import graft.operators.TextOps
   * a gate for any docs frame without ever re-aggregating the corpus. */
 object QualityStream {
 
-  private val stateSchema: org.apache.spark.sql.types.StructType = {
+  /** Histogram partials: counts re-sum per (source, q_micro). */
+  private val histogram = new StateMaintenance.PartialTable("", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("source", StringType),
       StructField("q_micro", LongType),
-      StructField("cnt", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("cnt", LongType)))
+  }, merge = _.groupBy(col("source"), col("q_micro"))
+    .agg(sum(col("cnt")).as("cnt")))
 
   /** One micro-batch of (doc_id, source, text): land the batch's
     * per-source score histogram in its own partition. */
   def processQualityBatch(batch: DataFrame, stateDir: String,
                           batchId: Long): Unit =
-    TextOps.qualityPartialsOf(
-        batch.select(col("doc_id"), col("source"), col("text")))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(stateDir)
+    histogram.append(TextOps.qualityPartialsOf(
+        batch.select(col("doc_id"), col("source"), col("text"))),
+      stateDir, batchId)
 
   /** Start the threshold-maintenance stream over a parquet file-drop
     * of documents (AvailableNow = drain-and-stop). */
@@ -61,8 +60,7 @@ object QualityStream {
   def servedThresholds(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val hist = StateMaintenance.readOr(spark, stateDir, stateSchema)
-      .groupBy($"source", $"q_micro").agg(sum($"cnt").as("cnt"))
+    val hist = histogram.merged(spark, stateDir)
     val cum = hist.withColumn("cum",
       sum($"cnt").over(Window.partitionBy($"source").orderBy($"q_micro")))
     val pk = hist.groupBy($"source").agg(sum($"cnt").as("n"))
@@ -94,7 +92,5 @@ object QualityStream {
 
   /** Fold a committed prefix of batches: counts re-sum. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-    StateMaintenance.compactBatches(spark, stateDir, upTo,
-      _.groupBy(col("source"), col("q_micro"))
-        .agg(sum(col("cnt")).as("cnt")))
+    histogram.compact(spark, stateDir, upTo)
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TextOps
 
 /** The corpus report card (x37) as an INCREMENTAL stream — the
@@ -25,8 +25,8 @@ import graft.operators.TextOps
 object ReportStream {
 
   /** Partial-state layout: x37's per-source aggregate columns,
-    * partitioned by batch_id. */
-  private val stateSchema: org.apache.spark.sql.types.StructType = {
+    * partitioned by batch_id; sums re-add, extrema re-min/max. */
+  private val partials = new StateMaintenance.PartialTable("", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("source", StringType),
@@ -36,18 +36,21 @@ object ReportStream {
       StructField("max_tokens", LongType),
       StructField("n_en", LongType),
       StructField("n_und", LongType),
-      StructField("total_q4", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("total_q4", LongType)))
+  }, merge = _.groupBy(col("source"))
+    .agg(sum(col("n_docs")).as("n_docs"),
+      sum(col("tokens")).as("tokens"),
+      min(col("min_tokens")).as("min_tokens"),
+      max(col("max_tokens")).as("max_tokens"),
+      sum(col("n_en")).as("n_en"),
+      sum(col("n_und")).as("n_und"),
+      sum(col("total_q4")).as("total_q4")))
 
   /** One micro-batch of documents: the batch's per-source partial card,
     * overwritten into its own batch_id partition. */
   def processReportBatch(batch: DataFrame, stateDir: String,
                          batchId: Long): Unit =
-    TextOps.reportPartialsOf(batch)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(stateDir)
+    partials.append(TextOps.reportPartialsOf(batch), stateDir, batchId)
 
   /** Start the card stream over a parquet file-drop of documents.
     * `AvailableNow` drains the backlog and stops (the backfill shape);
@@ -55,42 +58,21 @@ object ReportStream {
     * trigger. */
   def startReportStream(spark: SparkSession, inputDir: String,
                         stateDir: String, checkpointDir: String,
-                        maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processReportBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                        maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    StateMaintenance.startFileDropStream(spark, inputDir, checkpointDir,
+      maxFilesPerTrigger) { (batch, batchId) =>
+      processReportBatch(batch, stateDir, batchId)
+    }
 
   /** The card over every retained batch partition — x37's exact schema
     * and values for the retained window: counts/sums re-add, extrema
     * re-min/max, and the average materializes only here from the exact
     * integer masses (TextOps.finishReport). Absent/empty state reads as
     * an empty card. */
-  def mergedReport(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(p)) spark.read.schema(stateSchema).parquet(stateDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    TextOps.finishReport(
-      base.groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("tokens")).as("tokens"),
-          min(col("min_tokens")).as("min_tokens"),
-          max(col("max_tokens")).as("max_tokens"),
-          sum(col("n_en")).as("n_en"),
-          sum(col("n_und")).as("n_und"),
-          sum(col("total_q4")).as("total_q4")))
-  }
+  def mergedReport(spark: SparkSession, stateDir: String): DataFrame =
+    TextOps.finishReport(partials.merged(spark, stateDir))
+
+  /** Fold a committed prefix of batches into one partial card. */
+  def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
+    partials.compact(spark, stateDir, upTo)
 }

@@ -24,24 +24,25 @@ import graft.operators.SearchOps
   * retained window. */
 object SearchStream {
 
-  private val postingsSchema: org.apache.spark.sql.types.StructType = {
+  /** Postings rows are disjoint across batches (identity merge). */
+  private val postings = new StateMaintenance.PartialTable("postings", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
       StructField("term", StringType),
       StructField("tf", LongType),
       StructField("dl", LongType),
-      StructField("batch_id", LongType),
       StructField("tb", IntegerType)))
-  }
+  }, extras = Seq("tb"))
 
-  private val statsSchema: org.apache.spark.sql.types.StructType = {
+  /** Corpus stats re-add across batches. */
+  private val stats = new StateMaintenance.PartialTable("stats", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("n_docs", LongType),
-      StructField("sum_dl", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("sum_dl", LongType)))
+  }, merge = _.agg(sum(col("n_docs")).as("n_docs"),
+    sum(col("sum_dl")).as("sum_dl")))
 
   /** One micro-batch of documents: tokenize once, land the batch's
     * stats row and its postings (bucketed like the static index) into
@@ -49,14 +50,8 @@ object SearchStream {
   def processPostingsBatch(batch: DataFrame, stateDir: String,
                            batchId: Long): Unit = {
     val toks = SearchOps.tokenizedOf(batch).localCheckpoint(false)
-    SearchOps.statsOf(toks)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/stats")
-    SearchOps.postingsOf(toks)
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id", "tb").parquet(s"$stateDir/postings")
+    stats.append(SearchOps.statsOf(toks), stateDir, batchId)
+    postings.append(SearchOps.postingsOf(toks), stateDir, batchId)
   }
 
   /** Start the index-maintenance stream over a parquet file-drop of
@@ -70,7 +65,6 @@ object SearchStream {
       processPostingsBatch(batch, stateDir, batchId)
     }
 
-
   /** BM25 for the fixed query over the RETAINED window: corpus stats
     * re-add across surviving batch partitions, the hits scan prunes to
     * the query terms' buckets within each batch, and scoring is the
@@ -78,13 +72,18 @@ object SearchStream {
     * run over exactly the retained documents. */
   def servedBm25(spark: SparkSession, stateDir: String): DataFrame = {
     val tbs = SearchOps.QueryTerms.map(SearchOps.termBucketJvm).distinct
-    val stats0 = StateMaintenance.readOr(spark, s"$stateDir/stats", statsSchema)
-      .agg(sum(col("n_docs")).as("n_docs"), sum(col("sum_dl")).as("sum_dl"))
-    val hits = StateMaintenance.readOr(spark, s"$stateDir/postings", postingsSchema)
+    val hits = postings.read(spark, stateDir)
       .filter(col("tb").isin(tbs: _*) &&
         col("term").isin(SearchOps.QueryTerms: _*))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
-    SearchOps.scoreFromHits(hits, stats0)
+    SearchOps.scoreFromHits(hits, stats.merged(spark, stateDir))
+  }
+
+  /** Fold a committed prefix of batches: postings keep their
+    * term-bucket partitioning, stats re-add. */
+  def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
+    postings.compact(spark, stateDir, upTo)
+    stats.compact(spark, stateDir, upTo)
   }
 
   /** x64's fusion served ENTIRELY from incrementally-maintained state:

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.SketchOps
 
 /** The count-min sketch (x29) as an INCREMENTAL stream — frequency
@@ -22,25 +22,23 @@ import graft.operators.SketchOps
   * sliding-window sketch for free. */
 object SketchStream {
 
-  /** Counter-state layout: (r, pos, cnt) partitioned by batch_id. */
-  private val stateSchema: org.apache.spark.sql.types.StructType = {
+  /** Counter-state layout: (r, pos, cnt) partitioned by batch_id;
+    * partials re-ADD. */
+  private val counters = new StateMaintenance.PartialTable("", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("r", IntegerType),
       StructField("pos", LongType),
-      StructField("cnt", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("cnt", LongType)))
+  }, merge = _.groupBy(col("r"), col("pos")).agg(sum(col("cnt")).as("cnt")))
 
   /** One micro-batch: build the batch's partial counters and overwrite
     * its batch_id partition of the state table. */
   def processSketchBatch(batch: DataFrame, stateDir: String,
                          batchId: Long): Unit =
-    SketchOps.cmsCounters(
-        batch.filter(col("user_id").isNotNull).select(col("user_id")))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(stateDir)
+    counters.append(SketchOps.cmsCounters(
+        batch.filter(col("user_id").isNotNull).select(col("user_id"))),
+      stateDir, batchId)
 
   /** Start the counter stream over a parquet file-drop of events.
     * `AvailableNow` drains the backlog and stops (the backfill shape);
@@ -48,36 +46,24 @@ object SketchStream {
     * trigger. */
   def startHeavyHitterStream(spark: SparkSession, inputDir: String,
                              stateDir: String, checkpointDir: String,
-                             maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processSketchBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                             maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    StateMaintenance.startFileDropStream(spark, inputDir, checkpointDir,
+      maxFilesPerTrigger) { (batch, batchId) =>
+      processSketchBatch(batch, stateDir, batchId)
+    }
 
   /** The merged sketch over every retained batch partition — the d×w
     * relation `SketchOps.cmsEstimates` probes. Pinned schema: an empty
     * or file-less state dir reads as an empty (all-zero) sketch, and a
     * state dir that was NEVER created (no batch committed yet) returns
     * the same empty frame instead of a path error. */
-  def mergedCounters(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(p)) spark.read.schema(stateSchema).parquet(stateDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], stateSchema)
-    base.groupBy(col("r"), col("pos")).agg(sum(col("cnt")).as("cnt"))
-  }
+  def mergedCounters(spark: SparkSession, stateDir: String): DataFrame =
+    counters.merged(spark, stateDir)
+
+  /** Fold a committed prefix of counter partials (re-add). */
+  def compactCounters(spark: SparkSession, stateDir: String,
+                      upTo: Long): Unit =
+    counters.compact(spark, stateDir, upTo)
 
   // ---- streaming HLL overlap (x34's sketch, incremental) -----------------
 
@@ -89,24 +75,21 @@ object SketchStream {
     * old batch partitions leaves exactly the sketch of the retained
     * window (the union over the remaining partials IS that window's
     * sketch, not an approximation of a subtraction). */
-  private val overlapSchema: org.apache.spark.sql.types.StructType = {
+  private val overlap = new StateMaintenance.PartialTable("", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("half", StringType),
-      StructField("sk", BinaryType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("sk", BinaryType)))
+  }, merge = _.groupBy(col("half")).agg(hll_union_agg(col("sk")).as("sk")))
 
   /** One micro-batch of documents: per-half HLL partials, overwritten
     * into the batch's own batch_id partition (same replay rule as the
     * CMS partials). */
   def processOverlapBatch(batch: DataFrame, stateDir: String,
                           batchId: Long): Unit =
-    SketchOps.halfShinglesOf(batch)
-      .groupBy(col("half")).agg(hll_sketch_agg(col("sh")).as("sk"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(stateDir)
+    overlap.append(SketchOps.halfShinglesOf(batch)
+      .groupBy(col("half")).agg(hll_sketch_agg(col("sh")).as("sk")),
+      stateDir, batchId)
 
   /** Incremental corpus-overlap monitoring over a documents file-drop:
     * the streaming form of x34b. Each micro-batch contributes KB-sized
@@ -115,34 +98,18 @@ object SketchStream {
     * history. */
   def startOverlapStream(spark: SparkSession, inputDir: String,
                          stateDir: String, checkpointDir: String,
-                         maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processOverlapBatch(batch, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                         maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    StateMaintenance.startFileDropStream(spark, inputDir, checkpointDir,
+      maxFilesPerTrigger) { (batch, batchId) =>
+      processOverlapBatch(batch, stateDir, batchId)
+    }
 
   /** (est_a, est_b, est_union, est_overlap) from the retained batch
     * partials: union across batches per half, union across halves for
     * the total — the same inclusion-exclusion x34 validates in batch.
     * Empty/absent state reads as zero estimates. */
-  def mergedOverlap(spark: SparkSession, stateDir: String): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val base =
-      if (fs.exists(p)) spark.read.schema(overlapSchema).parquet(stateDir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], overlapSchema)
-    base.groupBy(col("half")).agg(hll_union_agg(col("sk")).as("sk"))
+  def mergedOverlap(spark: SparkSession, stateDir: String): DataFrame =
+    overlap.merged(spark, stateDir)
       .agg(
         coalesce(max(when(col("half") === "a",
           hll_sketch_estimate(col("sk")))), lit(0L)).as("est_a"),
@@ -152,5 +119,10 @@ object SketchStream {
           .as("est_union"))
       .withColumn("est_overlap",
         col("est_a") + col("est_b") - col("est_union"))
-  }
+
+  /** Fold a committed prefix of HLL partials (register max —
+    * idempotent, so compaction composes with replay trivially). */
+  def compactOverlap(spark: SparkSession, stateDir: String,
+                     upTo: Long): Unit =
+    overlap.compact(spark, stateDir, upTo)
 }

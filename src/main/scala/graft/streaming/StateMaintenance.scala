@@ -2,17 +2,26 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-/** Maintenance for the batch_id-partitioned partial-state tables
-  * (CMS counters, HLL overlap sketches, report-card partials): after a
-  * long retention window the state accumulates one partition per
-  * micro-batch, and while the MERGED view stays correct at any
-  * partition count, thousands of tiny directories are an operational
-  * cost (listing, open-per-file) every merge pays. Compaction folds
-  * all partials with batch_id ≤ upTo into ONE partial stored at
-  * batch_id = upTo; the merged view is unchanged because every state's
-  * merge is associative (sums re-sum, HLL unions re-union, extrema
-  * re-extreme) — the compacted partial is just a pre-merged prefix.
+/** The partial-state policy of the 13 incremental serving structures,
+  * in one place. Each structure keeps one or more [[PartialTable]]s:
+  * every micro-batch lands its partial rows in its own batch_id
+  * partition by dynamic overwrite, so an at-least-once foreachBatch
+  * replay rewrites the batch's own partition instead of
+  * double-counting it, and retention is dropping a batch_id partition.
+  * A table's associative `merge` (sums re-sum, HLL unions re-union,
+  * extrema re-extreme, disjoint rows pass through) both serves the
+  * retained window and compacts it, so the two cannot drift apart.
+  *
+  * Compaction: after a long retention window the state accumulates one
+  * partition per micro-batch, and while the MERGED view stays correct
+  * at any partition count, thousands of tiny directories are an
+  * operational cost (listing, open-per-file) every merge pays.
+  * Compaction folds all partials with batch_id ≤ upTo into ONE partial
+  * stored at batch_id = upTo; the merged view is unchanged because the
+  * merge is associative — the compacted partial is just a pre-merged
+  * prefix.
   *
   * SAFETY CONTRACT (documented, spec-pinned):
   *  - Call with upTo ≤ the stream's last COMMITTED batch id. foreachBatch
@@ -34,24 +43,71 @@ object StateMaintenance {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read a state artifact with its declared schema, or an empty frame
-    * when the directory does not exist yet — the one definition every
-    * partial-state consumer (postings, ANN, dedup) shares, so
-    * first-serve-before-first-batch behaves identically everywhere. */
-  def readOr(spark: SparkSession, dir: String,
-             schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    if (fs(spark, dir).exists(p)) spark.read.schema(schema).parquet(dir)
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+  /** One batch_id-partitioned partial-state table: `sub` is its
+    * directory under the state dir ("" = the state dir itself), `data`
+    * the schema of the rows a batch lands (the `extras` partition
+    * columns included), and `merge` the associative re-aggregation of
+    * batch_id-stripped partial rows into one partial row-set. */
+  final class PartialTable(sub: String, data: StructType,
+                           extras: Seq[String] = Seq.empty,
+                           merge: DataFrame => DataFrame = identity) {
+    // data columns, then batch_id, then the extra partition columns —
+    // the order partition discovery gives
+    private val schema = StructType(
+      data.filterNot(f => extras.contains(f.name)) ++
+        (StructField("batch_id", LongType) +: extras.map(data(_))))
+
+    private def path(stateDir: String) =
+      if (sub.isEmpty) stateDir else s"$stateDir/$sub"
+
+    /** Land one micro-batch's partial in its own batch_id partition. */
+    def append(part: DataFrame, stateDir: String, batchId: Long): Unit =
+      overwrite(part.withColumn("batch_id", lit(batchId)), stateDir)
+
+    /** Land rows that already carry their batch_id: every partition
+      * they touch commits in ONE job. */
+    def overwrite(rows: DataFrame, stateDir: String): Unit =
+      overwritePartitions(rows, path(stateDir), extras)
+
+    /** Every retained partial row with its batch_id, or an empty frame
+      * when no batch has landed yet — first-serve-before-first-batch
+      * behaves identically for every structure. */
+    def read(spark: SparkSession, stateDir: String): DataFrame = {
+      val dir = path(stateDir)
+      if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir)))
+        spark.read.schema(schema).parquet(dir)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    }
+
+    /** The retained window: `merge` over every retained partial. */
+    def merged(spark: SparkSession, stateDir: String): DataFrame =
+      merge(read(spark, stateDir).drop("batch_id"))
+
+    /** Fold the partials with batch_id ≤ upTo into one, by `merge`. */
+    def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
+      compactBatches(spark, path(stateDir), upTo, merge, extras)
+
+    /** Excise doc_ids from every partition that holds one. */
+    def remove(spark: SparkSession, stateDir: String,
+               removedIds: Seq[Long]): Unit =
+      removeDocs(spark, path(stateDir), removedIds, extras)
   }
+
+  /** The replay-safe write: dynamic overwrite replaces exactly the
+    * (batch_id +: extras) partitions `rows` carries and no other. */
+  private def overwritePartitions(rows: DataFrame, dir: String,
+                                  extras: Seq[String]): Unit =
+    rows.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id" +: extras: _*)
+      .parquet(dir)
 
   /** The shared file-drop maintenance-stream skeleton: schema-sniffed
     * parquet readStream → foreachBatch(processor) → AvailableNow
     * (drain-and-stop; a 24/7 deployment swaps in a processing-time
     * trigger). One definition so the trigger/checkpoint discipline of
-    * every incremental index (postings, ANN, dedup) changes in one
-    * place. */
+    * every incremental structure changes in one place. */
   def startFileDropStream(spark: SparkSession, inputDir: String,
                           checkpointDir: String,
                           maxFilesPerTrigger: Option[Int])(
@@ -112,9 +168,9 @@ object StateMaintenance {
     * algebra the state's merged view applies); `extraPartitions` keeps
     * any further partition columns (e.g. the postings' term bucket).
     * No-op when ≤ 1 partition is in range. */
-  def compactBatches(spark: SparkSession, stateDir: String, upTo: Long,
-                     merge: DataFrame => DataFrame,
-                     extraPartitions: Seq[String] = Seq.empty): Unit = {
+  private def compactBatches(spark: SparkSession, stateDir: String,
+                             upTo: Long, merge: DataFrame => DataFrame,
+                             extraPartitions: Seq[String]): Unit = {
     recover(spark, stateDir)
     val inRange = batchPartitions(spark, stateDir).filter(_._1 <= upTo)
     if (inRange.size > 1) {
@@ -127,10 +183,7 @@ object StateMaintenance {
           .filter(col("batch_id") <= upTo).drop("batch_id"))
         .withColumn("batch_id", lit(upTo))
         .localCheckpoint(true)
-      merged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id" +: extraPartitions: _*)
-        .parquet(stateDir)
+      overwritePartitions(merged, stateDir, extraPartitions)
       // marker AFTER the merged write: from here the fold is complete
       // at upTo and recovery only needs to finish the deletes
       val out = f.create(marker(stateDir), true)
@@ -207,54 +260,10 @@ object StateMaintenance {
     val survivors = state.filter(col("batch_id").isin(affected: _*))
       .filter(!col("doc_id").isin(removedIds: _*))
       .localCheckpoint(true)
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id" +: extraPartitions: _*)
-      .parquet(stateDir)
+    overwritePartitions(survivors, stateDir, extraPartitions)
     val still = survivors.select(col("batch_id").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
     affected.filterNot(still).foreach(b =>
       f.delete(new org.apache.hadoop.fs.Path(stateDir, s"batch_id=$b"), true))
-  }
-
-  /** CMS counter state: partials re-ADD (SketchStream.mergedCounters'
-    * algebra). */
-  def compactCounters(spark: SparkSession, stateDir: String,
-                      upTo: Long): Unit =
-    compactBatches(spark, stateDir, upTo,
-      _.groupBy(col("r"), col("pos")).agg(sum(col("cnt")).as("cnt")))
-
-  /** HLL overlap state: partials re-UNION per half (register max —
-    * idempotent, so compaction composes with replay trivially). */
-  def compactOverlap(spark: SparkSession, stateDir: String,
-                     upTo: Long): Unit =
-    compactBatches(spark, stateDir, upTo,
-      _.groupBy(col("half")).agg(hll_union_agg(col("sk")).as("sk")))
-
-  /** Report-card state: the same per-source merge mergedReport applies
-    * (sums add, extrema min/max). */
-  def compactReport(spark: SparkSession, stateDir: String,
-                    upTo: Long): Unit =
-    compactBatches(spark, stateDir, upTo,
-      _.groupBy(col("source"))
-        .agg(sum(col("n_docs")).as("n_docs"),
-          sum(col("tokens")).as("tokens"),
-          min(col("min_tokens")).as("min_tokens"),
-          max(col("max_tokens")).as("max_tokens"),
-          sum(col("n_en")).as("n_en"),
-          sum(col("n_und")).as("n_und"),
-          sum(col("total_q4")).as("total_q4")))
-
-  /** BM25 postings state: documents are disjoint across batches, so
-    * postings rows pass through unchanged (the fold only rewrites many
-    * small partitions into one, keeping the term-bucket partitioning);
-    * the stats table re-adds. */
-  def compactPostings(spark: SparkSession, stateDir: String,
-                      upTo: Long): Unit = {
-    compactBatches(spark, s"$stateDir/postings", upTo,
-      identity, extraPartitions = Seq("tb"))
-    compactBatches(spark, s"$stateDir/stats", upTo,
-      _.agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("sum_dl")).as("sum_dl")))
   }
 }

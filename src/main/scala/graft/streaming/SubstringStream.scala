@@ -31,23 +31,23 @@ import graft.operators.DedupOps
   * merge. */
 object SubstringStream {
 
-  private val gramsSchema: org.apache.spark.sql.types.StructType = {
+  /** Gram rows are disjoint across batches (identity merge). */
+  private val grams = new StateMaintenance.PartialTable("grams", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("doc_id", LongType),
       StructField("n_tokens", LongType),
       StructField("pos", IntegerType),
-      StructField("g", BinaryType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("g", BinaryType)))
+  })
 
-  private val dfSchema: org.apache.spark.sql.types.StructType = {
+  /** Distinct-doc partials RE-SUM per gram. */
+  private val df = new StateMaintenance.PartialTable("df", {
     import org.apache.spark.sql.types._
     StructType(Seq(
       StructField("g", BinaryType),
-      StructField("nd", LongType),
-      StructField("batch_id", LongType)))
-  }
+      StructField("nd", LongType)))
+  }, merge = _.groupBy(col("g")).agg(sum(col("nd")).as("nd")))
 
   /** Persisted key format of this state dir. v2 = 16-byte binary
     * XXH64 window keys (the r17 fused fingerprint); the unmarked v1
@@ -65,35 +65,49 @@ object SubstringStream {
 
   /** Verify (and on first write, stamp) the state dir's format marker.
     * Refuses when the marker disagrees, or when state exists with NO
-    * marker — that is a pre-marker (v1 hex-key) dir, which must be
-    * rebuilt, not mixed into. */
+    * marker — an unmarked dir's key format is unknown (v1 hex keys and
+    * early v2 binary keys were both written unmarked), so it must be
+    * rebuilt, not mixed into. A blank marker reads as a missing one. */
   private def checkFormat(spark: SparkSession, stateDir: String,
                           stampIfNew: Boolean): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val marker = formatPath(stateDir)
     val fs = marker.getFileSystem(conf)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val found =
+    val found =
+      if (!fs.exists(marker)) ""
+      else {
+        val in = fs.open(marker)
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
+      }
+    if (found.nonEmpty)
       require(found == FormatVersion,
         s"substring state dir $stateDir has key format '$found' but this " +
           s"engine writes '$FormatVersion' — wipe the state dir and rebuild " +
           "from the retained documents (keys of different formats never " +
           "match, so mixing them silently undercounts duplication)")
-    } else {
+    else {
       val hasState =
         fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/grams")) ||
           fs.exists(new org.apache.hadoop.fs.Path(s"$stateDir/df"))
       require(!hasState,
         s"substring state dir $stateDir has batches but no _format marker " +
-          "— it predates the XXH64 binary key format and must be wiped and " +
-          "rebuilt from the retained documents before serving or appending")
+          "— its key format is unknown, so it must be wiped and rebuilt " +
+          "from the retained documents before serving or appending")
       if (stampIfNew) {
-        fs.mkdirs(new org.apache.hadoop.fs.Path(stateDir))
-        val out = fs.create(marker, true)
+        // write aside, then rename into place: a concurrent reader sees
+        // no marker or the whole one, never a half-written file
+        val tmp = new org.apache.hadoop.fs.Path(
+          s"$stateDir/._format.${java.util.UUID.randomUUID}")
+        val out = fs.create(tmp, false)
         try out.write(FormatVersion.getBytes("UTF-8")) finally out.close()
+        // a blank marker may sit there; rename does not replace a file
+        // on every Hadoop filesystem
+        fs.delete(marker, false)
+        if (!fs.rename(tmp, marker)) {
+          fs.delete(tmp, false)
+          require(fs.exists(marker), s"could not stamp $marker")
+        }
       }
     }
   }
@@ -104,17 +118,12 @@ object SubstringStream {
   def processDocBatch(batch: DataFrame, stateDir: String,
                       batchId: Long): Unit = {
     checkFormat(batch.sparkSession, stateDir, stampIfNew = true)
-    val grams = DedupOps.substringGramsOfWords(
+    val bGrams = DedupOps.substringGramsOfWords(
         DedupOps.substringWordsOf(batch))
       .localCheckpoint(false)
-    grams.withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/grams")
-    grams.groupBy(col("g"))
-      .agg(count_distinct(col("doc_id")).as("nd"))
-      .withColumn("batch_id", lit(batchId))
-      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id").parquet(s"$stateDir/df")
+    grams.append(bGrams, stateDir, batchId)
+    df.append(bGrams.groupBy(col("g"))
+      .agg(count_distinct(col("doc_id")).as("nd")), stateDir, batchId)
   }
 
   /** Start the maintenance stream over a parquet file-drop of
@@ -135,13 +144,10 @@ object SubstringStream {
     * merge is the one-shot pipeline's own gaps-and-islands. */
   def servedSpans(spark: SparkSession, stateDir: String): DataFrame = {
     checkFormat(spark, stateDir, stampIfNew = false)
-    val grams = StateMaintenance.readOr(spark, s"$stateDir/grams", gramsSchema)
-      .select(col("doc_id"), col("n_tokens"), col("pos"), col("g"))
-    val dup = StateMaintenance.readOr(spark, s"$stateDir/df", dfSchema)
-      .groupBy(col("g")).agg(sum(col("nd")).as("nd"))
+    val dup = df.merged(spark, stateDir)
       .filter(col("nd") >= 2).select(col("g"))
-    DedupOps.substringSpansFromHits(
-      grams.join(dup, "g").select("doc_id", "n_tokens", "pos"))
+    DedupOps.substringSpansFromHits(grams.merged(spark, stateDir)
+      .join(dup, "g").select("doc_id", "n_tokens", "pos"))
   }
 
   /** Fold a committed prefix: grams rows are disjoint across batches
@@ -149,9 +155,7 @@ object SubstringStream {
     * merge the serving path already applies. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
     checkFormat(spark, stateDir, stampIfNew = false)
-    StateMaintenance.compactBatches(spark, s"$stateDir/grams", upTo,
-      identity)
-    StateMaintenance.compactBatches(spark, s"$stateDir/df", upTo,
-      df => df.groupBy(col("g")).agg(sum(col("nd")).as("nd")))
+    grams.compact(spark, stateDir, upTo)
+    df.compact(spark, stateDir, upTo)
   }
 }

@@ -31,7 +31,7 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
     ReportStream.processReportBatch(b1, state, 1L)
     ReportStream.processReportBatch(b2, state, 2L)
     val before = ReportStream.mergedReport(spark, state).collect().toSeq
-    StateMaintenance.compactReport(spark, state, 1L)
+    ReportStream.compact(spark, state, 1L)
     assert(batchDirs(state) === Set(1L, 2L), "prefix must fold into one dir")
     assert(ReportStream.mergedReport(spark, state).collect().toSeq === before)
     // retention of a post-compaction batch still leaves the exact card
@@ -57,11 +57,11 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
       .cmsEstimates(SketchStream.mergedCounters(spark, state), probes)
       .orderBy($"user_id").as[(Long, Long)].collect().toSeq
     val before = est()
-    StateMaintenance.compactCounters(spark, state, 1L)
+    SketchStream.compactCounters(spark, state, 1L)
     assert(batchDirs(state) === Set(1L, 2L))
     assert(est() === before)
     // compacting an already-compacted prefix is a no-op
-    StateMaintenance.compactCounters(spark, state, 1L)
+    SketchStream.compactCounters(spark, state, 1L)
     assert(batchDirs(state) === Set(1L, 2L))
     assert(est() === before)
   }
@@ -76,7 +76,7 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
     SketchStream.processOverlapBatch(b2, state, 2L)
     val before = SketchStream.mergedOverlap(spark, state)
       .as[(Long, Long, Long, Long)].collect().head
-    StateMaintenance.compactOverlap(spark, state, 1L)
+    SketchStream.compactOverlap(spark, state, 1L)
     assert(batchDirs(state) === Set(1L, 2L))
     assert(SketchStream.mergedOverlap(spark, state)
       .as[(Long, Long, Long, Long)].collect().head === before)
@@ -92,7 +92,7 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
     SearchStream.processPostingsBatch(b2, state, 2L)
     val before = SearchStream.servedBm25(spark, state)
       .as[(Long, Double, Long)].collect().toSeq
-    StateMaintenance.compactPostings(spark, state, 1L)
+    SearchStream.compact(spark, state, 1L)
     assert(batchDirs(s"$state/postings") === Set(1L, 2L))
     assert(batchDirs(s"$state/stats") === Set(1L, 2L))
     assert(SearchStream.servedBm25(spark, state)
@@ -118,7 +118,7 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
     try out.write("1".getBytes("UTF-8")) finally out.close()
     // a live batch lands afterwards, then ANY compaction call recovers
     ReportStream.processReportBatch(b2, state, 2L)
-    StateMaintenance.compactReport(spark, state, 2L)
+    ReportStream.compact(spark, state, 2L)
     assert(batchDirs(state) === Set(2L))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(state, "_graft_compacting")))
     assert(ReportStream.mergedReport(spark, state).collect().toSeq

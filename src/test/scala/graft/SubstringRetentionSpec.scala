@@ -101,6 +101,17 @@ class SubstringRetentionSpec extends AnyFunSuite with SparkTestSession {
     assert(e.getMessage.contains("substring-grams-v3-imaginary"))
     // an EMPTY dir serves empty (no marker demanded before first batch)
     assert(served(s"$root/never-written").isEmpty)
+    // a blank marker (an interrupted stamp) over no state reads as
+    // missing: the first batch is accepted and stamps the marker
+    val blank = s"$root/blank"
+    fs.create(new org.apache.hadoop.fs.Path(s"$blank/_format"), true).close()
+    SubstringStream.processDocBatch(docs.limit(5), blank, 0L)
+    def marker(dir: String): String = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(s"$dir/_format"))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    assert(marker(blank).nonEmpty && marker(blank) === marker(state))
+    assert(served(blank) === oneShot(docs.limit(5)))
   }
 
   test("streaming substrings: the file-drop stream lands every batch partition") {
