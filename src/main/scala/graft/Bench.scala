@@ -21,70 +21,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle width ≠ compute width: narrow CPU-bound stages get their
-    // parallelism from Tables.rebalance (defaultParallelism = all
-    // cores), while post-shuffle reduce stages at bench scale carry
-    // orders of magnitude less data than their inputs — AQE was
-    // already coalescing them to 1–4 partitions BY SIZE, but the map
-    // side still wrote (and the scheduler still launched) `cpus`
-    // buckets per exchange first. Right-sizing the initial width to 8
-    // measured 26.3 → 19.6 s on the full 67-query suite (same host,
-    // back-to-back; the dedup family −0.3..−1.0 s each, worst
-    // regression +0.1 s). Cluster deploys size this to their own data,
-    // as SCALE.md documents.
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // Post-shuffle partitions coalesce by the data's actual size
-      // instead of stopping at the core count: the aggregate/join
-      // stages downstream of a big scan are usually orders of magnitude
-      // smaller than their input, and scheduling 32 near-empty tasks
-      // per stage is pure overhead. CPU-heavy narrow stages are
-      // unaffected — `Tables.rebalance` uses an explicit partition
-      // count, which AQE never coalesces.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      // ObjectHashAggregateExec (TypedImperativeAggregate hosts: the
-      // graft_topk heap, percentile, collect_*) falls back to
-      // SORT-BASED aggregation after this many distinct keys per
-      // partition — default 128, which silently re-introduces a full
-      // per-partition sort for any grouped sketch/top-K over more than
-      // a few groups. Heap state is ~(k+1)·16 bytes per group, so a
-      // million in-memory groups cost tens of MB; deployments size
-      // this to executor heap like any other aggregate buffer knob.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "1000000"))
-      // Optimizer-LATENCY knob for the serving-shaped workload this
-      // bench measures: constraint propagation re-derives inferred
-      // predicates (IsNotNull from joins/filters, transitive
-      // equalities) on EVERY plan construction, quadratic-ish in
-      // predicate count — measured 9% of the whole 115-query suite
-      // (44.5 vs 49.0 s, same host back-to-back) with ZERO plan-IO
-      // change: every pinned plan's filters are explicit, so the
-      // inferred extras never reach a scan here. Semantics are
-      // unaffected either way (the rule only ADDS implied
-      // predicates). A long-scan deployment (hours of execution per
-      // plan) should leave it on — this is a repeated-sub-second-
-      // query latency trade, like shuffle.partitions=8 above.
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROP", "false"))
-      .config("spark.ui.enabled", "false")
-    // Extra session confs for A/B experiments:
-    // SPARK_GRAFT_CONF="spark.x=1;spark.y=2".
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ => // tolerate trailing ';' / empty segments
-      }
-    })
-    val spark = builder.getOrCreate()
+    val spark = GraftSession().getOrCreate()
     // ERROR, not WARN: the JSON line must be the only stdout content a
     // driver without prefix-stripping has to parse, and repeated
     // function-registry WARNs were the round-1 noise.

@@ -1,8 +1,8 @@
 package graft
 
-/** Minimal JSON rendering shared by the dev mains (Bench, DevProf,
-  * RowCount): the sweep protocol parses their output lines as JSON,
-  * so every interpolated string is escaped and every observed metric
+/** Minimal JSON rendering shared by the dev mains (Bench, and DevProf
+  * in both modes): the sweep protocol parses their output lines as
+  * JSON, so every interpolated string is escaped and every observed metric
   * value is rendered JSON-safe (non-finite doubles → null, strings
   * quoted) — an unparseable artifact line is a silent hole in the
   * adjudication record. */

@@ -232,13 +232,7 @@ object TrainingDataDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val out = if (args.length > 1) args(1)

@@ -535,8 +535,14 @@ private[graft] object ArtifactBuild {
               }
             }
           } finally {
-            heartbeat.stop()
-            releaseCrossJvmLock(fs, lock, token)
+            // a cancelled build (its thread interrupted) still joins
+            // the heartbeat and releases the lock; the interrupt is
+            // restored afterwards
+            val interrupted = Thread.interrupted()
+            try {
+              heartbeat.stop()
+              releaseCrossJvmLock(fs, lock, token)
+            } finally if (interrupted) Thread.currentThread().interrupt()
           }
         }
       }

@@ -223,7 +223,6 @@ object CoreQueries {
     * (same left-to-right accumulation order as the HOF form, so values
     * are bitwise identical — asserted in GraftExpressionsSpec). */
   def cosine(s: SparkSession, a: Column, b: Column): Column = {
-    graft.plans.GraftExpressions.register(s)
     call_function(graft.plans.GraftExpressions.CosineFn, a, b)
   }
 
@@ -542,7 +541,6 @@ object CoreQueries {
     * top-K. Shares Q12's oracle SQL. */
   def groupedTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     Tables.customer(s, d)
       .groupBy($"c_nationkey")
       .agg(call_function(graft.plans.GraftExpressions.TopKFn,

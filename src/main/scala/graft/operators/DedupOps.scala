@@ -63,7 +63,6 @@ object DedupOps {
     * and the DuckDB oracles recompute from strings). */
   private def shingleFrames(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     words(s, d)
       .filter(size($"w") >= 3)
       .select($"doc_id", $"w",
@@ -87,7 +86,6 @@ object DedupOps {
     * pass (x71's source tag) — one shared tokenize/guard/shingle
     * definition, so tagged consumers cannot drift from it. */
   def shingleSetsTagged(docs: DataFrame, keep: Seq[String]): DataFrame = {
-    graft.plans.GraftExpressions.register(docs.sparkSession)
     wordsOf(docs, keep)
       .filter(size(col("w")) >= 3)
       .select((col("doc_id") +: keep.map(col)) :+
@@ -120,7 +118,6 @@ object DedupOps {
     * expression computes all 128 permutation-mins in one pass — a
     * fully NARROW map stage: zero shuffles until banding. */
   def minhashSignatures(sets: DataFrame): DataFrame = {
-    graft.plans.GraftExpressions.register(sets.sparkSession)
     sets.select(col("doc_id"),
       call_function(graft.plans.GraftExpressions.MinHashFn,
         transform(col("s"), x => pmod(x, lit(4294967296L))))
@@ -361,7 +358,6 @@ object DedupOps {
     * a signed long; the 4 always-zero top bits vote uniformly −1 and
     * never differ between docs, so banding and hamming are unaffected. */
   def simhashSig(docWords: DataFrame): DataFrame = {
-    graft.plans.GraftExpressions.register(docWords.sparkSession)
     docWords.select(col("doc_id"),
       call_function(graft.plans.GraftExpressions.SimHashFn,
         transform(col("w"),
@@ -893,7 +889,6 @@ object DedupOps {
     // lazily checkpointed: the window explode feeds both the dup-key
     // aggregate and the count-back join — materialize the (long, long)
     // rows once instead of tokenizing + hashing the corpus twice
-    graft.plans.GraftExpressions.register(s)
     val wins = words(s, d).filter(size($"w") >= BlockWords)
       .select($"doc_id", explode(call_function(
         graft.plans.GraftExpressions.BlockHashesFn,
@@ -1544,7 +1539,6 @@ object DedupOps {
     * (16-byte binary vs 32-char hex string). */
   def substringGramsOfWords(w: DataFrame,
                             k: Int = SubstringGramK): DataFrame = {
-    graft.plans.GraftExpressions.register(w.sparkSession)
     w.select(col("doc_id"), size(col("w")).cast("long").as("n_tokens"),
         posexplode(call_function(
           graft.plans.GraftExpressions.BlockHashesFn, col("w"), lit(k))))

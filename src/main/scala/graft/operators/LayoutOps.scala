@@ -27,7 +27,6 @@ object LayoutOps {
 
   /** Z-order curve key of two non-negative integer columns. */
   def zOrderKey(s: SparkSession, x: Column, y: Column): Column = {
-    graft.plans.GraftExpressions.register(s)
     call_function(graft.plans.GraftExpressions.ZOrderFn,
       x.cast("long"), y.cast("long"))
   }

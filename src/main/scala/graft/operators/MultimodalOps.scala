@@ -308,7 +308,6 @@ object MultimodalOps {
     * bit-for-bit (integer dot + norms, one division). */
   def mediaKnn(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     val feats = featurize(mediaTable(s, d))
     val probe = feats.filter($"doc_id" === 0).select($"feat".as("qf"))
     feats.filter($"doc_id" =!= 0)

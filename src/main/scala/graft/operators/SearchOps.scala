@@ -320,7 +320,6 @@ object SearchOps {
     // positions via the fused codegen scan (graft_phrase_positions) —
     // the equivalent filter(sequence(…), …) HOF pipeline evaluates its
     // lambda interpreted per element and measured ~15× slower at sf0.1
-    graft.plans.GraftExpressions.register(s)
     docsFrame
       .select($"doc_id", toksCol.as("toks"))
       .select($"doc_id", call_function(

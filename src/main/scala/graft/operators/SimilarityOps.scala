@@ -51,7 +51,6 @@ object SimilarityOps {
     * exact arithmetic, so the DuckDB oracle reproduces every bucket
     * bit-for-bit (and task retries can never flip a borderline sign). */
   def lshSignature(s: SparkSession, v: Column): Column = {
-    graft.plans.GraftExpressions.register(s)
     call_function(graft.plans.GraftExpressions.HyperplaneFn, quantize(v))
   }
 
@@ -288,7 +287,6 @@ object SimilarityOps {
   private val QuantL: Long = graft.plans.HyperplaneSignature.Quant.toLong
 
   private def longDot(s: SparkSession, a: Column, b: Column): Column = {
-    graft.plans.GraftExpressions.register(s)
     call_function(graft.plans.GraftExpressions.LongDotFn, a, b)
   }
 
@@ -830,7 +828,6 @@ object SimilarityOps {
   def projectFrame(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     df.select($"vec_id",
       call_function(graft.plans.GraftExpressions.SignedProjFn, $"e").as("y"))
   }
@@ -1142,7 +1139,6 @@ object SimilarityOps {
     * the only thing checkpointed for reuse by both branches. */
   def bitextFrame(s: SparkSession, emb0: DataFrame): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     val emb = emb0.withColumn("bucket", lshSignature(s, $"e"))
     // The probe side carries the compute-bound stage (37-mask explode +
     // per-candidate cosine + partial top-K): its parallelism is the
@@ -1327,35 +1323,47 @@ object SimilarityOps {
   private[graft] val probeStageInvocations =
     new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Run `body` on a named helper thread NOW; the returned thunk joins
-    * and rethrows its failure (wrapped cause intact). Spark's local
-    * properties (job group/description) are InheritableThreadLocals,
-    * so jobs the body submits stay correctly labeled. Used to overlap
-    * independent job chains per guide §2.6 — Spark's scheduler runs
-    * concurrent jobs fine; actions are only sequential because driver
-    * code calls them sequentially. */
-  private def overlap[A](s: SparkSession, label: String)
-                        (body: => A): () => A = {
-    val out = new java.util.concurrent.atomic.AtomicReference[Either[Throwable, A]]()
+  /** Run `helper` on a named helper thread while `primary` runs on
+    * this one, then join the helper and rethrow its failure. Used to
+    * overlap independent job chains per guide §2.6 — Spark's scheduler
+    * runs concurrent jobs fine; actions are only sequential because
+    * driver code calls them sequentially. Spark's local properties
+    * (job group/description) are InheritableThreadLocals, so jobs the
+    * helper submits stay correctly labeled; they also carry a job tag
+    * of their own. If `primary` fails, the helper's jobs are cancelled
+    * by that tag and its thread interrupted before the join, so the
+    * primary error surfaces without waiting out the helper's work and
+    * stays primary (the helper's failure is added as suppressed). */
+  private[graft] def overlapped[A](s: SparkSession, label: String)
+                                  (helper: => Any)(primary: => A): A = {
+    val sc = s.sparkContext
+    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
     val t = new Thread(() => {
-      out.set(try Right(body) catch { case e: Throwable => Left(e) })
+      sc.addJobTag(tag)
+      try helper catch { case e: Throwable => failed.set(e) }
     }, s"graft-overlap: $label")
     t.setDaemon(true)
     t.start()
-    () => {
-      t.join()
-      out.get() match {
-        case Right(a) => a
-        case Left(e) => throw e
-      }
+    def join(): Unit = { t.join(); Option(failed.get()).foreach(e => throw e) }
+    val a = try primary catch {
+      case p: Throwable =>
+        sc.cancelJobsWithTag(tag)
+        t.interrupt()
+        try join() catch { case e: Throwable => p.addSuppressed(e) }
+        // a job the helper submitted between the cancel and the
+        // interrupt is in the scheduler's queue by now
+        sc.cancelJobsWithTag(tag)
+        throw p
     }
+    join()
+    a
   }
 
   private[graft] def hardNegProbeStage(s: SparkSession, d: String,
       aids: DataFrame, pinAnchors: Boolean): (DataFrame, DataFrame) = {
     probeStageInvocations.incrementAndGet()
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     val root = ensureIvfIndex(s, d)
     val cents = ArtifactBuild.readCached(s, s"$root/centroids")
     val assigned = ivfAssign(s, root)
@@ -1379,7 +1387,12 @@ object SimilarityOps {
     // TopKAggregateSpec pins it — and the long→double score cast is
     // exact: |dot| ≤ Dim·(Quant·|coord|)² ≈ 2e13 « 2^53 on unit-scale
     // embedding coords. Only the probed-cid SET flows on, so the
-    // rank itself was never used.
+    // rank itself was never used. NProbe (4) is above
+    // TopKSmallPairs.MaxK (3), so this graft_topk is the heap
+    // aggregate, planned as an ObjectHashAggregate: it stays hash-based
+    // only under GraftSession's sortBased.fallbackThreshold of 1000000.
+    // At Spark's default of 128 it falls back to a sort-based
+    // aggregate once a partition holds more than 128 anchors.
     val probeCids = anchors.select($"qid", $"qq").crossJoin(broadcast(cents))
       .select($"qid", $"cid".cast("long").as("cid"),
         longDot(s, $"c", $"qq").cast("double").as("dot"))
@@ -1411,17 +1424,9 @@ object SimilarityOps {
     // the probe stage's own ensureIvfIndex call just finds the marker.
     // Pin soundness is untouched: the count still strictly precedes
     // every hinted PLAN — only the count and the index BUILD overlap.
-    val idxAhead = overlap(s, "x69x72 ensureIvfIndex (ahead of anchor count)") {
-      ensureIvfIndex(s, d)
-    }
-    val nAnchors = try aids.count() catch {
-      // the count failing must not leak a running builder thread — join
-      // it, keep the count's failure primary
-      case t: Throwable =>
-        try idxAhead() catch { case e: Throwable => t.addSuppressed(e) }
-        throw t
-    }
-    idxAhead()
+    val nAnchors =
+      overlapped(s, "x69x72 ensureIvfIndex (ahead of anchor count)")(
+        ensureIvfIndex(s, d))(aids.count())
     val anchorsSmall = hintsOn && nAnchors <= negAnchorCap(s)
     CountedHint.record("x69x72_anchors", nAnchors, negAnchorCap(s),
       anchorsSmall)
@@ -1442,7 +1447,6 @@ object SimilarityOps {
     // ≡ the window's (sim DESC, vec_id) — equivalence pinned in
     // TopKAggregateSpec; x72's k=3 rides the codegen declarative
     // route, x69's k=5 the bounded heap.
-    graft.plans.GraftExpressions.register(s)
     val negs = emb.join(hintedC(candidates), "vec_id")
       .join(hintedA(anchors.select($"qid", $"qe")), "qid")
       .select($"qid", $"vec_id",

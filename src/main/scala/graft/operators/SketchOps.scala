@@ -184,7 +184,6 @@ object SketchOps {
     * against the reference. */
   def bloomFilterNative(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     val ev = Tables.events(s, d)
     ev.filter($"event_type" === "purchase" && $"user_id".isNotNull)
       .select($"user_id").distinct()
@@ -295,7 +294,6 @@ object SketchOps {
     * distinct counts over hashes equal counts over strings absent
     * 64-bit collisions, the same contract every dedup oracle uses. */
   private[graft] def halfShinglesOf(docs: DataFrame): DataFrame = {
-    graft.plans.GraftExpressions.register(docs.sparkSession)
     docs
       .select(
         // Half = md5(source) parity — the repo's content-keyed idiom.
@@ -445,7 +443,6 @@ object SketchOps {
   private[graft] def quantilePass1(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     import graft.plans.GraftExpressions.HistFn
-    graft.plans.GraftExpressions.register(s)
     Tables.lineitem(s, d)
       .select($"l_returnflag".as("rf"), $"l_extendedprice".cast("double").as("v"))
       .groupBy($"rf")
@@ -459,7 +456,6 @@ object SketchOps {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import graft.plans.GraftExpressions.DBucketFn
-    graft.plans.GraftExpressions.register(s)
     val li = Tables.lineitem(s, d)
       .select($"l_returnflag".as("rf"), $"l_extendedprice".cast("double").as("v"))
 

@@ -20,13 +20,9 @@ import graft.Tables.SmallResult
 object TextOps {
 
   /** Documents scan rebalanced across cores: every query below runs a
-    * battery of per-row text scans — compute-bound, not IO-bound.
-    * Registers the custom set-count expressions the column helpers
-    * reference. */
-  private def docs(s: SparkSession, d: String): DataFrame = {
-    graft.plans.GraftExpressions.register(s)
+    * battery of per-row text scans — compute-bound, not IO-bound. */
+  private def docs(s: SparkSession, d: String): DataFrame =
     Tables.rebalance(Tables.documents(s, d))
-  }
 
   private val stopEn = "\\b(the|a|of|and|to|is|in|it)\\b"
   private val stopDe = "\\b(der|die|das|und|ein|ist|nicht)\\b"
@@ -48,8 +44,8 @@ object TextOps {
     * alternatives (see the expression's doc + property test), at a
     * fraction of the regex engine's per-row cost. The word list is
     * DERIVED from the regex constant the oracle SQL interpolates, so
-    * the two can never drift. (call_function resolves at analysis —
-    * the query entry points register the functions on their session.) */
+    * the two can never drift. (call_function resolves at analysis,
+    * against the functions `GraftExtensions` put in the session.) */
   private def nStopwords(c: Column, pattern: String): Column = {
     val csv = pattern.stripPrefix("\\b(").stripSuffix(")\\b")
       .replace("|", ",")
@@ -108,7 +104,6 @@ object TextOps {
     * beyond the aggregate's. */
   def mixedLanguage(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     docs(s, d)
       .select($"doc_id",
         filter(split(lower(trim($"text")), "\\s+"), _ =!= "").as("toks"))
@@ -170,7 +165,6 @@ object TextOps {
     * character. */
   def charEntropy(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     docs(s, d)
       .select($"doc_id", length($"text").cast("long").as("n_chars"),
         call_function(graft.plans.GraftExpressions.EntropyFn, $"text")
@@ -230,7 +224,6 @@ object TextOps {
     * QualityStream's spec comparator. */
   def qualityGateOf(docs0: DataFrame): DataFrame = {
     import docs0.sparkSession.implicits._
-    graft.plans.GraftExpressions.register(docs0.sparkSession)
     val scored = docs0.select($"doc_id", $"source",
       qMicroCol($"text").as("q_micro"))
     val th = scored.groupBy($"source")
@@ -246,7 +239,6 @@ object TextOps {
     * histogram is exact AND mergeable. */
   def qualityPartialsOf(docs0: DataFrame): DataFrame = {
     import docs0.sparkSession.implicits._
-    graft.plans.GraftExpressions.register(docs0.sparkSession)
     docs0.select($"source", qMicroCol($"text").as("q_micro"))
       .groupBy($"source", $"q_micro")
       .agg(count(lit(1)).as("cnt"))
@@ -593,7 +585,6 @@ object TextOps {
   def bigramsOfFrame(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     import s.implicits._
-    graft.plans.GraftExpressions.register(s)
     df.select($"doc_id", split(lower($"text"), "\\s+").as("w"))
       .filter(size($"w") >= 2)
       .select($"doc_id", explode(call_function(
@@ -1475,7 +1466,6 @@ object TextOps {
     * re-aggregation, including after retention drops batches. */
   private[graft] def reportPartialsOf(docsFrame: DataFrame): DataFrame = {
     import docsFrame.sparkSession.implicits._
-    graft.plans.GraftExpressions.register(docsFrame.sparkSession)
     docsFrame
       .select($"source",
         langIdCol($"text").as("lang"),

@@ -1,6 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -16,8 +17,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * formulation it replaces, so oracle hash-matches are unaffected.
   *
   * Exposed to DataFrames via the session FunctionRegistry
-  * (`GraftExpressions.register`) + `call_function`, the Spark-4 way to
-  * use a custom Expression without private Column constructors.
+  * (`GraftExtensions` at session build, or `register` on a session
+  * built without it) + `call_function`, the Spark-4 way to use a
+  * custom Expression without private Column constructors.
   */
 object GraftExpressions {
 
@@ -122,7 +124,7 @@ object GraftExpressions {
     * GraftExtensions injection), so an ad-hoc session and a
     * `spark.sql.extensions` deployment can never build different trees,
     * and every builder carries the same analysis-time arity guard. */
-  private[plans] val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+  private[graft] val builders: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     (CosineFn, "cosine similarity of two double arrays (fused codegen loop)",
       es => { arity(CosineFn, es, 2); CosineSimilarity(es(0), es(1)) }),
     // Spark ships BloomFilterAggregate/BloomFilterMightContain for its
@@ -190,11 +192,15 @@ object GraftExpressions {
         SortableHist(es.head).toAggregateExpression() }),
   )
 
-  /** Idempotent per-session registration. */
+  /** Registration for a session built without `GraftExtensions`
+    * (`Graft.init`). Idempotent: a name the session's registry already
+    * holds — injected by the extension, or registered before — is left
+    * as it is, so a call replaces nothing. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, b, "built-in")
     }
   }
 }

@@ -11,11 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=graft.plans.GraftExtensions
   * }}}
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`) and
-  * the functions exist in EVERY session from the start — no per-session
+  * (or `withExtensions(new GraftExtensions)`, which `graft.GraftSession`
+  * does for every session the program builds) and the functions exist
+  * in EVERY session from the start — no per-session
   * `GraftExpressions.register` call, and catalogs/views can reference
   * them immediately. The imperative register() path stays for ad-hoc
-  * sessions; both routes build the identical expression trees.
+  * sessions (`Graft.init`); both routes build the identical expression
+  * trees.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -27,7 +27,6 @@ object DocCuration {
     * columns to keep alongside the curation outputs (the bounded
     * variant threads its event-time column through). */
   def curated(docs: DataFrame, carryCols: Seq[String] = Nil): DataFrame = {
-    graft.plans.GraftExpressions.register(docs.sparkSession)
     docs.select(Seq(col("doc_id"), col("source")) ++ carryCols.map(col) ++ Seq(
         TextOps.fingerprintCol(col("text")).as("fp"),
         TextOps.langIdCol(col("text")).as("pred_lang"),
@@ -50,9 +49,7 @@ object DocCuration {
     * processes the current backlog and stops (W5 backfill shape). */
   def startCuration(spark: SparkSession, inputDir: String, outDir: String,
                     checkpointDir: String): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val docs = spark.readStream.schema(schema).parquet(inputDir)
-    curated(docs)
+    curated(StateMaintenance.fileDropReader(spark, inputDir, None))
       .dropDuplicates(Seq("fp"))
       .writeStream
       .format("parquet")
@@ -79,11 +76,8 @@ object DocCuration {
                            eventTimeCol: String = "event_time",
                            watermarkDelay: String = "300 seconds",
                            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    curated(reader.parquet(inputDir), carryCols = Seq(eventTimeCol))
+    curated(StateMaintenance.fileDropReader(spark, inputDir,
+        maxFilesPerTrigger), carryCols = Seq(eventTimeCol))
       .withWatermark(eventTimeCol, watermarkDelay)
       .dropDuplicatesWithinWatermark(Seq("fp"))
       .writeStream
@@ -129,7 +123,6 @@ object DocCuration {
   def processNearDupBatch(batch: DataFrame, outDir: String,
                           stateDir: String, batchId: Long): Unit = {
     val s = batch.sparkSession
-    graft.plans.GraftExpressions.register(s)
     import org.apache.spark.sql.expressions.Window
     val gated = batch.select(col("doc_id"), col("source"), col("text"),
         TextOps.fingerprintCol(col("text")).as("fp"),
@@ -193,19 +186,9 @@ object DocCuration {
   def startNearDupCuration(spark: SparkSession, inputDir: String,
                            outDir: String, checkpointDir: String,
                            stateDir: String,
-                           maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processNearDupBatch(batch, outDir, stateDir, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+                           maxFilesPerTrigger: Option[Int] = None): StreamingQuery =
+    StateMaintenance.startFileDropStream(spark, inputDir, checkpointDir,
+        maxFilesPerTrigger) { (batch, batchId) =>
+      processNearDupBatch(batch, outDir, stateDir, batchId)
+    }
 }

@@ -184,12 +184,7 @@ object GhArchivePipeline {
       if (args.length > 1) args(1) else GhFetch.DefaultArchiveUrl
     val now = if (args.length > 2) java.time.Instant.parse(args(2))
               else java.time.Instant.now()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     run(spark, workDir, now, baseUrl) match {
       case None =>

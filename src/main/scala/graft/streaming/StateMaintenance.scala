@@ -103,8 +103,20 @@ object StateMaintenance {
       .partitionBy("batch_id" +: extras: _*)
       .parquet(dir)
 
-  /** The shared file-drop maintenance-stream skeleton: schema-sniffed
-    * parquet readStream → foreachBatch(processor) → AvailableNow
+  /** The shared file-drop reader: a parquet readStream over `inputDir`
+    * with the schema sniffed from the files already there, and at most
+    * `maxFilesPerTrigger` files per micro-batch when given. */
+  def fileDropReader(spark: SparkSession, inputDir: String,
+                     maxFilesPerTrigger: Option[Int]): DataFrame = {
+    val schema = spark.read.parquet(inputDir).schema
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.foreach(n =>
+      reader.option("maxFilesPerTrigger", n.toString))
+    reader.parquet(inputDir)
+  }
+
+  /** The shared file-drop maintenance-stream skeleton: `fileDropReader`
+    * → foreachBatch(processor) → AvailableNow
     * (drain-and-stop; a 24/7 deployment swaps in a processing-time
     * trigger). One definition so the trigger/checkpoint discipline of
     * every incremental structure changes in one place. */
@@ -112,11 +124,7 @@ object StateMaintenance {
                           checkpointDir: String,
                           maxFilesPerTrigger: Option[Int])(
       processor: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val schema = spark.read.parquet(inputDir).schema
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    reader.parquet(inputDir)
+    fileDropReader(spark, inputDir, maxFilesPerTrigger)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)

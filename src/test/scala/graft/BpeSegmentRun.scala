@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Rung runner for the BPE SEGMENT path (VERDICT r17 #2): bpeSegment is
   * an LLM-pipeline operator with no registered query, so the bench
   * ladder never exercises its counted segTable caps — this main trains
@@ -17,16 +15,7 @@ object BpeSegmentRun {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nMerges = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")

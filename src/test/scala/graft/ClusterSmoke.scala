@@ -40,12 +40,7 @@ object ClusterSmoke {
     "x33b_bm25_search_indexed")
 
   private def session(master: String, extraCp: Option[String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b = GraftSession().master(master)
     extraCp.foreach { cp =>
       b.config("spark.executor.extraClassPath", cp)
       // JDK 17 module opens for the forked executor JVMs (the driver

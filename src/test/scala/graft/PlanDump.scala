@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round evidence tool: dump `.explain("formatted")` for
@@ -18,19 +17,7 @@ object PlanDump {
     val outDir = args.lift(1).getOrElse("plans/r17/dump")
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
     new java.io.File(outDir).mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        "1000000")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }

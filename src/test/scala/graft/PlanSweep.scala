@@ -56,12 +56,7 @@ object PlanSweep {
 
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val marks = Seq("CartesianProduct", "SortMergeJoin",
       "BroadcastNestedLoopJoin", "BroadcastHashJoin", "Exchange",

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Optimization-round evidence tool for the x69/x72 mining core: the
@@ -16,16 +15,7 @@ object ProbeStagePlan {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("plans/r18/x72_probe_stage.txt")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val aids = graft.Tables.embeddings(spark, sf)

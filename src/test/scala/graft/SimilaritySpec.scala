@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.operators.{CoreQueries, SimilarityOps}
+import graft.operators.{ArtifactBuild, CoreQueries, SimilarityOps}
 
 /** ANN operators vs the exact brute-force baseline. The LSH/IVF searches
   * are deterministic (seeded planes, fixed centroid sample), so these
@@ -507,5 +507,45 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       assert(got.exists(_ > Int.MaxValue.toLong),
         s"$name must be able to return past-2^31 ids")
     }
+  }
+
+  test("a failed anchor count cancels the index build instead of waiting it out") {
+    import org.apache.hadoop.fs.Path
+    val root = java.nio.file.Files.createTempDirectory("graft-overlap-cancel")
+    val path = s"$root/artifact"
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val slowMs = 60000L
+    // a build whose one Spark job runs for slowMs unless its tasks are
+    // killed (they poll the kill flag, so a cancel frees the cores)
+    def slowBuild(staging: Path): Unit = {
+      spark.sparkContext.parallelize(1 to 2, 2).foreach { _ =>
+        val t0 = System.currentTimeMillis()
+        while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+          System.currentTimeMillis() - t0 < slowMs) Thread.sleep(20)
+      }
+      fs.mkdirs(staging)
+      fs.create(new Path(staging, "_MARKER")).close()
+    }
+    val t0 = System.nanoTime()
+    val err = intercept[IllegalStateException] {
+      SimilarityOps.overlapped(spark, "slow build")(
+        ArtifactBuild.ensure(spark, path, "_MARKER")(slowBuild)) {
+        Thread.sleep(1000)   // the build's job is running by now
+        throw new IllegalStateException("anchor count failed")
+      }
+    }
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(err.getMessage === "anchor count failed", "the count stays primary")
+    assert(err.getSuppressed.nonEmpty, "the build's failure rides along")
+    assert(secs < slowMs / 2000.0, s"the failure took $secs s to surface")
+    // the cancelled build left no marker and released its lock, so the
+    // next ensure rebuilds the artifact from scratch
+    assert(!fs.exists(new Path(path, "_MARKER")))
+    assert(!fs.exists(new Path(path + ".lock")))
+    ArtifactBuild.ensure(spark, path, "_MARKER") { staging =>
+      fs.mkdirs(staging)
+      fs.create(new Path(staging, "_MARKER")).close()
+    }
+    assert(fs.exists(new Path(path, "_MARKER")))
   }
 }

@@ -2,16 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all suites (getOrCreate reuses it). */
+/** One shared local session for all suites (getOrCreate reuses it),
+  * built from the program's session profile. */
 trait SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession()
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       // catalog tables (bucketing tests) land in a temp dir, not ./spark-warehouse
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
@@ -20,4 +17,12 @@ trait SparkTestSession {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body` with one session conf set, restored afterwards. */
+  def withConf[A](key: String, value: String)(body: => A): A = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }

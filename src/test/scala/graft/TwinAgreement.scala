@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{SimilarityOps, SketchOps, TextOps}
 
@@ -28,13 +27,7 @@ import graft.operators.{SimilarityOps, SketchOps, TextOps}
 object TwinAgreement {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 
