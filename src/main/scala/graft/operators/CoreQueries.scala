@@ -222,7 +222,7 @@ object CoreQueries {
   /** Production cosine: the fused codegen CosineSimilarity expression
     * (same left-to-right accumulation order as the HOF form, so values
     * are bitwise identical — asserted in GraftExpressionsSpec). */
-  def cosine(s: SparkSession, a: Column, b: Column): Column = {
+  def cosine(a: Column, b: Column): Column = {
     call_function(graft.plans.GraftExpressions.CosineFn, a, b)
   }
 
@@ -235,7 +235,7 @@ object CoreQueries {
     val q = emb.filter($"vec_id" === 0).select($"e".as("qe"))
     emb.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(q))
-      .select($"vec_id", round(cosine(s, $"e", $"qe"), 4).as("sim"))
+      .select($"vec_id", round(cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(5)
   }

@@ -1423,7 +1423,7 @@ object DedupOps {
   def dedupEmbeddingFrame(s: SparkSession, emb0: DataFrame): DataFrame = {
     import s.implicits._
     val emb = emb0.withColumn("bucket",
-      SimilarityOps.lshSignature(s, $"e"))
+      SimilarityOps.lshSignature($"e"))
     val par = math.max(s.sessionState.conf.numShufflePartitions,
       s.sparkContext.defaultParallelism)
     val probes = emb
@@ -1436,7 +1436,7 @@ object DedupOps {
         $"bucket".as("pb")), "pb")
       .filter($"va" < $"vb")
       .select($"va", $"vb",
-        round(CoreQueries.cosine(s, $"ea", $"eb"), 4).as("sim"))
+        round(CoreQueries.cosine($"ea", $"eb"), 4).as("sim"))
       // in-job candidate-volume denominator: the verify stage's true
       // work unit is the collision-survivor pair fed to exact cosine
       // (counted AFTER the 1:1 cosine projection so scan pruning and
@@ -1463,7 +1463,7 @@ object DedupOps {
     a.join(b, "label")
       .filter($"va" < $"vb")
       .select($"va", $"vb",
-        round(CoreQueries.cosine(s, $"ea", $"eb"), 4).as("sim"))
+        round(CoreQueries.cosine($"ea", $"eb"), 4).as("sim"))
       .filter($"sim" >= CosineThreshold)
       .orderBy($"va", $"vb")
   }

@@ -26,7 +26,7 @@ object LayoutOps {
   val BucketBits = 6
 
   /** Z-order curve key of two non-negative integer columns. */
-  def zOrderKey(s: SparkSession, x: Column, y: Column): Column = {
+  def zOrderKey(x: Column, y: Column): Column = {
     call_function(graft.plans.GraftExpressions.ZOrderFn,
       x.cast("long"), y.cast("long"))
   }
@@ -47,7 +47,7 @@ object LayoutOps {
     * p + 2^Bits onto one curve point — the per-file min/max span on
     * that column would silently cover nearly the whole domain and the
     * pruning promise above would fail. */
-  def writeZOrdered(s: SparkSession, df: DataFrame, x: Column, y: Column,
+  def writeZOrdered(df: DataFrame, x: Column, y: Column,
                     path: String, files: Int): Unit = {
     import org.apache.spark.sql.functions.{min => fmin, max => fmax}
     val keyed = df.withColumn("__zx", x.cast("long"))
@@ -59,7 +59,7 @@ object LayoutOps {
     val xn = expr(s"(__zx - __mnx) * ${scale}L div (__mxx - __mnx + 1L)")
     val yn = expr(s"(__zy - __mny) * ${scale}L div (__mxy - __mny + 1L)")
     keyed.crossJoin(broadcast(stats))
-      .withColumn("__zkey", zOrderKey(s, xn, yn))
+      .withColumn("__zkey", zOrderKey(xn, yn))
       .repartitionByRange(files, col("__zkey"))
       .sortWithinPartitions(col("__zkey"))
       .drop("__zkey", "__zx", "__zy", "__mnx", "__mxx", "__mny", "__mxy")
@@ -97,7 +97,7 @@ object LayoutOps {
     val yn = expr(s"(l_suppkey - mns) * ${scale}L div (mxs - mns + 1L)")
     li.crossJoin(broadcast(stats))
       .select($"l_partkey", $"l_suppkey",
-        shiftright(zOrderKey(s, xn, yn), ZBits - BucketBits).as("bucket"))
+        shiftright(zOrderKey(xn, yn), ZBits - BucketBits).as("bucket"))
       .groupBy($"bucket")
       .agg(count("*").as("n_rows"),
            min($"l_partkey").as("min_part"), max($"l_partkey").as("max_part"),

@@ -312,7 +312,7 @@ object MultimodalOps {
     val probe = feats.filter($"doc_id" === 0).select($"feat".as("qf"))
     feats.filter($"doc_id" =!= 0)
       .crossJoin(broadcast(probe))
-      .select($"doc_id", round(CoreQueries.cosine(s, $"feat", $"qf"), 4).as("sim"))
+      .select($"doc_id", round(CoreQueries.cosine($"feat", $"qf"), 4).as("sim"))
       .orderBy($"sim".desc, $"doc_id")
       .limit(5)
   }

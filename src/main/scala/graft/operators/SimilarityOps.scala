@@ -50,7 +50,7 @@ object SimilarityOps {
     * the quantized integer coordinates and md5-derived integer planes —
     * exact arithmetic, so the DuckDB oracle reproduces every bucket
     * bit-for-bit (and task retries can never flip a borderline sign). */
-  def lshSignature(s: SparkSession, v: Column): Column = {
+  def lshSignature(v: Column): Column = {
     call_function(graft.plans.GraftExpressions.HyperplaneFn, quantize(v))
   }
 
@@ -68,7 +68,7 @@ object SimilarityOps {
   def annLshFrame(s: SparkSession, emb0: DataFrame,
                   probeId: Long = 0L): DataFrame = {
     import s.implicits._
-    val emb = emb0.withColumn("bucket", lshSignature(s, $"e"))
+    val emb = emb0.withColumn("bucket", lshSignature($"e"))
     val probe = emb.filter($"vec_id" === probeId)
       .select($"e".as("qe"), $"bucket".as("qb"))
     // multiprobe: hamming(bucket, query bucket) ≤ ProbeRadius — with 8
@@ -78,7 +78,7 @@ object SimilarityOps {
     emb.filter($"vec_id" =!= probeId)
       .crossJoin(broadcast(probe))
       .filter(bit_count($"bucket".bitwiseXOR($"qb")) <= ProbeRadius)
-      .select($"vec_id", round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+      .select($"vec_id", round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(TopK)
   }
@@ -165,7 +165,7 @@ object SimilarityOps {
       indexDirName(d, "ann", "v2", sigOf(parts))).toString
     def signed(emb: DataFrame) = emb
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-      .withColumn("bucket", lshSignature(s, $"e").cast("int"))
+      .withColumn("bucket", lshSignature($"e").cast("int"))
     ArtifactBuild.ensure(s, path, "_SUCCESS") { staging =>
       val fs = staging.getFileSystem(s.sparkContext.hadoopConfiguration)
       val base = ArtifactBuild.findAppendBase(s, indexRoot,
@@ -207,12 +207,12 @@ object SimilarityOps {
     val probe = Tables.embeddings(s, d)
       .filter($"vec_id" === 0)
       .select($"embedding".cast("array<double>").as("qe"),
-        lshSignature(s, $"embedding".cast("array<double>")).as("qb"))
+        lshSignature($"embedding".cast("array<double>")).as("qb"))
       .select($"qe", explode(array(ProbeMasks.map(m =>
         $"qb".bitwiseXOR(lit(m)).cast("int")): _*)).as("bucket"))
     idx.join(broadcast(probe), "bucket")
       .filter($"vec_id" =!= 0)
-      .select($"vec_id", round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+      .select($"vec_id", round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(TopK)
   }
@@ -256,7 +256,7 @@ object SimilarityOps {
                    salts: Int = 1): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    val emb = emb0.withColumn("bucket", lshSignature(s, $"e"))
+    val emb = emb0.withColumn("bucket", lshSignature($"e"))
     val probes = emb.filter($"vec_id" < KnnJoinQueries)
       .select($"vec_id".as("qid"), $"e".as("qe"),
         explode(array(ProbeMasks.map(m =>
@@ -269,7 +269,7 @@ object SimilarityOps {
     val cands = joined
       .filter($"cid" =!= $"qid")
       .select($"qid", $"cid",
-        round(CoreQueries.cosine(s, $"qe", $"ce"), 4).as("sim"))
+        round(CoreQueries.cosine($"qe", $"ce"), 4).as("sim"))
     cands
       .withColumn("rn", row_number().over(
         Window.partitionBy($"qid").orderBy($"sim".desc, $"cid")))
@@ -286,7 +286,7 @@ object SimilarityOps {
     * interpolated so the SQL can never drift from quantize(). */
   private val QuantL: Long = graft.plans.HyperplaneSignature.Quant.toLong
 
-  private def longDot(s: SparkSession, a: Column, b: Column): Column = {
+  private def longDot(a: Column, b: Column): Column = {
     call_function(graft.plans.GraftExpressions.LongDotFn, a, b)
   }
 
@@ -313,7 +313,7 @@ object SimilarityOps {
     qv.crossJoin(broadcast(centsRow))
       .select($"vec_id", $"q",
         array_max(transform($"cs", c => struct(
-          longDot(s, $"q", c("c")).as("dot"),
+          longDot($"q", c("c")).as("dot"),
           (-c("cid")).as("negCid"),
           c("cid").as("cid")))).getField("cid").as("cid"))
   }
@@ -434,7 +434,7 @@ object SimilarityOps {
     val probeQ = Tables.embeddings(s, d).filter($"vec_id" === 0)
       .select(quantize($"embedding".cast("array<double>")).as("qq"))
     val probeCids = cents.crossJoin(broadcast(probeQ))
-      .select($"cid", longDot(s, $"c", $"qq").as("dot"))
+      .select($"cid", longDot($"c", $"qq").as("dot"))
       .orderBy($"dot".desc, $"cid").limit(NProbe)
       .select($"cid".cast("long").as("cid"))
     val candidates = assigned.filter($"vec_id" =!= 0)
@@ -442,7 +442,7 @@ object SimilarityOps {
       .select($"vec_id")
     emb.join(broadcast(candidates), "vec_id")
       .crossJoin(broadcast(probe))
-      .select($"vec_id", round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+      .select($"vec_id", round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(TopK)
   }
@@ -474,7 +474,7 @@ object SimilarityOps {
     val probeQ = qv.filter($"vec_id" === 0).select($"q".as("qq"))
     // centroid lists to probe for the query — ranked by integer dot
     val probeCids = cents.crossJoin(broadcast(probeQ))
-      .select($"cid", longDot(s, $"c", $"qq").as("dot"))
+      .select($"cid", longDot($"c", $"qq").as("dot"))
       .orderBy($"dot".desc, $"cid").limit(NProbe)
       .select($"cid")
     // candidate ids (probed lists only) broadcast against the corpus:
@@ -484,7 +484,7 @@ object SimilarityOps {
       .select($"vec_id")
     emb.join(broadcast(candidates), "vec_id")
       .crossJoin(broadcast(probe))
-      .select($"vec_id", round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+      .select($"vec_id", round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(TopK)
   }
@@ -591,7 +591,7 @@ object SimilarityOps {
     val probeQ = Tables.embeddings(s, d).filter($"vec_id" === 0)
       .select(quantize($"embedding".cast("array<double>")).as("qq"))
     val probeCids = cents.crossJoin(broadcast(probeQ))
-      .select($"cid", longDot(s, $"c", $"qq").as("dot"))
+      .select($"cid", longDot($"c", $"qq").as("dot"))
       .orderBy($"dot".desc, $"cid").limit(NProbe)
       .select($"cid".cast("long").as("cid"))
     // per-probed-list query residual, then the ADC lookup tables
@@ -611,7 +611,7 @@ object SimilarityOps {
     emb.join(broadcast(adc), "vec_id")
       .crossJoin(broadcast(probe))
       .select($"vec_id", $"adc",
-        round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+        round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id")
       .limit(TopK)
   }
@@ -678,11 +678,11 @@ object SimilarityOps {
     val cands = coded.filter($"vec_id" =!= 0)
       .crossJoin(broadcast(probe))
       .select($"vec_id", $"e", $"qe",
-        round(CoreQueries.cosine(s, $"r", $"qr"), 4).as("est_sim"))
+        round(CoreQueries.cosine($"r", $"qr"), 4).as("est_sim"))
       .orderBy($"est_sim".desc, $"vec_id").limit(SqCandidates)
     cands
       .select($"vec_id", $"est_sim",
-        round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+        round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .orderBy($"sim".desc, $"vec_id").limit(TopK)
   }
 
@@ -724,7 +724,7 @@ object SimilarityOps {
       .join(emb, "vec_id")
       .join(broadcast(cents), "cid")
       .select($"vec_id", $"cid", $"e",
-        longDot(s, quantize($"e"), $"c").as("cdot"))
+        longDot(quantize($"e"), $"c").as("cdot"))
       .localCheckpoint(false)
     val m1 = mem.select($"cid", $"vec_id".as("va"), $"e".as("ea"),
       $"cdot".as("da"))
@@ -732,7 +732,7 @@ object SimilarityOps {
       $"cdot".as("db"))
     val drops = m1.join(m2, "cid")
       .filter($"va" < $"vb" &&
-        round(CoreQueries.cosine(s, $"ea", $"eb"), 4) >= SemTau)
+        round(CoreQueries.cosine($"ea", $"eb"), 4) >= SemTau)
       .select(when($"da" < $"db", $"vb")
         .when($"db" < $"da", $"va")
         .otherwise($"vb").as("vec_id"))
@@ -778,7 +778,7 @@ object SimilarityOps {
     assigned
       .join(emb, "vec_id")
       .join(broadcast(cents), "cid")
-      .select($"vec_id", $"cid", longDot(s, quantize($"e"), $"c").as("cdot"))
+      .select($"vec_id", $"cid", longDot(quantize($"e"), $"c").as("cdot"))
       .withColumn("rk", row_number().over(
         Window.partitionBy($"cid").orderBy($"cdot".desc, $"vec_id")).cast("long"))
       .withColumn("kept", $"rk" <= ClusterCapQ)
@@ -887,14 +887,14 @@ object SimilarityOps {
     val pool = emb.filter($"vec_id" =!= probeId)
       .crossJoin(broadcast(q))
       .select($"vec_id", $"e",
-        round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("rel"))
+        round(CoreQueries.cosine($"e", $"qe"), 4).as("rel"))
       .orderBy($"rel".desc, $"vec_id")
       .limit(MmrPoolM)
       .localCheckpoint(false)   // feeds the self-join AND both collects
     val a = pool.select($"vec_id".as("va"), $"e".as("ea"))
     val b = pool.select($"vec_id".as("vb"), $"e".as("eb"))
     val sims = a.join(broadcast(b), $"va" =!= $"vb")
-      .select($"va", $"vb", round(CoreQueries.cosine(s, $"ea", $"eb"), 4).as("sim"))
+      .select($"va", $"vb", round(CoreQueries.cosine($"ea", $"eb"), 4).as("sim"))
       .as[(Long, Long, Double)].collect()
       .map { case (x, y, v) => (x, y) -> v }.toMap
     val rels = pool.select($"vec_id", $"rel").as[(Long, Double)].collect()
@@ -963,7 +963,7 @@ object SimilarityOps {
     var st = emb.filter($"vec_id" =!= seedId)
       .crossJoin(broadcast(centerRow(seedId)))
       .select($"vec_id", $"e",
-        round(CoreQueries.cosine(s, $"e", $"ce"), 4).as("ms"))
+        round(CoreQueries.cosine($"e", $"ce"), 4).as("ms"))
       .localCheckpoint(false)
     for (rank <- 2 to KCenterK) {
       val Row(ms: Double, id: Long) = st
@@ -974,7 +974,7 @@ object SimilarityOps {
         st = st.filter($"vec_id" =!= id)
           .crossJoin(broadcast(centerRow(id)))
           .select($"vec_id", $"e",
-            greatest($"ms", round(CoreQueries.cosine(s, $"e", $"ce"), 4)).as("ms"))
+            greatest($"ms", round(CoreQueries.cosine($"e", $"ce"), 4)).as("ms"))
           .localCheckpoint(false)
     }
     picked.toSeq.toDF("rank", "vec_id", "dist")
@@ -1027,7 +1027,7 @@ object SimilarityOps {
     import s.implicits._
     emb.filter($"vec_id" =!= seedId)
       .select($"vec_id", $"e",
-        pow(lit(1.0) - round(CoreQueries.cosine(s, $"e",
+        pow(lit(1.0) - round(CoreQueries.cosine($"e",
           typedLit(seedVec.toSeq)), 4), 2).as("w"),
         ((conv(substring(md5(concat(lit("kc_"), $"vec_id")), 1, 13), 16, 10)
           .cast("long") + 1L) / Kc52).as("u"))
@@ -1044,7 +1044,7 @@ object SimilarityOps {
                       centers: Seq[Array[Double]]): DataFrame = {
     import s.implicits._
     val minDist = least(centers.map(c =>
-      lit(1.0) - round(CoreQueries.cosine(s, $"e", typedLit(c.toSeq)), 4)): _*)
+      lit(1.0) - round(CoreQueries.cosine($"e", typedLit(c.toSeq)), 4)): _*)
     emb.agg(max(minDist).as("coverage"))
   }
 
@@ -1139,7 +1139,7 @@ object SimilarityOps {
     * the only thing checkpointed for reuse by both branches. */
   def bitextFrame(s: SparkSession, emb0: DataFrame): DataFrame = {
     import s.implicits._
-    val emb = emb0.withColumn("bucket", lshSignature(s, $"e"))
+    val emb = emb0.withColumn("bucket", lshSignature($"e"))
     // The probe side carries the compute-bound stage (37-mask explode +
     // per-candidate cosine + partial top-K): its parallelism is the
     // SOURCE partitioning, and a small corpus read as one parquet split
@@ -1161,7 +1161,7 @@ object SimilarityOps {
       .join(b.select($"vec_id".as("bid"), $"e".as("be"),
         $"bucket".as("pb")), "pb")
       .select($"aid", $"bid",
-        round(CoreQueries.cosine(s, $"ae", $"be"), 4).as("sim"))
+        round(CoreQueries.cosine($"ae", $"be"), 4).as("sim"))
     // both directions' k-NN neighborhoods from ONE pass over the
     // candidates: tag each pair (key=aid,dir=0,other=bid) and
     // (key=bid,dir=1,other=aid), bounded-heap top-K per (key, dir).
@@ -1395,7 +1395,7 @@ object SimilarityOps {
     // aggregate once a partition holds more than 128 anchors.
     val probeCids = anchors.select($"qid", $"qq").crossJoin(broadcast(cents))
       .select($"qid", $"cid".cast("long").as("cid"),
-        longDot(s, $"c", $"qq").cast("double").as("dot"))
+        longDot($"c", $"qq").cast("double").as("dot"))
       .groupBy($"qid")
       .agg(call_function(graft.plans.GraftExpressions.TopKFn,
         $"dot", $"cid", lit(NProbe)).as("top"))
@@ -1450,7 +1450,7 @@ object SimilarityOps {
     val negs = emb.join(hintedC(candidates), "vec_id")
       .join(hintedA(anchors.select($"qid", $"qe")), "qid")
       .select($"qid", $"vec_id",
-        round(CoreQueries.cosine(s, $"e", $"qe"), 4).as("sim"))
+        round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .filter($"sim" < HardNegCap)
       .groupBy($"qid")
       .agg(call_function(graft.plans.GraftExpressions.TopKFn,

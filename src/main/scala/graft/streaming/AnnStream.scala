@@ -36,7 +36,7 @@ object AnnStream {
     vectors.append(batch
       .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
       .withColumn("bucket",
-        SimilarityOps.lshSignature(s, col("e")).cast("int")),
+        SimilarityOps.lshSignature(col("e")).cast("int")),
       stateDir, batchId)
   }
 
@@ -65,14 +65,14 @@ object AnnStream {
     val state = vectors.read(spark, stateDir)
     val probe = Seq(probeE).toDF("qe")
       .select(col("qe"),
-        SimilarityOps.lshSignature(spark, col("qe")).cast("int").as("qb"))
+        SimilarityOps.lshSignature(col("qe")).cast("int").as("qb"))
       .select(col("qe"),
         explode(array(SimilarityOps.ProbeMasks.map(m =>
           col("qb").bitwiseXOR(lit(m.toInt))): _*)).as("bucket"))
     state.join(broadcast(probe), "bucket")
       .filter(col("vec_id") =!= excludeId)
       .select(col("vec_id"),
-        round(CoreQueries.cosine(spark, col("e"), col("qe")), 4).as("sim"))
+        round(CoreQueries.cosine(col("e"), col("qe")), 4).as("sim"))
       .orderBy(col("sim").desc, col("vec_id"))
       .limit(SimilarityOps.TopK)
   }
@@ -101,13 +101,13 @@ object AnnStream {
       .select(col("vec_id").as("new_id"),
         col("embedding").cast("array<double>").as("ne"))
       .withColumn("qb",
-        SimilarityOps.lshSignature(spark, col("ne")).cast("int"))
+        SimilarityOps.lshSignature(col("ne")).cast("int"))
       .select(col("new_id"), col("ne"),
         explode(array(SimilarityOps.ProbeMasks.map(m =>
           col("qb").bitwiseXOR(lit(m.toInt))): _*)).as("bucket"))
     state.join(broadcast(probes), "bucket")
       .select(col("new_id"), col("vec_id").as("dup_of"),
-        round(CoreQueries.cosine(spark, col("ne"), col("e")), 4).as("sim"))
+        round(CoreQueries.cosine(col("ne"), col("e")), 4).as("sim"))
       .filter(col("sim") >= graft.operators.DedupOps.CosineThreshold)
       .orderBy(col("new_id"), col("dup_of"))
   }

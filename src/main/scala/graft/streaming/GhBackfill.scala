@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's batch backfill lifecycle (`update-contributor-scores.js`,
   * SURVEY.md §3.2) as idempotent partitioned-table maintenance:
@@ -21,9 +22,61 @@ import org.apache.spark.sql.functions._
   *    directories older than a cutoff; no row-level TTL machinery.
   *  - the daily rollup is recomputed per touched day FROM the hourly
   *    table (never merged in place — ZUNIONSTORE-with-self replay
-  *    double-counts; recompute is idempotent).
+  *    double-counts; recompute is idempotent) and STORED in the day
+  *    table `<hourlyDir>/.daily`, partitioned by `day` — the
+  *    `ZUNIONSTORE` destination that `ZREVRANGE` serves (A2/T1). It
+  *    lives and expires with the hourly table, and its dot prefix hides
+  *    it from hourly reads: Spark's file listing skips `.`- and
+  *    `_`-prefixed dirs, while recursive globs over the table's parquet
+  *    files (DuckDB's hive-partitioned reads) skip only dot dirs — a
+  *    `_daily` dir would reach them as files without the hour keys.
+  *    A write invalidates before it writes: it deletes each touched
+  *    day's stored partition, writes the hours, then stores the day
+  *    recomputed from them. `dailySummary` serves the day table only
+  *    while its days are exactly the hourly table's dates (a listing),
+  *    so a write that stopped part-way, or a table written before the
+  *    day table existed, is served by the recompute instead.
+  *
+  * Every read goes through the schema the writer fixes (`hourlySchema`,
+  * `GhIngest.bronzeSchema`): no schema-inference job per read.
   */
 object GhBackfill {
+
+  /** The hourly table's schema as `writeHourlyScores` writes it and
+    * partition inference reads it back (a yyyy-MM-dd `score_date` dir
+    * types as a DATE). */
+  val hourlySchema: StructType = StructType(Seq(
+    StructField("hour", TimestampType), StructField("login", StringType),
+    StructField("score", LongType), StructField("score_date", DateType),
+    StructField("score_hour", IntegerType)))
+
+  /** The hourly table through `hourlySchema`, with no inference job; a
+    * missing table reads as empty. */
+  def readHourly(spark: SparkSession, dir: String): DataFrame =
+    StateMaintenance.readDeclared(spark, dir, hourlySchema)
+
+  /** The stored day table's dir under the hourly table's. */
+  val DayTable = ".daily"
+
+  /** The day table's rows as stored: the `day` partition column last. */
+  private val daySchema = StructType(Seq(
+    StructField("login", StringType), StructField("score", LongType),
+    StructField("day", DateType)))
+
+  private def fileSystem(spark: SparkSession, path: Path): FileSystem =
+    path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The values of `dir`'s `<prefix>value` partition dirs: a listing,
+    * no data read. */
+  private def partitionValues(fs: FileSystem, dir: Path, prefix: String): Set[String] =
+    if (!fs.exists(dir)) Set.empty
+    else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
+      .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix)).toSet
+
+  /** Each day's score per login, summed over its hours (A2). */
+  private def rollup(hourly: DataFrame): DataFrame =
+    hourly.groupBy(col("score_date").as("day"), col("login"))
+      .agg(sum(col("score")).as("score"))
 
   /** F6 — the reference's skip-at-UTC-hour-0 guard
     * (`update-contributor-scores.js:21-25,172-177`): the last COMPLETE
@@ -39,24 +92,14 @@ object GhBackfill {
   /** (date, hour) partitions present in the hourly-scores output. */
   def existingHourPartitions(spark: SparkSession, outDir: String): Set[(String, Int)] = {
     val path = new Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return Set.empty
-    fs.listStatus(path).filter(_.isDirectory).toSeq.flatMap { dateDir =>
-      val dn = dateDir.getPath.getName
-      if (!dn.startsWith("score_date=")) Seq.empty[(String, Int)]
-      else {
-        val date = dn.stripPrefix("score_date=")
-        fs.listStatus(dateDir.getPath).filter(_.isDirectory).toSeq.flatMap { hourDir =>
-          val hn = hourDir.getPath.getName
-          // toIntOption: tolerate foreign dirs (e.g. a
-          // __HIVE_DEFAULT_PARTITION__ from a buggy writer) instead of
-          // letting one of them break every future backfill run.
-          if (hn.startsWith("score_hour="))
-            hn.stripPrefix("score_hour=").toIntOption.map(date -> _).toSeq
-          else Seq.empty[(String, Int)]
-        }
-      }
-    }.toSet
+    val fs = fileSystem(spark, path)
+    partitionValues(fs, path, "score_date=").flatMap { date =>
+      // toIntOption: tolerate foreign dirs (e.g. a
+      // __HIVE_DEFAULT_PARTITION__ from a buggy writer) instead of
+      // letting one of them break every future backfill run.
+      partitionValues(fs, new Path(path, s"score_date=$date"), "score_hour=")
+        .flatMap(_.toIntOption).map(date -> _)
+    }
   }
 
   /** Hourly scores with explicit partition columns. */
@@ -66,9 +109,20 @@ object GhBackfill {
       .withColumn("score_hour", hour(col("hour")))
 
   /** Idempotent write: dynamic partition overwrite replaces ONLY the
-    * (score_date, score_hour) partitions present in `events`. */
+    * (score_date, score_hour) partitions present in `events`, whose
+    * dates (yyyy-MM-dd) the caller names in `days`; those days are
+    * then recomputed from their hours and stored in the day table. A
+    * table without a day table yet gets every day it holds stored. */
   def writeHourlyScores(spark: SparkSession, events: DataFrame,
-                        outDir: String): Unit = {
+                        outDir: String, days: Seq[String]): Unit = {
+    val out = new Path(outDir)
+    val fs = fileSystem(spark, out)
+    val dayDir = new Path(out, DayTable)
+    val touched = days.toSet ++
+      (if (fs.exists(dayDir)) Set.empty else partitionValues(fs, out, "score_date="))
+    // invalidate first: until the day is stored again, its hours and
+    // the day table disagree and reads fall back to the recompute
+    touched.foreach(d => fs.delete(new Path(dayDir, s"day=$d"), true))
     // dynamic overwrite as a WRITER option, not session conf: a
     // session-global set leaks into every later partitioned overwrite
     // on the shared session — under dynamic mode the commit protocol
@@ -80,6 +134,13 @@ object GhBackfill {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("score_date", "score_hour")
       .parquet(outDir)
+    if (touched.nonEmpty)
+      rollup(readHourly(spark, outDir)
+          .filter(col("score_date").isin(touched.toSeq.map(java.time.LocalDate.parse): _*)))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day")
+        .parquet(dayDir.toString)
   }
 
   /** Backfill with output-existence pruning: recompute only events whose
@@ -104,24 +165,26 @@ object GhBackfill {
         concat_ws(":", col("score_date"), col("score_hour"))
           .isin(missingSet.map { case (d, h) => s"$d:$h" }.toSeq: _*))
         .drop("score_date", "score_hour")
-      writeHourlyScores(spark, todo, outDir)
+      writeHourlyScores(spark, todo, outDir, missing.map(_._1).distinct.toSeq)
     }
     missing.length
   }
 
   /** Retention (K4/W6): drop hourly partitions with score_date strictly
-    * older than `cutoffDate` (yyyy-MM-dd). Driver-side metadata op. */
+    * older than `cutoffDate` (yyyy-MM-dd), and those days from the day
+    * table — the stored days first, so a stop in between leaves hours
+    * without their day, which reads recompute. Driver-side metadata op;
+    * returns the number of dates dropped. */
   def expireHourPartitions(spark: SparkSession, outDir: String,
                            cutoffDate: String): Int = {
     val path = new Path(outDir)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(path)) return 0
-    val old = fs.listStatus(path).filter(_.isDirectory).filter { st =>
-      val n = st.getPath.getName
-      n.startsWith("score_date=") && n.stripPrefix("score_date=") < cutoffDate
-    }
-    old.foreach(st => fs.delete(st.getPath, true))
-    old.length
+    val fs = fileSystem(spark, path)
+    val dayDir = new Path(path, DayTable)
+    partitionValues(fs, dayDir, "day=").filter(_ < cutoffDate)
+      .foreach(d => fs.delete(new Path(dayDir, s"day=$d"), true))
+    val old = partitionValues(fs, path, "score_date=").filter(_ < cutoffDate)
+    old.foreach(d => fs.delete(new Path(path, s"score_date=$d"), true))
+    old.size
   }
 
   /** The reference's count-bounded stream trim (`XADD MAXLEN ~ 1000`,
@@ -187,10 +250,23 @@ object GhBackfill {
     dropped
   }
 
-  /** Daily rollup recomputed from the hourly table (A2, idempotent). */
+  /** Daily rollup (A2): (day, login, score). Served from the day table
+    * when its `day=` dirs are exactly the hourly table's `score_date=`
+    * dirs, a listing that reads no data; otherwise — a table written
+    * before the day table existed, or a write that stopped between its
+    * hours and its day — recomputed from the hourly table. A missing
+    * table reads as empty. */
   def dailySummary(spark: SparkSession, hourlyDir: String): DataFrame = {
-    val hourly = spark.read.parquet(hourlyDir)
-    hourly.groupBy(col("score_date").as("day"), col("login"))
-      .agg(sum(col("score")).as("score"))
+    val out = new Path(hourlyDir)
+    val fs = fileSystem(spark, out)
+    val dayDir = new Path(out, DayTable)
+    val days = partitionValues(fs, dayDir, "day=")
+    if (days.nonEmpty && days == partitionValues(fs, out, "score_date="))
+      // the listed day dirs, not the dot-named root, which Spark's path
+      // check would warn about on every read
+      spark.read.schema(daySchema).option("basePath", dayDir.toString)
+        .parquet(days.toSeq.map(d => s"$dayDir/day=$d"): _*)
+        .select("day", "login", "score")
+    else rollup(readHourly(spark, hourlyDir))
   }
 }

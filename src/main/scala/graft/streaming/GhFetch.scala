@@ -137,7 +137,7 @@ object GhFetch {
   *
   *   UTC-hour-0 guard (F6) → hour-walk fetch (S2) → clean + dedup →
   *   hourly scores via idempotent partition overwrite (A1/O2) →
-  *   daily rollup recomputed from hourly (A2).
+  *   daily rollup served from the stored day table (A2).
   *
   * {{{
   *   sbt "runMain graft.streaming.GhArchivePipeline <workDir> [baseUrl] [nowIso]"
@@ -167,14 +167,8 @@ object GhArchivePipeline {
             GhIngest.readEventsJson(spark, paths)))
           GhBackfill.backfillMissingHours(spark, events, hourlyDir)
         }
-      // a first run whose downloads ALL failed never creates hourly/;
-      // degrade to zero daily rows rather than crashing the command
-      val hourlyPath = new org.apache.hadoop.fs.Path(hourlyDir)
-      val fs = hourlyPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val dailyRows =
-        if (!fs.exists(hourlyPath)) 0L
-        else GhBackfill.dailySummary(spark, hourlyDir).count()
-      Result(date, fetched, hoursWritten, dailyRows)
+      Result(date, fetched, hoursWritten,
+        GhBackfill.dailySummary(spark, hourlyDir).count())
     }
 
   def main(args: Array[String]): Unit = {

@@ -21,8 +21,9 @@ import graft.functions.GhFunctions._
   *  - backfill (`update-contributor-scores.js`): batch read of hour
   *    files (`.json.gz` decompresses natively) → F2+F3 filters →
   *    1-hour tumbling-window count per login (A1) → idempotent
-  *    per-hour-partition overwrite; daily rollup = re-agg from hourly
-  *    (A2; recompute-not-merge per SURVEY §7.4.1).
+  *    per-hour-partition overwrite; daily rollup = each touched day
+  *    re-aggregated from hourly and stored beside it (A2;
+  *    recompute-not-merge per SURVEY §7.4.1; `GhBackfill`).
   *  - live scoring (the `ZINCRBY` hourly counters): a stateless stream
   *    over bronze that recomputes each hour it sees new rows in from
   *    that hour's bronze partition and overwrites it with the backfill's
@@ -62,6 +63,19 @@ object GhIngest {
       StructField("id", LongType),
       StructField("login", StringType)))),
     StructField("_corrupt_record", StringType)))
+
+  /** The bronze table's schema as `startIngest` writes it and partition
+    * inference reads it back: the cleaned event columns, then the
+    * `event_date` (a yyyy-MM-dd dir, which inference types as a DATE) and
+    * `event_hour` partition columns. */
+  val bronzeSchema: StructType = StructType(
+    ghEventSchema.filterNot(_.name == "_corrupt_record") ++ Seq(
+      StructField("event_date", DateType), StructField("event_hour", IntegerType)))
+
+  /** The bronze table through `bronzeSchema`, with no inference job; a
+    * missing table reads as empty. */
+  def readBronze(spark: SparkSession, dir: String): DataFrame =
+    StateMaintenance.readDeclared(spark, dir, bronzeSchema)
 
   /** Batch NDJSON(.gz) read with malformed-line tolerance (S2/S3/O3):
     * PERMISSIVE mode quarantines bad lines into _corrupt_record instead
@@ -153,14 +167,12 @@ object GhIngest {
 
   /** T4 — stream metadata (the `XINFO STREAM` analogue): entry count,
     * partition count, and event-time bounds of the bronze table. */
-  def streamInfo(spark: SparkSession, bronzeDir: String): DataFrame = {
-    val bronze = spark.read.parquet(bronzeDir)
-    bronze.agg(
+  def streamInfo(spark: SparkSession, bronzeDir: String): DataFrame =
+    readBronze(spark, bronzeDir).agg(
       count("*").as("n_entries"),
       countDistinct(col("event_date"), col("event_hour")).as("n_partitions"),
       min(col("created_at")).as("first_entry"),
       max(col("created_at")).as("last_entry"))
-  }
 
   // ---- streaming --------------------------------------------------------
 
@@ -265,7 +277,9 @@ object GhIngest {
     * state; a trigger costs the bronze rows of the hours it touched. A
     * bronze (date, hour) partition holds exactly one hourly-table
     * partition's events when the session zone's UTC offset is whole
-    * hours (the sessions here all run in UTC).
+    * hours (the sessions here all run in UTC), so the touched bronze
+    * dates are the hourly table's touched days, whose stored day rows
+    * the write recomputes.
     *
     * The recompute runs on `spark`, not the micro-batch's own session,
     * which has adaptive execution off: with it on, a rewritten hour is
@@ -279,17 +293,17 @@ object GhIngest {
         "stateful scoring plan, which this stateless plan cannot resume. Use a " +
         "fresh checkpoint directory: it is safe, because scoring recomputes every " +
         "hour it touches from bronze, so replaying bronze rewrites the same scores.")
-    val schema = spark.read.parquet(bronzeDir).schema
-    spark.readStream.schema(schema).parquet(bronzeDir)
+    spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val touched = batch.select("event_date", "event_hour").distinct().collect()
-          .map(r => col("event_date") === lit(r.get(0)) && col("event_hour") === lit(r.get(1)))
         if (touched.nonEmpty)
           GhBackfill.writeHourlyScores(spark,
-            spark.read.schema(schema).parquet(bronzeDir).filter(touched.reduce(_ || _)),
-            hourlyDir)
+            readBronze(spark, bronzeDir).filter(touched.map(r =>
+              col("event_date") === lit(r.get(0)) && col("event_hour") === lit(r.get(1))
+            ).reduce(_ || _)),
+            hourlyDir, touched.map(_.get(0).toString).distinct.toSeq)
       }
       .trigger(Trigger.AvailableNow())
       .start()

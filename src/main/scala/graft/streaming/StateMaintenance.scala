@@ -43,6 +43,16 @@ object StateMaintenance {
     new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** A parquet table read through the `schema` its writer fixes: no
+    * schema-inference job, and a missing dir (nothing written yet) or one
+    * whose partitions were all dropped reads as an empty frame of that
+    * schema instead of throwing. */
+  def readDeclared(spark: SparkSession, dir: String, schema: StructType): DataFrame =
+    if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir)))
+      spark.read.schema(schema).parquet(dir)
+    else spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
   /** One batch_id-partitioned partial-state table: `sub` is its
     * directory under the state dir ("" = the state dir itself), `data`
     * the schema of the rows a batch lands (the `extras` partition
@@ -72,13 +82,8 @@ object StateMaintenance {
     /** Every retained partial row with its batch_id, or an empty frame
       * when no batch has landed yet — first-serve-before-first-batch
       * behaves identically for every structure. */
-    def read(spark: SparkSession, stateDir: String): DataFrame = {
-      val dir = path(stateDir)
-      if (fs(spark, dir).exists(new org.apache.hadoop.fs.Path(dir)))
-        spark.read.schema(schema).parquet(dir)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    }
+    def read(spark: SparkSession, stateDir: String): DataFrame =
+      readDeclared(spark, path(stateDir), schema)
 
     /** The retained window: `merge` over every retained partial. */
     def merged(spark: SparkSession, stateDir: String): DataFrame =

@@ -27,8 +27,8 @@ class ArtifactChaosReaderSpec extends AnyFunSuite with SparkTestSession {
   private def bucketsOf(rows: Seq[(Long, Seq[Double])]): Set[(Long, Int)] =
     rows.toDF("vec_id", "embedding")
       .select($"vec_id",
-        SimilarityOps.lshSignature(spark,
-          $"embedding".cast("array<double>")).cast("int").as("bucket"))
+        SimilarityOps.lshSignature($"embedding".cast("array<double>"))
+          .cast("int").as("bucket"))
       .as[(Long, Int)].collect().toSet
 
   test("a concurrent reader never observes partial state during merge+compaction") {

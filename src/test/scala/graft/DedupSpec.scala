@@ -433,14 +433,14 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     import graft.operators.{SimilarityOps, CoreQueries}
     val emb = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-      .withColumn("bucket", SimilarityOps.lshSignature(spark, $"e"))
+      .withColumn("bucket", SimilarityOps.lshSignature($"e"))
     val a = emb.select($"vec_id".as("va"), $"e".as("ea"), $"bucket".as("ba"))
     val b = emb.select($"vec_id".as("vb"), $"e".as("eb"), $"bucket".as("bb"))
     val brute = a.crossJoin(b)
       .filter($"va" < $"vb")
       .filter(bit_count($"ba".bitwiseXOR($"bb")) <= SimilarityOps.ProbeRadius)
       .select($"va", $"vb",
-        round(CoreQueries.cosine(spark, $"ea", $"eb"), 4).as("sim"))
+        round(CoreQueries.cosine($"ea", $"eb"), 4).as("sim"))
       .filter($"sim" >= DedupOps.CosineThreshold)
       .as[(Long, Long, Double)].collect().toSet
     val bucketed = DedupOps.dedupEmbedding(spark, sf)

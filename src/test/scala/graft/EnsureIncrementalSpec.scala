@@ -321,8 +321,8 @@ class EnsureIncrementalSpec extends AnyFunSuite with SparkTestSession {
       .select($"vec_id", $"bucket".cast("long"))
       .as[(Long, Long)].collect().toMap
     val want = (b1 ++ b2).toDF("vec_id", "embedding", "label")
-      .select($"vec_id", SimilarityOps.lshSignature(spark,
-        $"embedding".cast("array<double>")).as("bucket"))
+      .select($"vec_id",
+        SimilarityOps.lshSignature($"embedding".cast("array<double>")).as("bucket"))
       .as[(Long, Long)].collect().toMap
     assert(got === want,
       "merged bucket index must place every vector exactly as a rebuild")

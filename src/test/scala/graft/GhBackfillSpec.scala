@@ -2,14 +2,18 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.streaming.{GhBackfill, GhIngest}
 
 /** Idempotent hour-partitioned backfill semantics (SURVEY §7.2 step 4):
   * partition overwrite never double-counts, output-existence pruning
-  * skips done hours, retention drops old partitions, daily = Σ hourly. */
+  * skips done hours, retention drops old partitions, daily = Σ hourly,
+  * and the stored day table always equals that recompute. */
 class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
+  import GhBackfillSpec._
 
   private lazy val fixtureDir: String = {
     val dir = Files.createTempDirectory("graft-bf-fixture")
@@ -20,23 +24,33 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
   private def cleanedEvents =
     GhIngest.dedupEvents(GhIngest.cleanEvents(
       GhIngest.readEventsJson(spark, fixtureDir)))
+  /** The fixture ingested by `startIngest`: a streaming sink's table. */
+  private lazy val ingestedBronze: String = {
+    val tmp = Files.createTempDirectory("graft-bf-bronze").toString
+    GhIngest.startIngest(spark, fixtureDir, s"$tmp/bronze", s"$tmp/ckpt")
+      .awaitTermination(60000)
+    s"$tmp/bronze"
+  }
 
   test("backfill writes hour partitions; replay is a no-op; totals stable") {
     val out = Files.createTempDirectory("graft-bf").toString + "/hourly"
     val n1 = GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
     assert(n1 === 4)   // hours 12, 13, 23 on day 1; hour 0 on day 2
     val total1 = spark.read.parquet(out).agg(sum($"score")).as[Long].head()
+    assertDayTableServed(spark, out)
 
     // replay: all partitions exist -> nothing processed, totals unchanged
     val n2 = GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
     assert(n2 === 0)
     val total2 = spark.read.parquet(out).agg(sum($"score")).as[Long].head()
     assert(total1 === total2)
+    assertDayTableServed(spark, out)
 
     // forced reprocess overwrites in place - still no double counting
     GhBackfill.backfillMissingHours(spark, cleanedEvents, out, force = true)
     val total3 = spark.read.parquet(out).agg(sum($"score")).as[Long].head()
     assert(total1 === total3)
+    assertDayTableServed(spark, out)
   }
 
   test("partition listing sees exactly the written (date, hour) pairs") {
@@ -54,6 +68,64 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
     assert(dropped === 1)   // the 2025-08-10 date dir
     assert(GhBackfill.existingHourPartitions(spark, out) ===
       Set(("2025-08-11", 0)))
+    // the expired day leaves the day table with its hours
+    assert(dayDirs(out) === Set("day=2025-08-11"))
+    assertDayTableServed(spark, out)
+  }
+
+  test("without a stored day, dailySummary serves the recompute; the next write stores it") {
+    val out = Files.createTempDirectory("graft-bf-day").toString + "/hourly"
+    GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
+    val days = Seq("2025-08-10", "2025-08-11")
+    assert(dayDirs(out) === days.map(d => s"day=$d").toSet)
+
+    // a table written before the day table existed
+    deleteTree(s"$out/${GhBackfill.DayTable}")
+    assertRecomputeServed(spark, out)
+    // its next write, of one day, stores every day it holds
+    GhBackfill.writeHourlyScores(spark,
+      cleanedEvents.filter(date_format($"created_at", "yyyy-MM-dd") === days(1)),
+      out, days.drop(1))
+    assert(dayDirs(out) === days.map(d => s"day=$d").toSet)
+    assertDayTableServed(spark, out)
+
+    // a write that stopped between its hours and its day: the stored
+    // day is gone and hour 12 of that day is rewritten without octocat
+    val day0 = cleanedEvents.filter(date_format($"created_at", "yyyy-MM-dd") === days(0))
+    val before = dailyRows(GhBackfill.dailySummary(spark, out))
+    deleteTree(s"$out/${GhBackfill.DayTable}/day=${days(0)}")
+    GhBackfill.hourlyScoresPartitioned(day0
+        .filter(hour($"created_at") === 12 && $"actor.login" =!= "octocat"))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("score_date", "score_hour").parquet(out)
+    assertRecomputeServed(spark, out)
+    assert(before.contains((days(0), "octocat", 1L)))
+    assert(!dailyRows(GhBackfill.dailySummary(spark, out))
+      .exists { case (d, l, _) => d == days(0) && l == "octocat" })
+    // the next write of that day restores it
+    GhBackfill.writeHourlyScores(spark, day0, out, days.take(1))
+    assertDayTableServed(spark, out)
+    assert(dailyRows(GhBackfill.dailySummary(spark, out)) === before)
+  }
+
+  test("declared schemas equal what inference reads; a missing table reads as empty") {
+    def shape(s: StructType) = s.map(f => (f.name, f.dataType, f.nullable))
+    assert(shape(spark.read.parquet(ingestedBronze).schema) === shape(GhIngest.bronzeSchema))
+    assert(shape(GhIngest.readBronze(spark, ingestedBronze).schema) ===
+      shape(GhIngest.bronzeSchema))
+    val out = Files.createTempDirectory("graft-bf-schema").toString + "/hourly"
+    GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
+    assert(shape(spark.read.parquet(out).schema) === shape(GhBackfill.hourlySchema))
+    // dailySummary's schema, stored or recomputed, is the inferred
+    // table's rollup
+    val daily = shape(spark.read.parquet(out)
+      .groupBy($"score_date".as("day"), $"login").agg(sum($"score").as("score")).schema)
+    assert(shape(GhBackfill.dailySummary(spark, out).schema) === daily)
+    deleteTree(s"$out/${GhBackfill.DayTable}")
+    assert(shape(GhBackfill.dailySummary(spark, out).schema) === daily)
+    val missing = GhBackfill.dailySummary(spark, s"$out-missing")
+    assert(shape(missing.schema) === daily && missing.isEmpty)
+    assert(GhIngest.streamInfo(spark, s"$out-missing").head().getLong(0) === 0L)
   }
 
   test("size-bounded trim (MAXLEN ~ analogue) drops oldest, keeps >= max") {
@@ -106,14 +178,11 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("size-bounded trim refuses a streaming sink's table and deletes nothing") {
-    val tmp = Files.createTempDirectory("graft-bf-trim4").toString
-    GhIngest.startIngest(spark, fixtureDir, s"$tmp/bronze", s"$tmp/ckpt")
-      .awaitTermination(60000)
     val err = intercept[UnsupportedOperationException](
-      GhBackfill.trimToMaxEvents(spark, s"$tmp/bronze", 0))
+      GhBackfill.trimToMaxEvents(spark, ingestedBronze, 0))
     assert(err.getMessage.contains("_spark_metadata"))
     // every logged file is still there: the table reads in full
-    assert(spark.read.parquet(s"$tmp/bronze").count() === 15)
+    assert(spark.read.parquet(ingestedBronze).count() === 15)
   }
 
   test("partition listing tolerates foreign and malformed directories") {
@@ -150,4 +219,46 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
       .as[(String, String, Long)].collect().toSet
     assert(viaHourly === direct)
   }
+}
+
+object GhBackfillSpec {
+  import org.scalatest.Assertions._
+
+  /** Daily rows as (day, login, score). */
+  def dailyRows(daily: DataFrame): Set[(String, String, Long)] =
+    daily.select(col("day").cast("string"), col("login"), col("score")).collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
+
+  /** The daily rollup recomputed from the hourly table's hours. */
+  def recomputed(spark: SparkSession, out: String): Set[(String, String, Long)] =
+    dailyRows(GhBackfill.readHourly(spark, out)
+      .groupBy(col("score_date").as("day"), col("login"))
+      .agg(sum(col("score")).as("score")))
+
+  private def fromDayTable(daily: DataFrame): Boolean =
+    daily.inputFiles.nonEmpty &&
+      daily.inputFiles.forall(_.contains(s"/${GhBackfill.DayTable}/"))
+
+  /** `dailySummary` serves the stored day table, which holds exactly the
+    * recompute. */
+  def assertDayTableServed(spark: SparkSession, out: String): Unit = {
+    val daily = GhBackfill.dailySummary(spark, out)
+    assert(fromDayTable(daily), s"not served from the day table: ${daily.inputFiles.toSeq}")
+    assert(dailyRows(daily) === recomputed(spark, out))
+  }
+
+  /** `dailySummary` falls back to the recompute, and it is right. */
+  def assertRecomputeServed(spark: SparkSession, out: String): Unit = {
+    val daily = GhBackfill.dailySummary(spark, out)
+    assert(!fromDayTable(daily))
+    assert(dailyRows(daily) === recomputed(spark, out))
+  }
+
+  /** The day table's partition dirs. */
+  def dayDirs(out: String): Set[String] =
+    Option(new java.io.File(out, GhBackfill.DayTable).list())
+      .fold(Set.empty[String])(_.toSet.filter(_.startsWith("day=")))
+
+  def deleteTree(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
 }

@@ -11,9 +11,12 @@ import graft.streaming.{GhBackfill, GhIngest}
   * and overwrite it in the partitioned hourly table. The second batch
   * lands in an EXISTING hour partition, which must come out with the
   * hour's full counts (old rows + new) — the reference's incremental
-  * ZINCRBY semantics, made idempotent by recompute (SURVEY §7.4.1). */
+  * ZINCRBY semantics, made idempotent by recompute (SURVEY §7.4.1).
+  * After every scoring trigger the stored day table is served and equals
+  * the daily recompute. */
 class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
+  import GhBackfillSpec.assertDayTableServed
 
   test("incremental upsert across two streamed batches") {
     val root = Files.createTempDirectory("graft-scoring")
@@ -30,6 +33,7 @@ class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
       .awaitTermination(60000)
 
     val after1 = scored(spark.read.parquet(hourly))
+    assertDayTableServed(spark, hourly)
     assert(after1 === Set(
       ("2025-08-10 12", "octocat", 1L),
       ("2025-08-10 12", "botanist-dev", 1L),
@@ -53,6 +57,7 @@ class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
       .awaitTermination(60000)
 
     val after2 = scored(spark.read.parquet(hourly))
+    assertDayTableServed(spark, hourly)
     assert(after2 === Set(
       ("2025-08-10 12", "octocat", 1L),
       ("2025-08-10 12", "botanist-dev", 1L),
@@ -96,10 +101,12 @@ class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
       push("3002", "nightowl", "2025-08-10T13:30:00Z"))
     GhIngest.startScoring(spark, bronze, hourly, s"$root/ckpt")
       .awaitTermination(60000)
+    assertDayTableServed(spark, hourly)
     // 80 minutes behind the max event time scored so far (13:30)
     appendBronze(bronze, push("3003", "octocat", "2025-08-10T12:10:00Z"))
     GhIngest.startScoring(spark, bronze, hourly, s"$root/ckpt")
       .awaitTermination(60000)
+    assertDayTableServed(spark, hourly)
     val streamed = scored(spark.read.parquet(hourly))
     assert(streamed === Set(
       ("2025-08-10 12", "octocat", 2L),
@@ -128,6 +135,7 @@ class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
     GhIngest.startScoring(spark, bronze, hourly, s"$root/ckpt-a")
       .awaitTermination(60000)
     assert(table === first)
+    assertDayTableServed(spark, hourly)
   }
 
   test("refuses a checkpoint holding state from the stateful scoring plan") {

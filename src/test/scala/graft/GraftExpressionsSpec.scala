@@ -182,7 +182,7 @@ class GraftExpressionsSpec extends AnyFunSuite with SparkTestSession {
   test("HyperplaneSignature is stable and within plane-count bits") {
     GraftExpressions.register(spark)
     val sigs = Tables.embeddings(spark, sf)
-      .select(graft.operators.SimilarityOps.lshSignature(spark,
+      .select(graft.operators.SimilarityOps.lshSignature(
         $"embedding".cast("array<double>")).as("sig"))
       .as[Long].collect()
     assert(sigs.forall(sg => sg >= 0 &&

@@ -22,7 +22,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
   test("ZOrderKey matches a driver-side interleave on real keys") {
     val got = Tables.lineitem(spark, sf)
       .select($"l_partkey", $"l_suppkey",
-        LayoutOps.zOrderKey(spark, $"l_partkey", $"l_suppkey").as("z"))
+        LayoutOps.zOrderKey($"l_partkey", $"l_suppkey").as("z"))
       .as[(Long, Long, Long)].collect()
     assert(got.nonEmpty)
     got.foreach { case (p, s, z) => assert(z === zRef(p, s), s"z($p, $s)") }
@@ -51,7 +51,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
 
   test("writeZOrdered: files own non-overlapping z-ranges (pruning works)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-zorder").toString
-    LayoutOps.writeZOrdered(spark, Tables.lineitem(spark, sf)
+    LayoutOps.writeZOrdered(Tables.lineitem(spark, sf)
         .select($"l_partkey", $"l_suppkey"),
       $"l_partkey", $"l_suppkey", dir, files = 4)
     // recompute the writer's NORMALIZED key on read and check per-FILE
@@ -65,7 +65,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
     val xn = expr(s"(l_partkey - ${mnp}L) * ${scale}L div ${mxp - mnp + 1}L")
     val yn = expr(s"(l_suppkey - ${mns}L) * ${scale}L div ${mxs - mns + 1}L")
     val ranges = spark.read.parquet(dir)
-      .select(LayoutOps.zOrderKey(spark, xn, yn).as("z"),
+      .select(LayoutOps.zOrderKey(xn, yn).as("z"),
         input_file_name().as("f"))
       .groupBy($"f").agg(min($"z").as("lo"), max($"z").as("hi"))
       .as[(String, Long, Long)].collect()
@@ -90,7 +90,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
       (($"id" * 2654435761L) % dom).as("x"),
       ((($"id" + 131L) * 2246822519L) % dom).as("y"))
     val dir = java.nio.file.Files.createTempDirectory("graft-zwide").toString
-    LayoutOps.writeZOrdered(spark, df, $"x", $"y", dir, files = 16)
+    LayoutOps.writeZOrdered(df, $"x", $"y", dir, files = 16)
     val spans = spark.read.parquet(dir)
       .groupBy(input_file_name().as("f"))
       .agg(min($"x").as("mnx"), max($"x").as("mxx"),
@@ -123,7 +123,7 @@ class LayoutSpec extends AnyFunSuite with SparkTestSession {
     val prevBlock = hconf.get("parquet.block.size")
     hconf.setInt("parquet.block.size", 1 << 20)
     try {
-      LayoutOps.writeZOrdered(spark, li, $"l_partkey", $"l_suppkey",
+      LayoutOps.writeZOrdered(li, $"l_partkey", $"l_suppkey",
         zdir, files = 16)
       // stats-hostile baseline: round-robin layout, every file spans the
       // whole domain of both columns

@@ -108,7 +108,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     // join that drops queries still fails this form.
     val buckets = Tables.embeddings(spark, sf)
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-      .withColumn("b", SimilarityOps.lshSignature(spark, $"e"))
+      .withColumn("b", SimilarityOps.lshSignature($"e"))
       .select($"vec_id", $"b").as[(Long, Long)].collect()
     val expectAnswered = buckets
       .filter(_._1 < SimilarityOps.KnnJoinQueries)
@@ -309,7 +309,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       .select($"vec_id", $"label",
         $"embedding".cast("array<double>").as("e"))
       .withColumn("bucket",
-        SimilarityOps.lshSignature(spark, $"e").cast("long"))
+        SimilarityOps.lshSignature($"e").cast("long"))
       .as[(Long, Int, Seq[Double], Long)].collect()
     val aSide = rows.filter(_._2 % 2 == 0)
     val bSide = rows.filter(_._2 % 2 == 1)

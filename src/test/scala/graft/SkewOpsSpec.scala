@@ -59,7 +59,7 @@ class SkewOpsSpec extends AnyFunSuite with SparkTestSession {
     // the hot bucket is real, and the content-derived salt fans its
     // candidate rows out across reducers (identical vectors still salt
     // apart — vec_id is part of the hashed row)
-    val b = emb.withColumn("bucket", SimilarityOps.lshSignature(spark, $"e"))
+    val b = emb.withColumn("bucket", SimilarityOps.lshSignature($"e"))
     val hotBucket = b.groupBy($"bucket").count()
       .orderBy($"count".desc).first().getLong(0)
     assert(b.filter($"bucket" === hotBucket).count() >= 250)
