@@ -34,7 +34,7 @@ import graft.operators.DedupOps
   *
   *  - growth: new docs land labels in their own partition; component
   *    merges rewrite ONLY the partitions holding a member of a merged
-  *    component (metadata-scale driver listing, the removeDocs
+  *    component (metadata-scale driver listing, the removal
   *    discipline). The landing partition and every merge-rewritten
   *    partition commit in ONE dynamic overwrite, so no reader can
   *    observe a component half-remapped between two writes.
@@ -51,7 +51,8 @@ import graft.operators.DedupOps
   *
   * Rides the SAME `sets/` + `bands/` partials as DedupStream (the
   * probe is the x56 ingest-gate join), so a pipeline maintaining both
-  * pays the narrow shingle/signature work once per doc.
+  * pays the narrow shingle/signature work once per doc. The probe
+  * joins all 32 bands, so `bands/` keeps `band` as a data column.
   */
 object ClusterStream {
 
@@ -116,7 +117,7 @@ object ClusterStream {
 
     // component merges: an OLD rep whose converged label moved remaps
     // every member of its old component — locate the partitions that
-    // hold one and pre-compute their rewrite (the removeDocs
+    // hold one and pre-compute their rewrite (the removal
     // discipline: materialize BEFORE overwriting what we read). The
     // landing partition is excluded — the fresh batch-label write
     // below owns it.

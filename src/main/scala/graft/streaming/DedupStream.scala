@@ -16,9 +16,10 @@ import graft.operators.DedupOps
   *
   *  - `sets/`:  (doc_id, s) PARTITIONED BY batch_id — the exact-verify
   *              shingle identity sets.
-  *  - `bands/`: (doc_id, key) PARTITIONED BY (batch_id, band) — the
+  *  - `bands/`: (doc_id, key, band) PARTITIONED BY batch_id — the
   *              32 band keys per doc; candidate generation groups
   *              these compact 8-byte keys, never re-reading texts.
+  *              No reader prunes by band, so it is not a partition.
   *
   * Serving re-runs only the CHEAP tail (band-bucket grouping + exact
   * verify over candidate shingle sets) — identical candidate rule and
@@ -43,7 +44,7 @@ object DedupStream {
       StructField("doc_id", LongType),
       StructField("key", LongType),
       StructField("band", IntegerType)))
-  }, extras = Seq("band"))
+  })
 
   /** Test seam (DedupStreamChaosSpec): invoked after the batch's sets
     * partition has landed but BEFORE the bands write and the streaming
@@ -131,8 +132,7 @@ object DedupStream {
   }
 
   /** Fold a committed prefix of batches into one partition per
-    * artifact (docs are disjoint across batches — identity merge;
-    * bands keep their band partitioning). */
+    * artifact (docs are disjoint across batches — identity merge). */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
     sets.compact(spark, stateDir, upTo)
     bands.compact(spark, stateDir, upTo)

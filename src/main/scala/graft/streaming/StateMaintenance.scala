@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *  - The fold is not atomic across the overwrite and the deletes. A
   *    `_graft_compacting` marker written first makes the operation
   *    RECOVERABLE: if a previous compaction died mid-way, the next
-  *    `compactBatches` call on the dir finishes its deletes before
+  *    `compact` call on the dir finishes its deletes before
   *    doing anything else. Readers between a crash and the recovery
   *    may double-count the prefix — run compaction from the single
   *    maintenance process that owns the state dir (the same ownership
@@ -70,6 +70,23 @@ object StateMaintenance {
     private def path(stateDir: String) =
       if (sub.isEmpty) stateDir else s"$stateDir/$sub"
 
+    /** The table's dir, after refusing one whose oldest batch is split
+      * by an undeclared partition column (a `bands/` written while
+      * `band` was one): a write would mix two layouts, which no read
+      * can list. A listing; reads no data. */
+    private def writable(spark: SparkSession, stateDir: String): String = {
+      val dir = path(stateDir)
+      batchPartitions(spark, dir).minByOption(_._1).foreach { case (_, p) =>
+        val undeclared = fs(spark, dir).listStatus(p).filter(_.isDirectory)
+          .map(_.getPath.getName.takeWhile(_ != '=')).find(!extras.contains(_))
+        require(undeclared.isEmpty, s"state table '$sub' at $dir splits its " +
+          s"batches by '${undeclared.get}', which it does not partition by " +
+          "(an earlier engine's layout) — wipe the state dir and rebuild " +
+          "the state from its batch inputs")
+      }
+      dir
+    }
+
     /** Land one micro-batch's partial in its own batch_id partition. */
     def append(part: DataFrame, stateDir: String, batchId: Long): Unit =
       overwrite(part.withColumn("batch_id", lit(batchId)), stateDir)
@@ -77,7 +94,7 @@ object StateMaintenance {
     /** Land rows that already carry their batch_id: every partition
       * they touch commits in ONE job. */
     def overwrite(rows: DataFrame, stateDir: String): Unit =
-      overwritePartitions(rows, path(stateDir), extras)
+      overwritePartitions(rows, writable(rows.sparkSession, stateDir), extras)
 
     /** Every retained partial row with its batch_id, or an empty frame
       * when no batch has landed yet — first-serve-before-first-batch
@@ -89,14 +106,93 @@ object StateMaintenance {
     def merged(spark: SparkSession, stateDir: String): DataFrame =
       merge(read(spark, stateDir).drop("batch_id"))
 
-    /** Fold the partials with batch_id ≤ upTo into one, by `merge`. */
-    def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit =
-      compactBatches(spark, path(stateDir), upTo, merge, extras)
+    /** Fold every partial with batch_id ≤ upTo into one partial at
+      * batch_id = upTo by `merge` (the algebra the merged view applies,
+      * so the fold leaves it unchanged), keeping the `extras`
+      * partitions. No-op when ≤ 1 partition is in range. */
+    def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
+      val dir = writable(spark, stateDir)
+      recover(spark, dir)
+      val inRange = batchPartitions(spark, dir).filter(_._1 <= upTo)
+      if (inRange.size > 1) {
+        val f = fs(spark, dir)
+        // materialize the merged prefix BEFORE touching the directory —
+        // Spark refuses to overwrite a path it is still reading from,
+        // and a crash before any mutation must leave the state untouched
+        val folded = merge(read(spark, stateDir)
+            .filter(col("batch_id") <= upTo).drop("batch_id"))
+          .withColumn("batch_id", lit(upTo))
+          .localCheckpoint(true)
+        overwritePartitions(folded, dir, extras)
+        // marker AFTER the merged write: from here the fold is complete
+        // at upTo and recovery only needs to finish the deletes
+        val out = f.create(marker(dir), true)
+        try out.write(upTo.toString.getBytes("UTF-8")) finally out.close()
+        inRange.filter(_._1 < upTo)
+          .foreach { case (_, p) => f.delete(p, true) }
+        f.delete(marker(dir), true)
+      }
+    }
 
-    /** Excise doc_ids from every partition that holds one. */
+    /** Excise a set of doc_ids from the table — the serving-path half
+      * of x57's removal propagation (right-to-be-forgotten must reach
+      * the index, or the ingest gate keeps matching content the corpus
+      * no longer holds). Only the partitions that actually contain a
+      * removed doc are rewritten (metadata-scale driver listing, same
+      * class as compaction's); partitions left with zero survivors are
+      * deleted outright, since a dynamic overwrite that writes no rows
+      * for a partition leaves its old files in place. That deletion is
+      * by batch_id, so the table may have no `extras`.
+      *
+      * Takedown lists are driver-small by nature (ids arrive as a list,
+      * not a relation), which also makes the operation RECOVERABLE the
+      * simple way: the ids are persisted into a `_graft_removing`
+      * marker BEFORE any mutation, and removal is idempotent (anti-join
+      * of an already-clean partition rewrites it unchanged), so a
+      * crashed removal is re-applied from the marker on the next call.
+      * Same single-owner contract as compaction. */
     def remove(spark: SparkSession, stateDir: String,
-               removedIds: Seq[Long]): Unit =
-      removeDocs(spark, path(stateDir), removedIds, extras)
+               removedIds: Seq[Long]): Unit = {
+      require(extras.isEmpty, s"state table '$sub' has extra partitions")
+      val dir = writable(spark, stateDir)
+      val f = fs(spark, dir)
+      if (!f.exists(new org.apache.hadoop.fs.Path(dir))) return
+      // finish a crashed removal first (ids from its marker)
+      if (f.exists(removalMarker(dir))) {
+        val in = f.open(removalMarker(dir))
+        val prior = try new String(in.readAllBytes(), "UTF-8").trim
+          finally in.close()
+        if (prior.nonEmpty)
+          applyRemoval(spark, stateDir, prior.split("\n").map(_.toLong).toSeq)
+        f.delete(removalMarker(dir), true)
+      }
+      if (removedIds.isEmpty) return
+      val out = f.create(removalMarker(dir), true)
+      try out.write(removedIds.mkString("\n").getBytes("UTF-8"))
+      finally out.close()
+      applyRemoval(spark, stateDir, removedIds)
+      f.delete(removalMarker(dir), true)
+    }
+
+    private def applyRemoval(spark: SparkSession, stateDir: String,
+                             removedIds: Seq[Long]): Unit = {
+      val dir = path(stateDir)
+      val state = read(spark, stateDir)
+      val affected = state.filter(col("doc_id").isin(removedIds: _*))
+        .select(col("batch_id")).distinct()
+        .collect().map(_.getLong(0)).toSeq
+      if (affected.isEmpty) return
+      // materialize survivors BEFORE mutating (Spark refuses to overwrite
+      // a path it is reading; a crash before any mutation changes nothing)
+      val survivors = state.filter(col("batch_id").isin(affected: _*))
+        .filter(!col("doc_id").isin(removedIds: _*))
+        .localCheckpoint(true)
+      overwritePartitions(survivors, dir, extras)
+      val still = survivors.select(col("batch_id")).distinct()
+        .collect().map(_.getLong(0)).toSet
+      affected.filterNot(still).foreach(b => fs(spark, dir).delete(
+        new org.apache.hadoop.fs.Path(dir, s"batch_id=$b"), true))
+    }
   }
 
   /** The replay-safe write: dynamic overwrite replaces exactly the
@@ -175,108 +271,6 @@ object StateMaintenance {
       f.delete(marker(dir), true)
     }
 
-  /** Fold every partial with batch_id ≤ upTo into one partial at
-    * batch_id = upTo. `merge` re-aggregates the batch_id-stripped
-    * partial rows into one partial row-set (the same associative
-    * algebra the state's merged view applies); `extraPartitions` keeps
-    * any further partition columns (e.g. the postings' term bucket).
-    * No-op when ≤ 1 partition is in range. */
-  private def compactBatches(spark: SparkSession, stateDir: String,
-                             upTo: Long, merge: DataFrame => DataFrame,
-                             extraPartitions: Seq[String]): Unit = {
-    recover(spark, stateDir)
-    val inRange = batchPartitions(spark, stateDir).filter(_._1 <= upTo)
-    if (inRange.size > 1) {
-      val f = fs(spark, stateDir)
-      // materialize the merged prefix BEFORE touching the directory —
-      // Spark refuses to overwrite a path it is still reading from,
-      // and a crash before any mutation must leave the state untouched
-      val merged = merge(
-        spark.read.parquet(stateDir)
-          .filter(col("batch_id") <= upTo).drop("batch_id"))
-        .withColumn("batch_id", lit(upTo))
-        .localCheckpoint(true)
-      overwritePartitions(merged, stateDir, extraPartitions)
-      // marker AFTER the merged write: from here the fold is complete
-      // at upTo and recovery only needs to finish the deletes
-      val out = f.create(marker(stateDir), true)
-      try out.write(upTo.toString.getBytes("UTF-8")) finally out.close()
-      inRange.filter(_._1 < upTo)
-        .foreach { case (_, path) => f.delete(path, true) }
-      f.delete(marker(stateDir), true)
-    }
-  }
-
   private def removalMarker(dir: String) =
     new org.apache.hadoop.fs.Path(dir, "_graft_removing")
-
-  /** Excise a set of doc_ids from a batch_id-partitioned state
-    * artifact — the serving-path half of x57's removal propagation
-    * (right-to-be-forgotten must reach the index, or the ingest gate
-    * keeps matching content the corpus no longer holds). Only the
-    * partitions that actually contain a removed doc are rewritten
-    * (metadata-scale driver listing, same class as compaction's);
-    * partitions left with zero survivors are deleted outright, since a
-    * dynamic overwrite that writes no rows for a partition leaves its
-    * old files in place.
-    *
-    * Takedown lists are driver-small by nature (ids arrive as a list,
-    * not a relation), which also makes the operation RECOVERABLE the
-    * simple way: the ids are persisted into a `_graft_removing` marker
-    * BEFORE any mutation, and removal is idempotent (anti-join of an
-    * already-clean partition rewrites it unchanged), so a crashed
-    * removal is re-applied from the marker on the next call. Same
-    * single-owner contract as compaction.
-    *
-    * `extraPartitions` keeps further partition columns (e.g. the band
-    * index's `band`). Empty-partition cleanup is at batch granularity:
-    * correct for artifacts where every doc fans out to every extra
-    * partition (the band index — 32 keys per doc) or that have no
-    * extra partitions (identity sets). */
-  def removeDocs(spark: SparkSession, stateDir: String,
-                 removedIds: Seq[Long],
-                 extraPartitions: Seq[String] = Seq.empty): Unit = {
-    val f = fs(spark, stateDir)
-    if (!f.exists(new org.apache.hadoop.fs.Path(stateDir))) return
-    // finish a crashed removal first (ids from its marker)
-    if (f.exists(removalMarker(stateDir))) {
-      val in = f.open(removalMarker(stateDir))
-      val prior = try new String(in.readAllBytes(), "UTF-8").trim
-        finally in.close()
-      if (prior.nonEmpty)
-        applyRemoval(spark, stateDir, prior.split("\n").map(_.toLong).toSeq,
-          extraPartitions)
-      f.delete(removalMarker(stateDir), true)
-    }
-    if (removedIds.isEmpty) return
-    val out = f.create(removalMarker(stateDir), true)
-    try out.write(removedIds.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    applyRemoval(spark, stateDir, removedIds, extraPartitions)
-    f.delete(removalMarker(stateDir), true)
-  }
-
-  private def applyRemoval(spark: SparkSession, stateDir: String,
-                           removedIds: Seq[Long],
-                           extraPartitions: Seq[String]): Unit = {
-    val f = fs(spark, stateDir)
-    val state = spark.read.parquet(stateDir)
-    // the partition column comes back as INT when directory names fit:
-    // cast before collecting (the write below re-derives partitioning
-    // from the frame, so keeping the original column type there is fine)
-    val affected = state.filter(col("doc_id").isin(removedIds: _*))
-      .select(col("batch_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSeq
-    if (affected.isEmpty) return
-    // materialize survivors BEFORE mutating (Spark refuses to overwrite
-    // a path it is reading; a crash before any mutation changes nothing)
-    val survivors = state.filter(col("batch_id").isin(affected: _*))
-      .filter(!col("doc_id").isin(removedIds: _*))
-      .localCheckpoint(true)
-    overwritePartitions(survivors, stateDir, extraPartitions)
-    val still = survivors.select(col("batch_id").cast("long")).distinct()
-      .collect().map(_.getLong(0)).toSet
-    affected.filterNot(still).foreach(b =>
-      f.delete(new org.apache.hadoop.fs.Path(stateDir, s"batch_id=$b"), true))
-  }
 }

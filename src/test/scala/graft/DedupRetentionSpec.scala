@@ -122,5 +122,42 @@ class DedupRetentionSpec extends AnyFunSuite with SparkTestSession {
     val served = DedupStream.servedDupPairs(spark, s"$root/state")
       .as[(Long, Long, Double)].collect().toSeq
     assert(served === oneShot(docs))
+    // each batch's band keys land in its batch_id dir, not in 32 band
+    // dirs under it: `band` is a data column
+    val bands = new org.apache.hadoop.fs.Path(s"$root/state/bands")
+    val fs = bands.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = fs.listStatus(bands).filter(_.isDirectory)
+    assert(batches.nonEmpty)
+    for (b <- batches)
+      assert(fs.listStatus(b.getPath).forall(_.isFile), b.getPath.getName)
+  }
+
+  test("streaming dedup: a band-partitioned index from an earlier layout is refused, not mixed into") {
+    val root = java.nio.file.Files.createTempDirectory("graft-dedup-layout")
+    val state = s"$root/state"
+    val b0 = docs.filter($"doc_id" % 2 === 0)
+    DedupStream.processDocBatch(b0, state, 0L)
+    // rewrite bands/ as the earlier layout, partitioned by (batch_id, band)
+    val bands = new org.apache.hadoop.fs.Path(s"$state/bands")
+    val fs = bands.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val keys = DedupOps.bandKeys(DedupOps.minhashSignatures(
+      DedupOps.shingleSetsOf(b0))).withColumn("batch_id", lit(0L))
+      .localCheckpoint(true)
+    assert(fs.delete(bands, true))
+    keys.write.partitionBy("batch_id", "band").parquet(bands.toString)
+    // reading it still works: band comes from the path
+    assert(DedupStream.servedDupPairs(spark, state)
+      .as[(Long, Long, Double)].collect().toSeq === oneShot(b0))
+    def refused(op: => Unit): Unit = {
+      val msg = intercept[IllegalArgumentException](op).getMessage
+      assert(msg.contains("'bands'") && msg.contains("'band'") &&
+        msg.contains("rebuild the state from its batch inputs"), msg)
+    }
+    refused(DedupStream.compact(spark, state, 0L))
+    refused(DedupStream.processDocBatch(docs.filter($"doc_id" % 2 === 1),
+      state, 1L))
+    // nothing was mixed in: bands/ holds only the earlier layout's batch
+    assert(fs.listStatus(bands).filter(_.isDirectory).map(_.getPath.getName)
+      .toSet === Set("batch_id=0"))
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.operators.{SearchOps, SketchOps, TextOps}
 import graft.streaming.{ReportStream, SearchStream, SketchStream, StateMaintenance}
 
@@ -141,6 +142,8 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
       .write.partitionBy("batch_id").parquet(state)
     val fs = new org.apache.hadoop.fs.Path(state)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ids = new StateMaintenance.PartialTable("",
+      StructType(Seq(StructField("doc_id", LongType))))
     // crash-point state: batch 1 already rewritten to its survivor,
     // batch 0 untouched (the overwrite wrote no rows for it), the
     // `_graft_removing` marker still pending
@@ -156,13 +159,13 @@ class StateMaintenanceSpec extends AnyFunSuite with SparkTestSession {
       .as[Long].collect().toSet === Set(1L, 2L, 4L))
     // the NEXT maintenance call — no new ids — finishes the crashed
     // removal from the marker: emptied partition deleted, marker gone
-    StateMaintenance.removeDocs(spark, state, Seq.empty)
+    ids.remove(spark, state, Seq.empty)
     assert(spark.read.parquet(state).select("doc_id")
       .as[Long].collect().toSet === Set(4L))
     assert(batchDirs(state) === Set(1L))
     assert(!fs.exists(new org.apache.hadoop.fs.Path(state, "_graft_removing")))
     // and replaying the SAME removal afterwards is a no-op (idempotent)
-    StateMaintenance.removeDocs(spark, state, Seq(1L, 2L, 3L))
+    ids.remove(spark, state, Seq(1L, 2L, 3L))
     assert(spark.read.parquet(state).select("doc_id")
       .as[Long].collect().toSet === Set(4L))
     assert(batchDirs(state) === Set(1L))
