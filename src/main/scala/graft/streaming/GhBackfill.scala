@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.functions.GhFunctions.hourKey
 
 /** The reference's batch backfill lifecycle (`update-contributor-scores.js`,
   * SURVEY.md §3.2) as idempotent partitioned-table maintenance:
@@ -18,6 +19,11 @@ import org.apache.spark.sql.types._
   *    the reference's `EXISTS hourKey` check. Catalyst prunes *input*
   *    partitions; output-existence pruning is driver-side control flow
   *    by design (SURVEY §4.1) — a filesystem listing, no data read.
+  *  - a backfill reads its input once: the done hours drop out inside
+  *    the plan, the hour × login scores are materialized once, and the
+  *    hours to write (and their days) are read off those rows. The
+  *    hour write is as wide as the cores and keeps each hour in one
+  *    task, so each hour partition is one file.
   *  - retention (`EXPIREAT` midnight, K4/W6) = dropping partition
   *    directories older than a cutoff; no row-level TTL machinery.
   *  - the daily rollup is recomputed per touched day FROM the hourly
@@ -114,7 +120,13 @@ object GhBackfill {
     * then recomputed from their hours and stored in the day table. A
     * table without a day table yet gets every day it holds stored. */
   def writeHourlyScores(spark: SparkSession, events: DataFrame,
-                        outDir: String, days: Seq[String]): Unit = {
+                        outDir: String, days: Seq[String]): Unit =
+    writeScores(spark, hourlyScoresPartitioned(events), outDir, days)
+
+  /** `writeHourlyScores` over rows already scored by
+    * `hourlyScoresPartitioned`. */
+  private def writeScores(spark: SparkSession, scores: DataFrame,
+                          outDir: String, days: Seq[String]): Unit = {
     val out = new Path(outDir)
     val fs = fileSystem(spark, out)
     val dayDir = new Path(out, DayTable)
@@ -129,7 +141,14 @@ object GhBackfill {
     // leaves _SUCCESS in its staging dir, which silently stripped the
     // completion marker from ensure-built artifacts (the r7 phrase-
     // index FAILED_READ_FILE flake).
-    hourlyScoresPartitioned(events)
+    scores
+      // the hours go out from every core: AQE's size-based coalescing
+      // folds the small score rows into one task, which then writes
+      // each hour's file in turn, but it never coalesces an explicit
+      // width; hashing by the hour keys keeps each hour in one task,
+      // so each hour is still one file
+      .repartition(spark.sparkContext.defaultParallelism,
+        col("score_date"), col("score_hour"))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("score_date", "score_hour")
@@ -143,31 +162,32 @@ object GhBackfill {
         .parquet(dayDir.toString)
   }
 
-  /** Backfill with output-existence pruning: recompute only events whose
+  /** Backfill with output-existence pruning: score only events whose
     * hour partition is not yet materialized (pass `force` to reprocess
-    * anyway — safe either way because the write is an overwrite). */
+    * anyway — safe either way because the write is an overwrite), and
+    * return the number of hour partitions written.
+    *
+    * One pass over `events`: the done hours (a listing) are dropped in
+    * the plan, and the scores are materialized once. They are hour ×
+    * login rows, sized by the output, so the hours to write and their
+    * days are read off them, not off a second scan of the input; the
+    * hour write then reads them too. An hour whose events all drop out
+    * of the scoring (only non-scoring types, or only batch-bot logins)
+    * writes no partition, so it stays unmaterialized and every later
+    * run scans it again, as the reference re-downloads an hour whose
+    * key never got created. */
   def backfillMissingHours(spark: SparkSession, events: DataFrame,
                            outDir: String, force: Boolean = false): Int = {
     val done = if (force) Set.empty[(String, Int)]
                else existingHourPartitions(spark, outDir)
-    val withPart = events
-      .filter(col("created_at").isNotNull)   // no hour bucket → no partition
-      .withColumn("score_date",
-        date_format(date_trunc("hour", col("created_at")), "yyyy-MM-dd"))
-      .withColumn("score_hour", hour(col("created_at")))
-    val missing = withPart
-      .select(col("score_date"), col("score_hour")).distinct()
+    val scores = hourlyScoresPartitioned(events.filter(
+        !hourKey(col("created_at")).isin(done.map { case (d, h) => s"$d:$h" }.toSeq: _*)))
+      .localCheckpoint(true)
+    val written = scores.select("score_date", "score_hour").distinct()
       .collect().map(r => (r.getString(0), r.getInt(1)))
-      .filterNot(done)
-    if (missing.nonEmpty) {
-      val missingSet = missing.toSet
-      val todo = withPart.filter(
-        concat_ws(":", col("score_date"), col("score_hour"))
-          .isin(missingSet.map { case (d, h) => s"$d:$h" }.toSeq: _*))
-        .drop("score_date", "score_hour")
-      writeHourlyScores(spark, todo, outDir, missing.map(_._1).distinct.toSeq)
-    }
-    missing.length
+    if (written.nonEmpty)
+      writeScores(spark, scores, outDir, written.map(_._1).distinct.toSeq)
+    written.length
   }
 
   /** Retention (K4/W6): drop hourly partitions with score_date strictly

@@ -53,6 +53,55 @@ class GhBackfillSpec extends AnyFunSuite with SparkTestSession {
     assertDayTableServed(spark, out)
   }
 
+  test("an hour whose events all drop out of scoring is not reported as written") {
+    // the fixture plus hour 5 of day 2: a WatchEvent, and a push by a
+    // login only the batch bot filter drops; cleanEvents keeps both
+    val dir = Files.createTempDirectory("graft-bf-unscored")
+    Files.copy(getClass.getResourceAsStream("/gh_events.ndjson"),
+      dir.resolve("gh_events.ndjson"))
+    Files.write(dir.resolve("unscored.ndjson"), java.util.Arrays.asList(
+      event("2001", "WatchEvent", "stargazer", "2025-08-11T05:10:00Z"),
+      event("2002", "PushEvent", "renovate", "2025-08-11T05:20:00Z")))
+    val events = GhIngest.dedupEvents(GhIngest.cleanEvents(
+      GhIngest.readEventsJson(spark, dir.toString)))
+    assert(events.count() === cleanedEvents.count() + 2)
+    val out = Files.createTempDirectory("graft-bf-unscored").toString + "/hourly"
+    assert(GhBackfill.backfillMissingHours(spark, events, out) === 4)
+    assert(GhBackfill.existingHourPartitions(spark, out) === Set(
+      ("2025-08-10", 12), ("2025-08-10", 13), ("2025-08-10", 23),
+      ("2025-08-11", 0)))
+    // the unscored hour is scanned again, and still writes nothing
+    assert(GhBackfill.backfillMissingHours(spark, events, out) === 0)
+  }
+
+  test("a backfill scans its input once") {
+    val scanned = spark.sparkContext.longAccumulator("backfill-scanned-rows")
+    val probe = udf(() => { scanned.add(1); true }).asNondeterministic()
+    val events = cleanedEvents.filter(probe())
+    val rows = cleanedEvents.count()
+    val out = Files.createTempDirectory("graft-bf-once").toString + "/hourly"
+    assert(GhBackfill.backfillMissingHours(spark, events, out) === 4)
+    assert(scanned.value === rows)
+    scanned.reset()
+    assert(GhBackfill.backfillMissingHours(spark, events, out, force = true) === 4)
+    assert(scanned.value === rows)
+  }
+
+  test("each hour partition is one parquet file") {
+    val hours = Map(("2025-08-10", 12) -> 1, ("2025-08-10", 13) -> 1,
+      ("2025-08-10", 23) -> 1, ("2025-08-11", 0) -> 1)
+    val out = Files.createTempDirectory("graft-bf-files").toString + "/hourly"
+    GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
+    assert(hourFiles(out) === hours)
+    // the live scoring shape: one hour, several logins
+    val one = Files.createTempDirectory("graft-bf-files1").toString + "/hourly"
+    GhBackfill.writeHourlyScores(spark,
+      cleanedEvents.filter(date_format($"created_at", "yyyy-MM-dd") === "2025-08-10" &&
+        hour($"created_at") === 12), one, Seq("2025-08-10"))
+    assert(hourFiles(one) === Map(("2025-08-10", 12) -> 1))
+    assert(spark.read.parquet(one).count() > 1)
+  }
+
   test("partition listing sees exactly the written (date, hour) pairs") {
     val out = Files.createTempDirectory("graft-bf2").toString + "/hourly"
     GhBackfill.backfillMissingHours(spark, cleanedEvents, out)
@@ -258,6 +307,23 @@ object GhBackfillSpec {
   def dayDirs(out: String): Set[String] =
     Option(new java.io.File(out, GhBackfill.DayTable).list())
       .fold(Set.empty[String])(_.toSet.filter(_.startsWith("day=")))
+
+  /** One GitHub event as an ndjson line. */
+  def event(id: String, kind: String, login: String, createdAt: String): String =
+    s"""{"id": "$id", "type": "$kind", "actor": {"id": $id, "login": "$login"}, """ +
+      s""""repo": {"id": 10, "name": "x/y", "url": "r"}, "payload": {}, """ +
+      s""""public": true, "created_at": "$createdAt"}"""
+
+  /** Parquet files per (date, hour) partition of an hourly table. */
+  def hourFiles(out: String): Map[(String, Int), Int] = {
+    def dirs(d: java.io.File, prefix: String) =
+      Option(d.listFiles()).toSeq.flatten.filter(f => f.isDirectory && f.getName.startsWith(prefix))
+    (for {
+      date <- dirs(new java.io.File(out), "score_date=")
+      hour <- dirs(date, "score_hour=")
+    } yield (date.getName.stripPrefix("score_date="), hour.getName.stripPrefix("score_hour=").toInt) ->
+      hour.list().count(_.endsWith(".parquet"))).toMap
+  }
 
   def deleteTree(dir: String): Unit =
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
