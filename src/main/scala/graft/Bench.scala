@@ -82,12 +82,9 @@ object Bench {
     }
     // phase boundary: warmup executed the same instrumented queries,
     // so barrier-drain its listener events and drop them — only
-    // measured-phase (sfDir) counts may reach the artifact. The
-    // counted-pin verdict register is synchronous (driver-side), so a
-    // plain clear suffices there.
+    // measured-phase (sfDir) counts may reach the artifact.
     val warmupDrained = observed.drain("graft_bench_drain_warmup")
     observed.clear()
-    graft.operators.CountedHint.verdicts.clear()
     // Warm the BENCH scale factor's files too (byte-level pre-read →
     // OS page cache): the sf0.001 warmup never touches the sfDir
     // parquet, so without this the first query to scan each bench
@@ -231,7 +228,7 @@ object Bench {
     // the corpus dir of the whole map is sfDir — recorded so a sweep
     // reader can detect a mismatched harvest
     val obsMeta =
-      s""","observed_dir":${Json.str(sfDir)},"observed_drained":${obsDrained && warmupDrained},"counted_pins":${graft.operators.CountedHint.verdictsJson}"""
+      s""","observed_dir":${Json.str(sfDir)},"observed_drained":${obsDrained && warmupDrained}"""
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fs,"unstable":$unstable,"observed":$obsJson$obsMeta,"reps":$reps,"warmup":$warmedUp$duckJson,"sf":${Json.str(sfDir)}}"""
     // The full line grows with the query count and a tail-windowed

@@ -85,7 +85,6 @@ object DevProf {
     // could leave a stale warmup-scale value behind a lagging bus)
     observed.drain("devprof_drain_warmup")
     observed.clear()
-    graft.operators.CountedHint.verdicts.clear()
     for (i <- 1 to reps) {
       val before = M.snapshot
       val t0 = System.nanoTime()
@@ -114,7 +113,6 @@ object DevProf {
     println(s"""DEVPROF {"q":${Json.str(name)},"dir":${Json.str(sfDir)},""" +
       s""""reps":$reps,"spill_mem":$sm,"spill_disk":$sd,""" +
       s""""shuffle_write":$sw,"shuffle_read":$sr,""" +
-      s""""observed":${observed.json},"observed_drained":$drained,""" +
-      s""""counted_pins":${graft.operators.CountedHint.verdictsJson}}""")
+      s""""observed":${observed.json},"observed_drained":$drained}""")
   }
 }

@@ -22,15 +22,15 @@ object SparkEntry {
     * training-data-pipeline extensions (dedup, similarity, text,
     * multimodal).
     *
-    * CONSTRUCTION IS NOT FREE for every entry: queries that pin
-    * broadcasts BY MEASUREMENT (the `verifyJaccardCounted` pattern —
-    * x56, and the x69/x72 mining chain) localCheckpoint-and-COUNT an
-    * intermediate frame while the DataFrame is being BUILT, i.e. they
-    * run Spark jobs before any action on the returned frame. Plan-only
-    * consumers (PlanSweep, plan audits, explain tooling) therefore
-    * execute those candidate stages, and the returned plan's lineage
-    * is truncated at the checkpoint. This is by design: the measured
-    * count is what makes the broadcast pin safe at scale. */
+    * Building an entry's DataFrame plans it; join strategies are left
+    * to AQE, which broadcasts a side from its measured size at run
+    * time, except x56, which counts its candidate pairs while the
+    * frame is built to pin the verify broadcast AQE would not choose
+    * at scale (DedupOps.VerifyBroadcastMaxPairs). Entries that serve
+    * from a persisted artifact (x17, x57, x69/x72's IVF index, ...)
+    * build it on first use, x61 runs its k-center rounds while the
+    * frame is built, and x72 materializes its x05 pairs then;
+    * plan-only consumers execute those jobs. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     CoreQueries.queries ++ DedupOps.queries ++ SimilarityOps.queries ++
       TextOps.queries ++ MultimodalOps.queries ++ SketchOps.queries ++

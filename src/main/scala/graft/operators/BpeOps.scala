@@ -138,6 +138,16 @@ object BpeOps {
     (mergeTable, vocab)
   }
 
+  /** Row cap for the segmentation broadcasts: a row carries the word
+    * plus its symbol array (~500 B hashed at web-text word lengths), so
+    * 4M rows ≈ 2 GiB, 4× under Spark's 8 GiB broadcast cap. The counted
+    * pin stays here because it measured faster than leaving the joins
+    * to AQE: BpeSegmentRun `segment_sec` medians, pinned against
+    * unpinned, 10 alternating pairs each, 1.470 against 1.415 s at
+    * sf0.1 and 1.902 against 2.666 s (0 of 10 pairs won unpinned) at
+    * the 5× corpus (the counted-pins sweep under dev/sweeps/). */
+  val SegBroadcastMaxWords = 4000000L
+
   /** Segment a (doc_id, text) corpus with a TRAINED tokenizer
     * (`merges`, `trainedVocab` — bpeTrain's two outputs): the corpus's
     * distinct words join the vocab segmentation (each word segmented
@@ -152,12 +162,11 @@ object BpeOps {
     * Scale shape: the vocab and segmentation tables are word-TYPE-
     * proportional — Heaps' law puts web-scale type counts at 10⁸–10⁹
     * (inflated by URLs and typos) — so neither is assumed broadcastable:
-    * the trained vocab is checkpointed and COUNTED once (the verdict
-    * pins both the OOV anti-join hint and, combined with the counted
-    * segTable, the final occurrence join), and above
-    * [[CountedHint.SegBroadcastMaxWords]] both joins shuffle on `word`
-    * automatically. The merge list stays a one-row broadcast — bounded
-    * by construction (nMerges rows folded into one array). */
+    * the trained vocab and the segmentation table are each counted
+    * ([[CountedHint]]) and pinned as broadcasts only under
+    * [[SegBroadcastMaxWords]]; above it both joins shuffle on `word`.
+    * The merge list stays a one-row broadcast — bounded by
+    * construction (nMerges rows folded into one array). */
   def bpeSegment(docsFrame: DataFrame, merges: DataFrame,
                  trainedVocab: DataFrame): DataFrame = {
     val s = docsFrame.sparkSession
@@ -168,16 +177,13 @@ object BpeOps {
     val mergeList = merges
       .agg(array_sort(collect_list(struct($"round", $"a", $"b"))).as("ms"))
     val tv = trainedVocab.select($"word", $"syms").localCheckpoint(false)
-    val hintedV = CountedHint.fn(s, tv.count(),
-      CountedHint.SegCapKey, CountedHint.SegBroadcastMaxWords,
-      "bpe_trained_vocab")
+    val hintedV = CountedHint.fn(tv.count(), SegBroadcastMaxWords)
     val oovSegs = words.select($"word").distinct()
       .join(hintedV(tv.select($"word")), Seq("word"), "left_anti")
       .crossJoin(broadcast(mergeList))
       .select($"word", expr(applyAllMergesExpr).as("syms"))
-    val segTable = CountedHint.counted(tv.unionByName(oovSegs),
-      CountedHint.SegCapKey, CountedHint.SegBroadcastMaxWords,
-      "bpe_segtable")
+    val segTable =
+      CountedHint.counted(tv.unionByName(oovSegs), SegBroadcastMaxWords)
     words.join(segTable, Seq("word"))
       .select($"doc_id", $"word", $"syms")
   }

@@ -1,103 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.broadcast
 
-/** The counted-cap broadcast discipline, packaged (SCALE.md rule: a
-  * pinned broadcast needs a bound BY CONSTRUCTION or BY MEASUREMENT —
-  * never by hope). A frame whose cardinality grows with a corpus
-  * property (dup-cluster membership, duplicated-window count, word-type
-  * count, anchor count) is localCheckpoint-materialized and COUNTED
-  * before the join is planned; the broadcast hint is pinned only when
-  * the measured row count sits at or under a conf-overridable cap.
-  * Above the cap the join shuffles on its keys AUTOMATICALLY — no
-  * global conf flip, no manual edit on a pathological corpus. The
-  * materialization the count forces is returned, so the counting job
-  * is reused verbatim by the join (the verifyJaccardCounted /
-  * hardNegativesFor pattern, DedupOps.scala / SimilarityOps.scala).
-  *
-  * Disabling `spark.sql.autoBroadcastJoinThreshold` still drops every
-  * measured hint (belt over the measured braces), so A/B specs can
-  * force the shuffle branch two independent ways; each cap key is also
-  * settable to 0 to simulate an over-cap corpus at fixture scale.
-  */
+/** The counted broadcast pin, kept for the sites where it measured
+  * faster than AQE's own choice (x56's verify join, see
+  * [[DedupOps.VerifyBroadcastMaxPairs]], the x17 label rejoins, see
+  * [[DedupOps.LabelBroadcastMaxRows]], and BPE segmentation, see
+  * [[BpeOps.bpeSegment]]): the frame is localCheckpoint-materialized
+  * and COUNTED while the DataFrame is built, and the broadcast hint is
+  * pinned only when the count sits at or under a constant cap. AQE
+  * re-elects a broadcast only under its ~10 MB adaptive threshold; a
+  * pin wins where the frame is larger than that but still far under
+  * Spark's 8 GiB broadcast cap. Every other corpus-coupled join carries
+  * no hint: AQE broadcasts a side from its measured size at run time. */
 object CountedHint {
 
-  /** Row cap for x17's cluster-label broadcasts (`dedupClustersOf`,
-    * `ensureClusterIndex`'s build/refresh label joins, the takedown
-    * closure's listed-rep probe). A label row is two longs (~16 B raw,
-    * ~100 B in the hashed relation): 20M rows ≈ 2 GiB — a 4× margin
-    * under Spark's 8 GiB broadcast cap. The label frame is one row per
-    * EDGE-INCIDENT doc, which a dup-heavy crawl (30–50% dup pre-dedup)
-    * grows toward corpus size — exactly why it is counted, not
-    * assumed. Conf: spark.graft.labelBroadcastMaxRows. */
-  val LabelBroadcastMaxRows = 20000000L
-  val LabelCapKey = "spark.graft.labelBroadcastMaxRows"
+  /** The pin decision for an already-measured row count. */
+  def fn(rows: Long, cap: Long): DataFrame => DataFrame =
+    if (rows <= cap) broadcast(_) else identity
 
-  /** Row cap for x26's duplicated-window-key relation (the ≥2-distinct-
-    * doc survivors of the block-hash aggregate — (long, long) rows,
-    * same 20M ≈ 2 GiB arithmetic). Grows with the corpus's duplicated-
-    * window count, which boilerplate-heavy crawls maximize. Conf:
-    * spark.graft.dupKeyBroadcastMaxRows. */
-  val DupKeyBroadcastMaxRows = 20000000L
-  val DupKeyCapKey = "spark.graft.dupKeyBroadcastMaxRows"
-
-  /** Row cap for BPE's word-type-proportional segmentation table
-    * (`bpeSegment`'s trainedVocab / segTable). A row carries the word
-    * plus its symbol array (~500 B hashed at web-text word lengths):
-    * 4M rows ≈ 2 GiB. Word TYPES follow Heaps' law — 10⁸–10⁹ at web
-    * scale, inflated by URLs and typos — so the table is counted per
-    * corpus, never assumed small. Conf: spark.graft.segBroadcastMaxWords. */
-  val SegBroadcastMaxWords = 4000000L
-  val SegCapKey = "spark.graft.segBroadcastMaxWords"
-
-  private def cap(s: SparkSession, key: String, default: Long): Long =
-    s.conf.getOption(key).map(_.toLong).getOrElse(default)
-
-  private def hintsOn(s: SparkSession): Boolean =
-    s.sessionState.conf.autoBroadcastJoinThreshold > 0
-
-  /** Last verdict per pin SITE, as one JSON object each
-    * ({"rows":N,"cap":C,"broadcast":B}) — Bench/DevProf surface the
-    * map in their artifact lines (`counted_pins`), so every sweep rung
-    * records which branch each measured pin actually took, with its
-    * measured count, instead of the branch being inferred from plan
-    * text. Values are deterministic per corpus; last-wins is safe. */
-  val verdicts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def record(site: String, rows: Long, capRows: Long,
-             pinned: Boolean): Unit =
-    verdicts.put(site,
-      s"""{"rows":$rows,"cap":$capRows,"broadcast":$pinned}""")
-
-  /** The verdicts map as one sorted JSON object (artifact lines). */
-  def verdictsJson: String = {
-    import scala.jdk.CollectionConverters._
-    verdicts.asScala.toSeq.sortBy(_._1)
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-  }
-
-  /** The pin verdict + hint function for an ALREADY-MEASURED count
-    * (callers that checkpoint a frame anyway — e.g. ccLabelsOf's
-    * converged labels — pass its count and hint several projections of
-    * it with one measurement). `site` labels the verdict register
-    * entry. */
-  def fn(s: SparkSession, measuredRows: Long, key: String,
-         default: Long, site: String = ""): DataFrame => DataFrame = {
-    val c = cap(s, key, default)
-    val pinned = hintsOn(s) && measuredRows <= c
-    if (site.nonEmpty) record(site, measuredRows, c, pinned)
-    if (pinned) broadcast(_) else identity
-  }
-
-  /** Materialize, count, and pin one frame in place: the lazy
-    * localCheckpoint the count forces is reused verbatim by the join
-    * that consumes the returned frame. */
-  def counted(df: DataFrame, key: String, default: Long,
-              site: String = ""): DataFrame = {
+  /** Materialize, count and pin one frame: the join that consumes the
+    * returned frame reuses the checkpoint the count forces. */
+  def counted(df: DataFrame, cap: Long): DataFrame = {
     val mat = df.localCheckpoint(false)
-    fn(mat.sparkSession, mat.count(), key, default, site)(mat)
+    fn(mat.count(), cap)(mat)
   }
 }

@@ -174,50 +174,12 @@ object DedupOps {
     * join selection makes the right call per run: under the adaptive
     * broadcast threshold the shuffled side converts to a broadcast
     * join at runtime (bench scale), over it the join stays a shuffle
-    * on doc_id (the corpus is still scanned once either way). */
+    * on doc_id (the corpus is still scanned once either way). A caller
+    * that counted its candidates passes the pin as `meltSide` (x56,
+    * [[VerifyBroadcastMaxPairs]]). */
   def verifyJaccard(candidates: DataFrame, sets: DataFrame,
-                    threshold: Double): DataFrame =
-    verifyJaccardImpl(candidates, sets, threshold, identity)
-
-  /** Candidate-pair count under which [[verifyJaccardCounted]] pins
-    * the melted side as a broadcast: 10M pairs ≈ 20M melted rows ≈
-    * ~2 GB hashed relation — a 4× margin under Spark's 8 GiB
-    * broadcast cap. Conf-overridable (spark.graft.
-    * verifyBroadcastMaxPairs) so specs can force both branches. */
-  val VerifyBroadcastMaxPairs = 10000000L
-
-  private def verifyBroadcastCap(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.verifyBroadcastMaxPairs").map(_.toLong)
-      .getOrElse(VerifyBroadcastMaxPairs)
-
-  /** verifyJaccard with the cheap path recovered by MEASUREMENT: the
-    * candidate frame is localCheckpoint-materialized and COUNTED
-    * before the join is planned, and the broadcast is pinned only
-    * when the actual pair count sits under [[VerifyBroadcastMaxPairs]]
-    * — never from a size assumption. This restores x56's 125× fast
-    * path (the r14 hint removal cost it 37→63 s even though its
-    * cross-set candidates stayed genuinely small, because AQE's
-    * dynamic selection only re-elects broadcast under the ~10 MB
-    * adaptive threshold) while keeping the crash-proofing: over the
-    * cap, the join falls back to the same AQE-adaptive plan x02 runs
-    * (x02's own 125× candidates — 10 GiB melted — exceed the cap and
-    * never pin). The count is not wasted work: the checkpoint it
-    * forces is the band-join output, reused verbatim by the verify
-    * join. SCALE.md's rule stands refined: a pinned broadcast needs a
-    * bound BY CONSTRUCTION or BY MEASUREMENT — not by hope. */
-  def verifyJaccardCounted(candidates: DataFrame, sets: DataFrame,
-                           threshold: Double): DataFrame = {
-    val cand = candidates.localCheckpoint(false)
-    val n = cand.count()
-    val capRows = verifyBroadcastCap(cand.sparkSession)
-    val small = n <= capRows
-    CountedHint.record("verify_candidates", n, capRows, small)
-    verifyJaccardImpl(cand, sets, threshold,
-      if (small) broadcast(_) else identity)
-  }
-
-  private def verifyJaccardImpl(candidates: DataFrame, sets: DataFrame,
-      threshold: Double, meltSide: DataFrame => DataFrame): DataFrame = {
+                    threshold: Double,
+                    meltSide: DataFrame => DataFrame = identity): DataFrame = {
     val melted = candidates
       .select(col("da"), col("db"),
         explode(array(
@@ -280,8 +242,26 @@ object DedupOps {
                     docs.filter($"doc_id" % 2 === 1))
   }
 
+  /** Candidate-pair count at or under which x56 pins its melted
+    * verify side as a broadcast: 10M pairs ≈ 20M melted rows ≈ 2 GB
+    * hashed, a 4× margin under Spark's 8 GiB broadcast cap. The pin is
+    * the one AQE cannot make itself: it re-elects a broadcast only
+    * under its ~10 MB adaptive threshold, which x56's candidates pass
+    * at the 125× rung (1.92 M pairs). DevProf medians there, 3
+    * alternating pairs on a 4-core host: 43.3 s pinned against 78.1 s
+    * left to AQE, which shuffles and spills 3.8 GB (0 of 3 pairs to
+    * AQE; dev/sweeps/pr10_counted_pins_ab.json); r14 measured the same
+    * loss as 34.1 s against 62.9 s. Under 10 MB (sf0.1 to 25×) the two
+    * plans are the same broadcast. */
+  val VerifyBroadcastMaxPairs = 10000000L
+
   /** The same plan for arbitrary corpus/batch (doc_id, text) frames
-    * (the streaming ingest gate's equivalence witness). */
+    * (the streaming ingest gate's equivalence witness). Each side's
+    * shingle sets are checkpointed, so their tokenize and hash pass
+    * runs once for the band keys and the verify join; the candidate
+    * pairs are checkpointed and counted while the frame is built, for
+    * the [[VerifyBroadcastMaxPairs]] pin ([[CountedHint]]), and the
+    * verify join reuses that checkpoint. */
   def snapshotDedupOf(corpus: DataFrame, batch: DataFrame): DataFrame = {
     val cSets = shingleSetsOf(corpus).localCheckpoint(false)
     val bSets = shingleSetsOf(batch).localCheckpoint(false)
@@ -290,7 +270,9 @@ object DedupOps {
         .withColumnRenamed("doc_id", "cdoc"), Seq("band", "key"))
       .select(col("doc_id").as("da"), col("cdoc").as("db"))
       .distinct()
-    verifyJaccardCounted(cand, cSets.unionAll(bSets), JaccardThreshold)
+      .localCheckpoint(false)
+    verifyJaccard(cand, cSets.unionAll(bSets), JaccardThreshold,
+      CountedHint.fn(cand.count(), VerifyBroadcastMaxPairs))
       .select(col("da").as("new_id"), col("db").as("dup_of"),
         col("jaccard"))
       // in-job per-pair denominator for the sweep ladder (x02 rule)
@@ -423,20 +405,28 @@ object DedupOps {
       .orderBy($"doc_id")
   }
 
-  /** The same labeling for an arbitrary (doc_id, text) frame. The
-    * label rejoin is counted-cap-pinned: ccLabelsOf returns an eagerly
-    * checkpointed frame, so the count is one cheap RDD action, and the
-    * broadcast is pinned only when the edge-incident label count sits
-    * under [[CountedHint.LabelBroadcastMaxRows]] — on a dup-heavy
-    * corpus (30–50% of a pre-dedup crawl) the join shuffles on doc_id
-    * automatically. */
+  /** Label-row cap under which the label rejoins pin the labels as a
+    * broadcast: 20 M two-long rows ≈ 2 GiB hashed, 4× under Spark's
+    * 8 GiB broadcast cap. The labels are one row per edge-incident doc,
+    * which a dup-heavy crawl (30–50% dup pre-dedup) grows toward corpus
+    * size; AQE broadcasts them only while they sit under its ~10 MB
+    * adaptive threshold (about 650 k rows) and shuffles both sides on
+    * doc_id past it. The rejoin alone (dev/label_join_ab.py: docs
+    * LEFT JOIN labels, pinned against unpinned, 10 alternating pairs
+    * in one JVM on a 4-core host) at 3.1 M label rows, the 625× rung's
+    * size: 1.21 against 1.85 s, 10 of 10 to the pin. At 625 k rows
+    * (125×), where AQE broadcasts too, the unpinned join was
+    * 0.35 → 0.30 s (the count's cost). `ccLabelsOf` returns a checkpointed frame, so the count is
+    * one action over materialized rows. */
+  val LabelBroadcastMaxRows = 20000000L
+
+  /** The same labeling for an arbitrary (doc_id, text) frame, with the
+    * label rejoin pinned under [[LabelBroadcastMaxRows]]. */
   def dedupClustersOf(docsFrame: DataFrame): DataFrame = {
     val s = docsFrame.sparkSession
     import s.implicits._
     val labels = ccLabelsOf(dedupMinhashLshOf(docsFrame).select($"da", $"db"))
-    val hintedL = CountedHint.fn(s, labels.count(),
-      CountedHint.LabelCapKey, CountedHint.LabelBroadcastMaxRows,
-      "x17_labels_inline")
+    val hintedL = CountedHint.fn(labels.count(), LabelBroadcastMaxRows)
     docsFrame.select($"doc_id")
       .join(hintedL(labels.select($"doc_id", $"rep".as("erep"))),
         Seq("doc_id"), "left")
@@ -645,14 +635,11 @@ object DedupOps {
             .join(oldLabels.select($"doc_id".as("db"), $"rep".as("brep")),
               Seq("db"))
             .select($"da", $"brep".as("db"))
-          val comp = ccLabelsOf(within.unionAll(crossC))
           // comp is delta-edge-bounded, but a bulk append can make the
-          // delta itself corpus-sized — so its two rejoin hints ride
-          // the same counted cap (comp is eagerly checkpointed by
-          // ccLabelsOf; one count pins both projections)
-          val hintedC = CountedHint.fn(s, comp.count(),
-            CountedHint.LabelCapKey, CountedHint.LabelBroadcastMaxRows,
-            "x17_labels_build_delta")
+          // delta itself corpus-sized, so its two rejoins ride the
+          // counted label cap (one count pins both projections)
+          val comp = ccLabelsOf(within.unionAll(crossC))
+          val hintedC = CountedHint.fn(comp.count(), LabelBroadcastMaxRows)
           cSets.unionAll(bSets).write.mode("overwrite").parquet(s"$st/sets")
           s.read.parquet(s"$bpath/bands").select($"doc_id", $"band", $"key")
             .unionAll(bBands.select($"doc_id", $"band", $"key"))
@@ -680,14 +667,8 @@ object DedupOps {
               setsW, JaccardThreshold)
             .select($"da", $"db")
           val cc = ccLabelsOf(edges)
-          // the full-build label rejoin: cc is one row per
-          // edge-incident doc — corpus-dup-proportional, so the hint
-          // is pinned only under the MEASURED label cap (cc is eagerly
-          // checkpointed by ccLabelsOf, the count is one RDD action);
-          // above it the join shuffles on doc_id with no conf flip
-          val hintedCc = CountedHint.fn(s, cc.count(),
-            CountedHint.LabelCapKey, CountedHint.LabelBroadcastMaxRows,
-            "x17_labels_build_full")
+          // the full-build label rejoin, pinned under the counted cap
+          val hintedCc = CountedHint.fn(cc.count(), LabelBroadcastMaxRows)
           docsAll.select($"doc_id")
             .join(hintedCc(cc.select($"doc_id", $"rep".as("erep"))),
               Seq("doc_id"), "left")
@@ -701,18 +682,14 @@ object DedupOps {
   def removalPropagation(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // Served from the materialized labels: the only corpus-sized work
-    // is one scan of the label relation + the broadcast rep probe —
-    // the convergence loop never runs on the query path (plan-pinned).
+    // is one scan of the label relation + the rep probe — the
+    // convergence loop never runs on the query path (plan-pinned).
+    // The listed-rep set is takedown-list-proportional (a mass
+    // takedown scales with the corpus), so AQE sizes the probe join.
     val labels = ArtifactBuild.readCached(s, s"${ensureClusterIndex(s, d)}/labels")
     val isListed = (c: Column) => c % RemovalIdStride === 0
-    // the listed-rep probe is takedown-list-proportional — external
-    // feeds are usually tiny, but the demo predicate (and a mass
-    // takedown) scales with the corpus, so it is counted, not assumed:
-    // the checkpoint the count forces is reused verbatim by the join
-    val listedReps = CountedHint.counted(
-      labels.filter(isListed($"doc_id")).select($"rep").distinct(),
-      CountedHint.LabelCapKey, CountedHint.LabelBroadcastMaxRows,
-      "x57_listed_reps")
+    val listedReps =
+      labels.filter(isListed($"doc_id")).select($"rep").distinct()
     labels.join(listedReps, Seq("rep"))
       .select($"doc_id", $"rep",
         when(isListed($"doc_id"), lit("listed"))
@@ -727,10 +704,8 @@ object DedupOps {
     val s = docsFrame.sparkSession
     import s.implicits._
     val labels = dedupClustersOf(docsFrame) // (doc_id, rep) for EVERY doc
-    val listedReps = CountedHint.counted(
-      labels.filter(isListed($"doc_id")).select($"rep").distinct(),
-      CountedHint.LabelCapKey, CountedHint.LabelBroadcastMaxRows,
-      "x57_listed_reps_of")
+    val listedReps =
+      labels.filter(isListed($"doc_id")).select($"rep").distinct()
     labels.join(listedReps, Seq("rep"))
       .select($"doc_id", $"rep",
         when(isListed($"doc_id"), lit("listed"))
@@ -878,30 +853,28 @@ object DedupOps {
     * fingerprint path sets). The duplicated-key relation is the aggregate's
     * ≥2-distinct-doc survivors — tiny whenever duplication is the
     * exception, but it GROWS with the corpus's duplicated-window count
-    * (which boilerplate-heavy crawls maximize), so the count-back hint
-    * is pinned by MEASUREMENT, never assumption: the survivor frame is
-    * checkpointed and counted (the materialization is reused verbatim
-    * by the join), and above [[CountedHint.DupKeyBroadcastMaxRows]]
-    * the join degrades to a shuffle on the same key automatically —
-    * no manual edit on a pathological corpus. */
+    * (which boilerplate-heavy crawls maximize), so the count-back join
+    * carries no hint: AQE broadcasts the survivors while they are
+    * small and shuffles on the key once they are not. */
   def dedupBlocks(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // lazily checkpointed: the window explode feeds both the dup-key
-    // aggregate and the count-back join — materialize the (long, long)
-    // rows once instead of tokenizing + hashing the corpus twice
+    // the window explode feeds both the dup-key aggregate and the
+    // count-back join. Both read `words`' one rebalance exchange, which
+    // AQE runs once, but the tokenize and BlockWindowHashes pass after
+    // it runs once per consumer. Left unmaterialized it still measured
+    // faster than the checkpoint that ran it once, and building the
+    // frame runs no job (DevProf medians, 10 alternating pairs, 4
+    // cores: sf0.1 1.052 → 0.946 s, 5× 2.357 → 2.076 s, 25× 4.862 →
+    // 4.082 s); re-measure at 125×, where the doubled pass is 5× longer.
     val wins = words(s, d).filter(size($"w") >= BlockWords)
       .select($"doc_id", explode(call_function(
         graft.plans.GraftExpressions.BlockHashesFn,
         $"w", lit(BlockWords))).as("k"))
-      .localCheckpoint(false)
     // ≥2 distinct docs ⟺ min(doc_id) < max(doc_id): one plain agg pass,
     // not the distinct-rewrite Expand a countDistinct would plan
-    val dup = CountedHint.counted(
-      wins.groupBy($"k")
-        .agg(min($"doc_id").as("mn"), max($"doc_id").as("mx"))
-        .filter($"mn" < $"mx").select($"k", lit(1L).as("dup")),
-      CountedHint.DupKeyCapKey, CountedHint.DupKeyBroadcastMaxRows,
-      "x26_dup_keys")
+    val dup = wins.groupBy($"k")
+      .agg(min($"doc_id").as("mn"), max($"doc_id").as("mx"))
+      .filter($"mn" < $"mx").select($"k", lit(1L).as("dup"))
     wins.join(dup, Seq("k"), "left")
       .groupBy($"doc_id")
       .agg(count("*").as("n_windows"),
@@ -967,9 +940,7 @@ object DedupOps {
     // to the keyed shuffle automatically. (A counted-cap pin was
     // measured here and rejected: the count's construction barrier
     // serializes the df aggregate ahead of the query and cost more
-    // than the tiny broadcasts save — the CountedHint pattern pays off
-    // only where the checkpoint is reused for more than the hint, as
-    // in x26/x56.) Prune BOTH sides: hot shingles are exactly the hot
+    // than the tiny broadcasts save.) Prune BOTH sides: hot shingles are exactly the hot
     // join keys of the pair join, and the guard has to hold for
     // whichever side is bigger.
     val hot = tp.select(col("sh")).unionAll(ep.select(col("sh")))

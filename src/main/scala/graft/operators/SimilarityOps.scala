@@ -1246,131 +1246,40 @@ object SimilarityOps {
     * Scale shape: per-anchor centroid ranking streams the anchor
     * batch past the BROADCAST trained centroid table (bounded by
     * construction); the candidate fetch is the x12 probe equi-join
-    * (broadcast — hence dynamic partition pruning over the probed cid
-    * list directories — only under the MEASURED anchor/candidate
-    * caps, keyed shuffle above them); the per-anchor top-K is a
+    * (broadcast by AQE while the probed cells are small — hence
+    * dynamic partition pruning over the probed cid list directories —
+    * keyed shuffle past the adaptive threshold); the per-anchor top-K is a
     * bounded aggregate over probed-list members. No corpus scan
     * beyond the probed lists, no all-pairs anything. */
   def hardNegatives(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val anchorIds = Tables.embeddings(s, d)
       .filter($"vec_id" < HardNegQueries).select($"vec_id".as("qid"))
-    hardNegativesFor(s, d, anchorIds, HardNegK)._1.orderBy($"qid", $"rn")
+    hardNegativesFor(s, d, anchorIds, HardNegK).orderBy($"qid", $"rn")
   }
-
-  /** Anchor-count cap under which the x69/x72 mining chain pins its
-    * anchor-derived broadcasts (`anchorIds`, `probeCids` =
-    * anchors × NProbe, the qe-carrying `anchors`, and x72's `negs` =
-    * anchors × K). The widest of those rows is `anchors` (qid + a
-    * Dim=64 double vector + its quantized longs ≈ 1.1 KB raw), so 1M
-    * anchors ≈ 1–2 GiB hashed — a 4–8× margin under Spark's 8 GiB
-    * broadcast cap. Conf-overridable
-    * (spark.graft.negBroadcastMaxAnchors) so specs force both
-    * branches. */
-  val NegBroadcastMaxAnchors = 1000000L
-
-  private def negAnchorCap(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.negBroadcastMaxAnchors").map(_.toLong)
-      .getOrElse(NegBroadcastMaxAnchors)
-
-  /** Row cap for the probe-candidate broadcast (qid, vec_id pairs —
-    * ~16 B raw, ~100 B hashed): 20M rows ≈ 2 GiB. Unlike the
-    * anchor-derived frames, `candidates` grows with anchors ×
-    * probed-list size — corpus-dependent — so it gets its OWN count.
-    * Conf: spark.graft.negBroadcastMaxCandidates. */
-  val NegBroadcastMaxCandidates = 20000000L
-
-  private def negCandidateCap(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.negBroadcastMaxCandidates").map(_.toLong)
-      .getOrElse(NegBroadcastMaxCandidates)
 
   /** The x69/x72 mining core over an ARBITRARY anchor-id frame (qid):
     * per-anchor IVF probe, dup-capped cosine, per-anchor rank.
-    * Unordered — callers order their own presentation. Returns the
-    * MEASURED anchor count alongside the frame so callers can gate
-    * their own anchor-proportional joins (x72's positives × negatives)
-    * on the same measurement instead of re-counting.
+    * Unordered — callers order their own presentation.
     *
-    * Broadcast discipline (the SCALE.md rule: a pinned broadcast needs
-    * a bound BY CONSTRUCTION or BY MEASUREMENT — never by hope):
-    *  - the anchor-id frame is localCheckpoint-materialized and
-    *    COUNTED; every anchor-derived hint (anchorIds, probeCids,
-    *    anchors) is pinned only when the count sits under
-    *    [[NegBroadcastMaxAnchors]] — above it the joins shuffle on
-    *    their keys, automatically, with no conf flip;
-    *  - `candidates` (anchors × probed-list size — NOT bounded by the
-    *    anchor count) is checkpointed and counted separately against
-    *    [[NegBroadcastMaxCandidates]], the verifyJaccardCounted
-    *    pattern verbatim: the checkpoint the count forces is the
-    *    probe-join output, reused by the cosine join;
-    *  - the one CROSS join (per-anchor centroid ranking) now
-    *    broadcasts the CENTROID side — bounded BY CONSTRUCTION
-    *    (NClusters rows) — and streams the anchor batch, so it is
-    *    safe at any anchor count with its hint kept unconditionally.
-    * Disabling auto-broadcast (autoBroadcastJoinThreshold=-1) still
-    * drops every measured hint (belt over the measured braces);
-    * equality of both plans is spec-pinned either way. */
-  /** The anchors → probed-cells → candidates stage of the mining core,
-    * PRE-checkpoint, shared between [[hardNegativesFor]] (which
-    * checkpoints and counts its output) and PlanAuditSpec (the
-    * measured pin truncates the SERVED plan at the checkpoint — the
-    * x56/x35 precedent — so the audit pins this stage where it
-    * lives). `pinAnchors` is the measured anchor-cap verdict. */
-  /** Test seam (PlanAuditSpec): counts hardNegProbeStage invocations so
-    * the audit can assert the SERVED x69/x72 entries still route
-    * through the stage it pins — the measured-pin checkpoint truncates
-    * served lineage, so the plan alone can't show it (ADVICE r16). */
-  private[graft] val probeStageInvocations =
-    new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Run `helper` on a named helper thread while `primary` runs on
-    * this one, then join the helper and rethrow its failure. Used to
-    * overlap independent job chains per guide §2.6 — Spark's scheduler
-    * runs concurrent jobs fine; actions are only sequential because
-    * driver code calls them sequentially. Spark's local properties
-    * (job group/description) are InheritableThreadLocals, so jobs the
-    * helper submits stay correctly labeled; they also carry a job tag
-    * of their own. If `primary` fails, the helper's jobs are cancelled
-    * by that tag and its thread interrupted before the join, so the
-    * primary error surfaces without waiting out the helper's work and
-    * stays primary (the helper's failure is added as suppressed). */
-  private[graft] def overlapped[A](s: SparkSession, label: String)
-                                  (helper: => Any)(primary: => A): A = {
-    val sc = s.sparkContext
-    val tag = s"graft-overlap-${java.util.UUID.randomUUID()}"
-    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val t = new Thread(() => {
-      sc.addJobTag(tag)
-      try helper catch { case e: Throwable => failed.set(e) }
-    }, s"graft-overlap: $label")
-    t.setDaemon(true)
-    t.start()
-    def join(): Unit = { t.join(); Option(failed.get()).foreach(e => throw e) }
-    val a = try primary catch {
-      case p: Throwable =>
-        sc.cancelJobsWithTag(tag)
-        t.interrupt()
-        try join() catch { case e: Throwable => p.addSuppressed(e) }
-        // a job the helper submitted between the cancel and the
-        // interrupt is in the scheduler's queue by now
-        sc.cancelJobsWithTag(tag)
-        throw p
-    }
-    join()
-    a
-  }
-
-  private[graft] def hardNegProbeStage(s: SparkSession, d: String,
-      aids: DataFrame, pinAnchors: Boolean): (DataFrame, DataFrame) = {
-    probeStageInvocations.incrementAndGet()
+    * Join strategy: the anchor-derived frames (`anchorIds`, the probed
+    * cells, the qe-carrying `anchors`) grow with the anchor count, and
+    * `candidates` with anchors × probed-list size, so none carries a
+    * hint: AQE broadcasts each from its measured size at run time and
+    * shuffles on its keys once it outgrows the adaptive threshold. The
+    * one CROSS join (per-anchor centroid ranking) broadcasts the
+    * CENTROID side — bounded BY CONSTRUCTION (NClusters rows) — and
+    * streams the anchor batch, so its hint is safe at any anchor
+    * count. */
+  private def hardNegativesFor(s: SparkSession, d: String,
+                               anchorIds: DataFrame, k: Int): DataFrame = {
     import s.implicits._
     val root = ensureIvfIndex(s, d)
     val cents = ArtifactBuild.readCached(s, s"$root/centroids")
     val assigned = ivfAssign(s, root)
     val emb = Tables.embeddings(s, d)
       .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-    val hintedA = (df: DataFrame) => if (pinAnchors) broadcast(df) else df
-    val anchors = emb.join(hintedA(aids), emb("vec_id") === col("qid"))
+    val anchors = emb.join(anchorIds.select($"qid"), emb("vec_id") === col("qid"))
       .select($"qid", $"e".as("qe"), quantize($"e").as("qq"))
     // per-anchor probed cells: integer-dot rank of the trained table.
     // The BROADCAST side is the centroid table (bounded by
@@ -1387,57 +1296,29 @@ object SimilarityOps {
     // TopKAggregateSpec pins it — and the long→double score cast is
     // exact: |dot| ≤ Dim·(Quant·|coord|)² ≈ 2e13 « 2^53 on unit-scale
     // embedding coords. Only the probed-cid SET flows on, so the
-    // rank itself was never used. NProbe (4) is above
+    // rank itself was never used. Each anchor's vector rides along
+    // (`first` — it is one value per qid), so the cosine below needs no
+    // second join back to the anchors. NProbe (4) is above
     // TopKSmallPairs.MaxK (3), so this graft_topk is the heap
     // aggregate, planned as an ObjectHashAggregate: it stays hash-based
     // only under GraftSession's sortBased.fallbackThreshold of 1000000.
     // At Spark's default of 128 it falls back to a sort-based
     // aggregate once a partition holds more than 128 anchors.
-    val probeCids = anchors.select($"qid", $"qq").crossJoin(broadcast(cents))
-      .select($"qid", $"cid".cast("long").as("cid"),
+    val probeCids = anchors.crossJoin(broadcast(cents))
+      .select($"qid", $"qe", $"cid".cast("long").as("cid"),
         longDot($"c", $"qq").cast("double").as("dot"))
       .groupBy($"qid")
       .agg(call_function(graft.plans.GraftExpressions.TopKFn,
-        $"dot", $"cid", lit(NProbe)).as("top"))
-      .select($"qid", explode($"top.id").as("cid"))
-    val candidates = assigned
-      .join(hintedA(probeCids), "cid")
+        $"dot", $"cid", lit(NProbe)).as("top"), first($"qe").as("qe"))
+      .select($"qid", $"qe", explode($"top.id").as("cid"))
+    // probed cells are few rows, and AQE coalesces their stage to one
+    // partition; spread over every core (an explicit width AQE keeps),
+    // they fan the candidate and cosine work out instead of running it
+    // in one task (x72 at 5×)
+    val candidates = Tables.rebalance(probeCids)
+      .join(assigned, "cid")
       .filter($"vec_id" =!= $"qid")
-      .select($"qid", $"vec_id")
-    (anchors, candidates)
-  }
-
-  private def hardNegativesFor(s: SparkSession, d: String,
-                               anchorIds: DataFrame, k: Int): (DataFrame, Long) = {
-    import s.implicits._
-    val emb = Tables.embeddings(s, d)
-      .select($"vec_id", $"embedding".cast("array<double>").as("e"))
-    val hintsOn = s.sessionState.conf.autoBroadcastJoinThreshold > 0
-    val aids = anchorIds.select($"qid").localCheckpoint(false)
-    // Overlap the two independent job chains (guide §2.6): the IVF
-    // index ensure takes NO anchor input — on a cold index its Lloyd
-    // training chain used to run strictly AFTER the anchor count's
-    // barrier (at x72's call site that barrier is the whole x05 pair
-    // pipeline), serializing two walls that share nothing. A helper
-    // thread builds/opens the index while the count runs;
-    // ArtifactBuild.ensure serializes concurrent ensures per path, so
-    // the probe stage's own ensureIvfIndex call just finds the marker.
-    // Pin soundness is untouched: the count still strictly precedes
-    // every hinted PLAN — only the count and the index BUILD overlap.
-    val nAnchors =
-      overlapped(s, "x69x72 ensureIvfIndex (ahead of anchor count)")(
-        ensureIvfIndex(s, d))(aids.count())
-    val anchorsSmall = hintsOn && nAnchors <= negAnchorCap(s)
-    CountedHint.record("x69x72_anchors", nAnchors, negAnchorCap(s),
-      anchorsSmall)
-    val hintedA = (df: DataFrame) => if (anchorsSmall) broadcast(df) else df
-    val (anchors, candPre) = hardNegProbeStage(s, d, aids, anchorsSmall)
-    val candidates = candPre.localCheckpoint(false)
-    val nCand = candidates.count()
-    val candSmall = hintsOn && nCand <= negCandidateCap(s)
-    CountedHint.record("x69x72_candidates", nCand, negCandidateCap(s),
-      candSmall)
-    val hintedC = (df: DataFrame) => if (candSmall) broadcast(df) else df
+      .select($"qid", $"qe", $"vec_id")
     // per-anchor top-K via the bounded graft_topk aggregate instead of
     // a rank window: the window SORTS every candidate row per anchor
     // partition, while the aggregate keeps k entries per anchor with
@@ -1447,8 +1328,7 @@ object SimilarityOps {
     // ≡ the window's (sim DESC, vec_id) — equivalence pinned in
     // TopKAggregateSpec; x72's k=3 rides the codegen declarative
     // route, x69's k=5 the bounded heap.
-    val negs = emb.join(hintedC(candidates), "vec_id")
-      .join(hintedA(anchors.select($"qid", $"qe")), "qid")
+    candidates.join(emb, "vec_id")
       .select($"qid", $"vec_id",
         round(CoreQueries.cosine($"e", $"qe"), 4).as("sim"))
       .filter($"sim" < HardNegCap)
@@ -1458,7 +1338,6 @@ object SimilarityOps {
       .select($"qid", posexplode($"top"))
       .select($"qid", ($"pos" + 1).cast("long").as("rn"),
         $"col.id".as("vec_id"), $"col.score".as("sim"))
-    (negs, nAnchors)
   }
 
   /** Negatives per triplet anchor (each anchor fans out to its
@@ -1477,17 +1356,14 @@ object SimilarityOps {
     *
     * Scale shape: the positive relation is the x05 bucketed
     * candidates-then-verify join (bounded output, materialized once
-    * and reused for both directions); the anchor set it induces —
+    * and reused for both directions and the anchor set); the anchor
+    * set it induces —
     * every dup-pair endpoint — grows with the corpus's TRUE dup-pair
-    * count, so it is COUNTED (the pairs frame is already
-    * checkpointed; the induced distinct is cheap) and every
-    * anchor-proportional broadcast in the chain — the mining core's
-    * hints AND the final positives × negatives join (`negs` =
-    * anchors × K rows) — is pinned only under the measured
-    * [[NegBroadcastMaxAnchors]] cap; above it the joins shuffle on
-    * qid automatically, no conf flip needed (equality of both plans
-    * is spec-pinned, and `autoBroadcastJoinThreshold=-1` still
-    * force-drops the hints for A/B). Total work (and output) is
+    * count, so no anchor-proportional join in the chain carries a
+    * hint, the final positives × negatives join (`negs` = anchors × K
+    * rows) included: AQE broadcasts them while they are small and
+    * shuffles on qid once they are not (rows equal under
+    * `autoBroadcastJoinThreshold=-1`, spec-pinned). Total work (and output) is
     * proportional to the dup-pair count times K — inherent to
     * emitting a triplet per positive; the materialized triplet count
     * is self-reported in-job via `observe` (metric
@@ -1495,17 +1371,20 @@ object SimilarityOps {
     * per-row denominator without a second run. */
   def contrastiveTriplets(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    // materialized, so building x72 runs x05's stages: the anchor set
+    // reads the pairs without `sim`, so AQE cannot reuse the pairs'
+    // exchange for it, and without this x05's cosine stage (15M
+    // candidates on the 5× corpus) ran twice: x72 took 18.4–19.1 s
+    // there without it and 16.8 s with it, before the rebalance in
+    // hardNegativesFor (the counted-pins sweep under dev/sweeps/, notes)
     val pairs = DedupOps.dedupEmbedding(s, d).localCheckpoint(false)
     val pos = pairs
       .select($"va".as("qid"), $"vb".as("pos_id"), $"sim".as("sim_pos"))
       .unionAll(pairs
         .select($"vb".as("qid"), $"va".as("pos_id"), $"sim".as("sim_pos")))
-    val (negs, nAnchors) =
+    val negs =
       hardNegativesFor(s, d, pos.select($"qid").distinct(), TripletNegK)
-    val negsSmall = s.sessionState.conf.autoBroadcastJoinThreshold > 0 &&
-      nAnchors <= negAnchorCap(s)
-    val negsSide = if (negsSmall) broadcast(negs) else negs
-    pos.join(negsSide, "qid")
+    pos.join(negs, "qid")
       .select($"qid".as("anchor_id"), $"pos_id", $"sim_pos",
         $"rn", $"vec_id".as("neg_id"), $"sim".as("sim_neg"))
       .observe("x72_contrastive_triplets", count(lit(1)).as("rows"))

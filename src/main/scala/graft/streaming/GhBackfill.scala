@@ -141,15 +141,7 @@ object GhBackfill {
     // leaves _SUCCESS in its staging dir, which silently stripped the
     // completion marker from ensure-built artifacts (the r7 phrase-
     // index FAILED_READ_FILE flake).
-    scores
-      // the hours go out from every core: AQE's size-based coalescing
-      // folds the small score rows into one task, which then writes
-      // each hour's file in turn, but it never coalesces an explicit
-      // width; hashing by the hour keys keeps each hour in one task,
-      // so each hour is still one file
-      .repartition(spark.sparkContext.defaultParallelism,
-        col("score_date"), col("score_hour"))
-      .write.mode("overwrite")
+    scores.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("score_date", "score_hour")
       .parquet(outDir)
@@ -182,6 +174,14 @@ object GhBackfill {
                else existingHourPartitions(spark, outDir)
     val scores = hourlyScoresPartitioned(events.filter(
         !hourKey(col("created_at")).isin(done.map { case (d, h) => s"$d:$h" }.toSeq: _*)))
+      // the hours go out from every core: AQE's size-based coalescing
+      // folds the small score rows into one task, which then writes
+      // each hour's file in turn, but it never coalesces an explicit
+      // width; hashing by the hour keys keeps each hour in one task,
+      // so each hour is still one file. The live scoring path writes
+      // its few hours unrepartitioned, one stage fewer per trigger.
+      .repartition(spark.sparkContext.defaultParallelism,
+        col("score_date"), col("score_hour"))
       .localCheckpoint(true)
     val written = scores.select("score_date", "score_hour").distinct()
       .collect().map(r => (r.getString(0), r.getInt(1)))

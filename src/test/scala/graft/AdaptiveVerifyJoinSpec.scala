@@ -14,16 +14,16 @@ import graft.operators.DedupOps
   * crashed x02 plus the x17/x57 cluster-artifact builds that embed its
   * chain; dev/sweeps/r14_125x.json). The cheap path is not lost:
   * AQE's dynamic join selection still converts the verify join to a
-  * broadcast at fixture scale, which the second test pins by EXECUTING
-  * the dataset itself (count() spawns a separate QueryExecution whose
-  * plan never finalizes) and then finding a BroadcastHashJoinExec
-  * keyed on doc_id — the verify join's key, and the only join in
-  * x02's chain — inside the finalized adaptive plan, descending
-  * through materialized QueryStageExec boundaries (query stages are
-  * leaf nodes, so a plain collect over the root sees none of the
-  * executed stages' internals). If either test fails, someone
-  * re-pinned the hint (first) or the small-scale verify join degraded
-  * to a shuffle join (second).
+  * broadcast at fixture scale, pinned by EXECUTING the dataset itself
+  * (count() spawns a separate QueryExecution whose plan never
+  * finalizes) and then finding a BroadcastHashJoinExec keyed on
+  * doc_id — the verify join's key — inside the finalized adaptive
+  * plan, descending through materialized QueryStageExec boundaries
+  * (query stages are leaf nodes, so a plain collect over the root sees
+  * none of the executed stages' internals). If these fail, someone
+  * re-pinned the hint or the small-scale verify join degraded to a
+  * shuffle join. x56 is the one caller that pins the verify broadcast,
+  * from its counted candidates (DedupOps.VerifyBroadcastMaxPairs).
   */
 class AdaptiveVerifyJoinSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
@@ -61,47 +61,40 @@ class AdaptiveVerifyJoinSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("x56 pins the verify broadcast only under the MEASURED pair cap") {
-    // the r15 cheap-path recovery (VERDICT r14 #3): snapshotDedup
-    // counts its checkpointed candidate frame and pins broadcast(…)
-    // on the melted side only when the actual count sits under
-    // spark.graft.verifyBroadcastMaxPairs — bounded by measurement,
-    // never by assumption. Under the cap (the fixture) the hint must
-    // be present; forcing the cap to 0 must drop it AND leave the
-    // results row-identical.
-    val q = SparkEntry.queries("x56_snapshot_dedup")
-    val pinnedDf = q(spark, sf)
-    val pinned = pinnedDf.queryExecution.analyzed.collect {
-      case h: ResolvedHint => h
-    }
-    assert(pinned.nonEmpty,
-      "fixture candidates sit under the cap — the verify broadcast " +
-        "must be pinned from the measured count")
-    spark.conf.set("spark.graft.verifyBroadcastMaxPairs", "0")
-    try {
-      val adaptiveDf = q(spark, sf)
-      val hints = adaptiveDf.queryExecution.analyzed.collect {
-        case h: ResolvedHint => h
-      }
-      assert(hints.isEmpty,
-        "over the cap the verify join must stay AQE-adaptive (no hint)")
-      assert(pinnedDf.collect().toSeq == adaptiveDf.collect().toSeq,
-        "the two verify branches must agree row-for-row")
-    } finally spark.conf.unset("spark.graft.verifyBroadcastMaxPairs")
+    // snapshotDedupOf counts its checkpointed candidate pairs while the
+    // frame is built and pins broadcast(…) on the melted side when the
+    // count sits at or under DedupOps.VerifyBroadcastMaxPairs. The
+    // fixture sits under the cap; CountedPinSpec checks the decision
+    // above it and that x56's rows do not depend on the join strategy.
+    val df = SparkEntry.queries("x56_snapshot_dedup")(spark, sf)
+    val hints = df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
+    assert(hints.nonEmpty, "fixture candidates sit under the cap: the " +
+      "verify broadcast must be pinned from the counted pairs")
+    val (joins, finalPlan) = verifyBroadcasts(df)
+    assert(joins.nonEmpty, "expected x56's doc_id-keyed verify join to " +
+      "broadcast at fixture scale; final plan:\n" + finalPlan)
   }
 
-  test("AQE broadcasts the verify join itself at fixture scale") {
-    val df = x02
-    df.foreach(_ => ()) // execute THIS dataset so ITS adaptive plan finalizes
+  /** Execute THIS dataset so ITS adaptive plan finalizes, then find
+    * the doc_id-keyed broadcast hash joins in the final plan (returned
+    * with it). */
+  private def verifyBroadcasts(
+      df: org.apache.spark.sql.DataFrame): (Seq[SparkPlan], SparkPlan) = {
+    df.foreach(_ => ())
     val finalPlan = df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    val verifyJoins = collectEverywhere(finalPlan) {
+    (collectEverywhere(finalPlan) {
       case b: BroadcastHashJoinExec
           if (b.leftKeys ++ b.rightKeys)
             .exists(_.references.exists(_.name == "doc_id")) => b
-    }
-    assert(verifyJoins.nonEmpty,
+    }, finalPlan)
+  }
+
+  test("AQE broadcasts the verify join itself at fixture scale") {
+    val (joins, finalPlan) = verifyBroadcasts(x02)
+    assert(joins.nonEmpty,
       "expected AQE to convert the doc_id-keyed verify join to a " +
         "broadcast hash join at fixture scale; final plan:\n" + finalPlan)
   }

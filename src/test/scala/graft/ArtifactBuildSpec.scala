@@ -268,4 +268,47 @@ class ArtifactBuildSpec extends AnyFunSuite with SparkTestSession {
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
   }
+
+  test("an interrupted build releases its lock and leaves no marker") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ensure-interrupt")
+    val path = s"$root/artifact"
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val slowMs = 60000L
+    // a build whose one Spark job runs for slowMs unless its tasks are
+    // killed (they poll the kill flag, so a cancel frees the cores)
+    def slowBuild(staging: Path): Unit = {
+      spark.sparkContext.parallelize(1 to 2, 2).foreach { _ =>
+        val t0 = System.currentTimeMillis()
+        while (!org.apache.spark.TaskContext.get().isInterrupted() &&
+          System.currentTimeMillis() - t0 < slowMs) Thread.sleep(20)
+      }
+      fs.mkdirs(staging)
+      fs.create(new Path(staging, "_MARKER")).close()
+    }
+    val tag = s"graft-interrupt-${java.util.UUID.randomUUID()}"
+    val failed = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val builder = new Thread(() => {
+      spark.sparkContext.addJobTag(tag)
+      try ArtifactBuild.ensure(spark, path, "_MARKER")(slowBuild)
+      catch { case e: Throwable => failed.set(e) }
+    })
+    val t0 = System.nanoTime()
+    builder.start()
+    Thread.sleep(1000)   // the build's job is running by now
+    spark.sparkContext.cancelJobsWithTag(tag)
+    builder.interrupt()
+    builder.join()
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(failed.get() != null, "the cancelled build must fail")
+    assert(secs < slowMs / 2000.0, s"the cancelled build took $secs s to stop")
+    // no marker and no lock left behind, so the next ensure rebuilds
+    // the artifact from scratch
+    assert(!fs.exists(new Path(path, "_MARKER")))
+    assert(!fs.exists(new Path(path + ".lock")))
+    ArtifactBuild.ensure(spark, path, "_MARKER") { staging =>
+      fs.mkdirs(staging)
+      fs.create(new Path(staging, "_MARKER")).close()
+    }
+    assert(fs.exists(new Path(path, "_MARKER")))
+  }
 }

@@ -1,13 +1,11 @@
 package graft
 
-/** Rung runner for the BPE SEGMENT path (VERDICT r17 #2): bpeSegment is
-  * an LLM-pipeline operator with no registered query, so the bench
-  * ladder never exercises its counted segTable caps — this main trains
+/** Rung runner for the BPE SEGMENT path: bpeSegment is an
+  * LLM-pipeline operator with no registered query, so the bench ladder
+  * never exercises its word-type-proportional joins — this main trains
   * a tokenizer on the rung corpus, segments the corpus through the
-  * noop sink, and prints one JSON line with the walls and the
-  * counted-pin verdicts (bpe_trained_vocab / bpe_segtable), so the
-  * sweep artifact records which branch each word-type-proportional
-  * pin took at the rung, with its measured count.
+  * noop sink, and prints one JSON line with the training and
+  * segmentation walls.
   *
   *   SPARK_DRIVER_MEM=... sbt "Test/runMain graft.BpeSegmentRun <dir> [nMerges]"
   */
@@ -19,7 +17,6 @@ object BpeSegmentRun {
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id", $"text")
-    graft.operators.CountedHint.verdicts.clear()
     val t0 = System.nanoTime()
     val (merges, vocab) = graft.operators.BpeOps.bpeTrain(docs, nMerges)
     // force the training chain (its checkpoints are lazy)
@@ -31,8 +28,7 @@ object BpeSegmentRun {
     val segSec = (System.nanoTime() - t1) / 1e9
     println(s"""BPESEG {"dir":${Json.str(dir)},"n_merges":$nMerges,""" +
       s""""merge_rows":$nMergeRows,"train_sec":$trainSec,""" +
-      s""""segment_sec":$segSec,""" +
-      s""""counted_pins":${graft.operators.CountedHint.verdictsJson}}""")
+      s""""segment_sec":$segSec}""")
     spark.stop()
   }
 }

@@ -1,136 +1,74 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
 import graft.operators.{BpeOps, CountedHint, DedupOps}
 
-/** The r17 rule made checkable: NO broadcast hint in the repo is
-  * pinned without a construction or measurement bound. These specs
-  * force the last three formerly hope-bounded families — x17's
-  * cluster-label rejoins, x26's duplicated-window count-back, and
-  * BPE's word-type segmentation table — over their measured caps
-  * (cap=0 simulates a corpus whose corpus-coupled relation outgrew
-  * broadcast range) and pin that the hint is genuinely dropped while
-  * the rows stay bitwise identical. The under-cap branch must equally
-  * genuinely pin the hint, so the fast path is not silently lost. */
+/** The joins that once carried a counted broadcast pin now leave the
+  * strategy to AQE, except x56's verify join, the x17 label rejoins
+  * and BPE segmentation, which keep theirs. This spec pins that the choice moves plans, not
+  * rows: every former or kept pin site returns the same rows at the
+  * default threshold (AQE broadcasts the small side at run time) and
+  * with `spark.sql.autoBroadcastJoinThreshold=-1` (every unpinned join
+  * shuffles on its keys), and that a kept pin's decision turns on its
+  * cap. */
 class CountedPinSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
+  private def rows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq
 
-  private def withCap[A](key: String)(body: => A): A = {
-    spark.conf.set(key, "0")
-    try body finally spark.conf.unset(key)
-  }
-
-  test("x17 label rejoin: over-cap label counts drop the broadcast pin, not rows") {
-    val docs = graft.Tables.documents(spark, sf).select($"doc_id", $"text")
-    val dfl = DedupOps.dedupClustersOf(docs)
-    val want = rows(dfl)
-    // under the default cap the fixture's label frame pins the hint
-    assert(dfl.queryExecution.optimizedPlan.toString
-      .contains("strategy=broadcast"),
-      "under the cap the label rejoin must carry the measured hint")
-    withCap(CountedHint.LabelCapKey) {
-      val df = DedupOps.dedupClustersOf(docs)
-      assert(rows(df) === want,
-        "labels must be bitwise-stable when the measured cap forces the shuffle branch")
-      val lp = df.queryExecution.optimizedPlan.toString
-      assert(!lp.contains("strategy=broadcast"),
-        "over the cap the label hint must be dropped — the join shuffles on doc_id")
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0)
-      assert(!p.contains("CartesianProduct"))
-    }
-  }
-
-  test("x17 artifact build: the full-build label rejoin is counted — over-cap build serves identical labels") {
-    val want = DedupOps.dedupClusters(spark, sf).collect().map(_.toSeq).toSet
-    val tmpA = java.nio.file.Files.createTempDirectory("ccpin-a").toString
-    val tmpB = java.nio.file.Files.createTempDirectory("ccpin-b").toString
-    val builtDefault = spark.read
-      .parquet(s"${DedupOps.ensureClusterIndex(spark, sf, tmpA)}/labels")
-      .collect().map(_.toSeq).toSet
-    val builtOverCap = withCap(CountedHint.LabelCapKey) {
-      spark.read
-        .parquet(s"${DedupOps.ensureClusterIndex(spark, sf, tmpB)}/labels")
-        .collect().map(_.toSeq).toSet
-    }
-    assert(builtDefault === want)
-    assert(builtOverCap === want,
-      "an artifact built over the label cap must serve identical labels")
-  }
-
-  test("x26 dup-key count-back: over-cap duplicated-window counts drop the pin, not rows") {
-    val dfl = SparkEntry.queries("x26_dedup_blocks")(spark, sf)
-    val want = rows(dfl)
-    assert(dfl.queryExecution.optimizedPlan.toString
-      .contains("strategy=broadcast"),
-      "under the cap the dup-key count-back must carry the measured hint")
-    withCap(CountedHint.DupKeyCapKey) {
-      val df = SparkEntry.queries("x26_dedup_blocks")(spark, sf)
-      assert(rows(df) === want,
-        "x26 must be bitwise-stable when the measured cap forces the shuffle branch")
-      assert(!df.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"),
-        "over the cap the dup-key hint must be dropped — the join shuffles on k")
-    }
-  }
-
-  test("BPE segmentation: word-type counts over the cap drop both segTable pins, not rows") {
-    val docs = graft.Tables.documents(spark, sf)
-      .select($"doc_id", $"text").limit(50)
-    val (mergesDf, vocabDf) = BpeOps.bpeTrain(docs, 8)
-    val dfl = BpeOps.bpeSegment(docs, mergesDf, vocabDf)
-    val want = rows(dfl.orderBy($"doc_id", $"word"))
-    val lpDefault = dfl.queryExecution.optimizedPlan.toString
-    assert(lpDefault.contains("strategy=broadcast"),
-      "under the cap the segTable join must carry the measured hint")
-    withCap(CountedHint.SegCapKey) {
-      val df = BpeOps.bpeSegment(docs, mergesDf, vocabDf)
-      assert(rows(df.orderBy($"doc_id", $"word")) === want,
-        "segmentation must be bitwise-stable when the cap forces the shuffle branch")
-      val lp = df.queryExecution.optimizedPlan.toString
-      // the one surviving broadcast is the one-row merge list —
-      // bounded by construction; count the hints instead of banning
-      // them outright
-      val hints = "strategy=broadcast".r.findAllIn(lp).size
-      assert(hints <= 1,
-        s"over the cap only the one-row merge-list hint may survive, found $hints")
-    }
-  }
-
-  test("x57 takedown listed-rep probe is counted: over-cap lists shuffle on rep, not rows") {
-    val docs = graft.Tables.documents(spark, sf).select($"doc_id", $"text")
+  test("former pin sites return equal rows at the default threshold and at -1") {
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
     val isListed = (c: org.apache.spark.sql.Column) =>
       c % DedupOps.RemovalIdStride === 0
-    val want = rows(DedupOps.removalPropagationOf(docs, isListed))
-    withCap(CountedHint.LabelCapKey) {
-      val df = DedupOps.removalPropagationOf(docs, isListed)
-      assert(rows(df) === want,
-        "the takedown closure must be bitwise-stable over the listed-rep cap")
-      assert(!df.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"),
-        "over the cap the listed-rep probe must shuffle on rep")
+    val bpeDocs = docs.limit(50)
+    val (merges, vocab) = BpeOps.bpeTrain(bpeDocs, 8)
+    // a fresh index root per call, so the label artifact is BUILT (the
+    // full-build label rejoin) under the threshold being tested
+    def builtLabels(): DataFrame = {
+      val root = java.nio.file.Files.createTempDirectory("graft-ccpin").toString
+      spark.read.parquet(s"${DedupOps.ensureClusterIndex(spark, sf, root)}/labels")
+        .orderBy($"doc_id")
+    }
+    val sites: Seq[(String, () => DataFrame)] =
+      Seq("x26_dedup_blocks", "x56_snapshot_dedup", "x57_removal_propagation",
+        "x69_hard_negatives", "x72_contrastive_triplets")
+        .map(q => q -> (() => SparkEntry.queries(q)(spark, sf))) ++ Seq(
+      "x17 label rejoin (dedupClustersOf)" -> (() => DedupOps.dedupClustersOf(docs)),
+      "x17 artifact build" -> (() => builtLabels()),
+      "x57 closure (removalPropagationOf)" ->
+        (() => DedupOps.removalPropagationOf(docs, isListed)),
+      "BPE segmentation" -> (() =>
+        BpeOps.bpeSegment(bpeDocs, merges, vocab).orderBy($"doc_id", $"word")))
+    // sites whose plans hold no hint at all (x69/x72 broadcast the
+    // centroid table, BPE the one-row merge list; x56, the x17 label
+    // rejoins and BPE keep their counted pins)
+    val hintFree = Set("x26_dedup_blocks", "x57_removal_propagation")
+    val want = sites.map { case (name, df) =>
+      val d = df()
+      if (hintFree(name))
+        assert(!d.queryExecution.optimizedPlan.toString.contains("strategy=broadcast"),
+          s"$name must leave its joins to AQE")
+      name -> rows(d)
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      sites.zip(want).foreach { case ((name, df), (_, w)) =>
+        val d = df()
+        assert(rows(d) === w, s"$name: rows must not depend on the join strategy")
+        assert(!d.queryExecution.executedPlan.toString.contains("CartesianProduct"),
+          s"$name must not degrade to a cartesian when nothing broadcasts")
+      }
     }
   }
 
-  test("autoBroadcastJoinThreshold=-1 force-drops every measured pin (belt over braces)") {
-    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val docs = graft.Tables.documents(spark, sf).select($"doc_id", $"text")
-    val want = rows(DedupOps.dedupClustersOf(docs))
-    val wantBlocks = rows(SparkEntry.queries("x26_dedup_blocks")(spark, sf))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val dfc = DedupOps.dedupClustersOf(docs)
-      assert(rows(dfc) === want)
-      assert(!dfc.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"))
-      val dfb = SparkEntry.queries("x26_dedup_blocks")(spark, sf)
-      assert(rows(dfb) === wantBlocks)
-      assert(!dfb.queryExecution.optimizedPlan.toString
-        .contains("strategy=broadcast"))
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  test("a kept counted pin broadcasts at or under its cap, not above it") {
+    val df = spark.range(10).toDF("id")
+    def pinned(cap: Long): Boolean = CountedHint.counted(df, cap)
+      .queryExecution.analyzed.collect { case h: ResolvedHint => h }.nonEmpty
+    assert(pinned(10), "a count at the cap is pinned")
+    assert(!pinned(9), "a count above the cap is left to AQE")
+    assert(rows(CountedHint.counted(df, 9)) === rows(df))
   }
 }

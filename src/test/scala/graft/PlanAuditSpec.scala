@@ -474,11 +474,11 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("x56: the candidate join keys on (band, key); verify broadcasts") {
-    // r15: the candidate frame is localCheckpoint-materialized and
-    // COUNTED before the verify join is planned (verifyJaccardCounted
-    // — the measured broadcast pin), so the band-key stage is no
-    // longer visible in the SERVED plan. Pin each stage where it
-    // lives (the x35 pass-1 pre-checkpoint precedent):
+    // the candidate frame is localCheckpoint-materialized and COUNTED
+    // before the verify join is planned (the counted broadcast pin,
+    // DedupOps.VerifyBroadcastMaxPairs), so the band-key stage is not
+    // visible in the SERVED plan. Pin each stage where it lives (the
+    // x35 pass-1 pre-checkpoint precedent):
     //  - candidate stage, built exactly as snapshotDedupOf builds it:
     //    batch bands meet corpus bands as an equi-join ON the 8-byte
     //    (band, key) pair, never a cartesian pairing;
@@ -569,46 +569,66 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("x69/x72: mining serves from the materialized IVF index — no Lloyd training at serve") {
-    // r16: the probe/candidate stage is localCheckpoint-materialized
-    // and COUNTED before the cosine join is planned (the measured
-    // broadcast pin — x56's verifyJaccardCounted discipline), so the
-    // index scan is no longer visible in the SERVED plan. Pin each
-    // stage where it lives (the x56/x35 precedent):
-    //  - probe stage, built exactly as hardNegativesFor builds it:
-    //    probes the materialized index, partition-prunes the
-    //    cid-partitioned assignment scan to the probed cids (the x12
-    //    discipline), no global sort/cartesian;
-    //  - served plan: no SMJ, no cartesian (the under-cap measured
-    //    pin broadcasts at this SF).
+    // the probe stage reads the materialized index and partition-prunes
+    // the cid-partitioned assignment scan to the probed cids (the x12
+    // discipline); no SMJ, no cartesian, and AQE broadcasts the
+    // anchor-sized joins at this SF
+    Seq("x69_hard_negatives", "x72_contrastive_triplets").foreach { q =>
+      val p = plan(q)
+      assert(p.contains("graft-ivf-index"),
+        s"$q must read the materialized index:\n" + p)
+      assert(p.contains("dynamicpruning"),
+        s"$q: assignment scan must partition-prune to probed cids:\n" + p)
+      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), q)
+      assert(p.contains("BroadcastHashJoin"), s"$q must broadcast at fixture scale")
+    }
+  }
+
+  /** Spark jobs started while `body` runs. A sentinel job submitted
+    * after `body` proves every earlier job start has reached the
+    * listener (the bus delivers a queue's events in order). */
+  private def jobsDuring(body: => Any): Int = {
+    val sc = spark.sparkContext
+    val key = "graft.audit.sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val sentinel = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) != null)) sentinel.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(key, "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      assert(sentinel.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("building a former counted-pin site's DataFrame runs no Spark job") {
+    // these sites once counted a frame while the DataFrame was built, to
+    // pick a broadcast; AQE now picks it at run time. Run each once
+    // first, so artifacts are ensured and table reads are cached. (x72
+    // still materializes its x05 pairs while built, see
+    // contrastiveTriplets; x56 kept its counted pin.)
+    Seq("x26_dedup_blocks", "x57_removal_propagation",
+        "x69_hard_negatives").foreach { q =>
+      SparkEntry.queries(q)(spark, sf).collect()
+      assert(jobsDuring(SparkEntry.queries(q)(spark, sf)) === 0, q)
+    }
+    // the inline closure converges its labels while it is built; its
+    // listed-rep probe adds no job on top of that
     val s = spark
     import s.implicits._
-    import graft.operators.SimilarityOps
-    val aids = Tables.embeddings(spark, sf)
-      .filter($"vec_id" < SimilarityOps.HardNegQueries)
-      .select($"vec_id".as("qid"))
-    val (_, cand) = SimilarityOps.hardNegProbeStage(spark, sf, aids, true)
-    cand.collect()
-    val cp = cand.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    assert(cp.contains("graft-ivf-index"),
-      "the probe stage must read the materialized index:\n" + cp)
-    assert(cp.contains("dynamicpruning"),
-      "assignment scan must partition-prune to probed cids:\n" + cp)
-    assert(!cp.contains("SortMergeJoin") && !cp.contains("CartesianProduct"))
-
-    Seq("x69_hard_negatives", "x72_contrastive_triplets").foreach { q =>
-      // structural guard (ADVICE r16): the measured-pin checkpoint
-      // truncates the SERVED lineage, so the plan can't show the
-      // probe stage — assert via the seam that building the served
-      // entry still routes through the audited hardNegProbeStage
-      val before = SimilarityOps.probeStageInvocations.get()
-      val p = plan(q)
-      assert(SimilarityOps.probeStageInvocations.get() > before,
-        s"$q no longer routes through hardNegProbeStage — the probe-stage audit above is pinning dead code")
-      assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"), q)
-      assert(p.contains("BroadcastHashJoin"),
-        s"$q under-cap measured pin must broadcast at fixture scale")
-    }
+    import graft.operators.DedupOps
+    val docs = Tables.documents(spark, sf).select($"doc_id", $"text")
+    val isListed = (c: org.apache.spark.sql.Column) =>
+      c % DedupOps.RemovalIdStride === 0
+    DedupOps.removalPropagationOf(docs, isListed).collect()
+    assert(jobsDuring(DedupOps.removalPropagationOf(docs, isListed)) ===
+      jobsDuring(DedupOps.dedupClustersOf(docs)), "removalPropagationOf")
   }
 
   test("x70: exact thresholds broadcast back; x70b plans the sketch, not the exact buffers") {

@@ -412,45 +412,10 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
 
-  test("x69/x72 measured broadcast pin: over-cap counts flip hints to keyed shuffles, not rows") {
-    // the r16 rule: no hope-bounded broadcasts — every anchor- and
-    // candidate-proportional hint in the mining chain is pinned only
-    // under a MEASURED count cap. Forcing both caps to 0 simulates a
-    // corpus whose dup-pair relation outgrew broadcast range: the
-    // chain must shuffle on its keys AUTOMATICALLY (no global conf
-    // flip) and produce bitwise-identical rows.
-    val defaults = Seq("x69_hard_negatives", "x72_contrastive_triplets")
-      .map { q =>
-        q -> SparkEntry.queries(q)(spark, sf).collect().map(_.toSeq).toSeq
-      }.toMap
-    spark.conf.set("spark.graft.negBroadcastMaxAnchors", "0")
-    spark.conf.set("spark.graft.negBroadcastMaxCandidates", "0")
-    try {
-      defaults.foreach { case (q, want) =>
-        val df = SparkEntry.queries(q)(spark, sf)
-        assert(df.collect().map(_.toSeq).toSeq === want,
-          s"$q must be bitwise-stable when the measured caps force the shuffle branch")
-        val p = df.queryExecution.executedPlan.toString
-          .split("== Initial Plan ==")(0)
-        assert(!p.contains("CartesianProduct"),
-          s"$q must not degrade to a cartesian over the caps")
-      }
-      // the x72 final pos⋈negs join really shuffled on qid
-      val p72 = SparkEntry.queries("x72_contrastive_triplets")(spark, sf)
-        .queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-      assert("(SortMergeJoin|ShuffledHashJoin) \\[qid".r
-        .findFirstIn(p72).isDefined,
-        "over the anchor cap the qid join must shuffle, not broadcast")
-    } finally {
-      spark.conf.unset("spark.graft.negBroadcastMaxAnchors")
-      spark.conf.unset("spark.graft.negBroadcastMaxCandidates")
-    }
-  }
-
   test("x69/x22/x06 broadcast→shuffle fallback: conf flips plans, not rows") {
     // the same escape-hatch discipline extended to the probe family:
-    // every growing broadcast in the x69 mining core is gated on the
-    // standard threshold conf, and the x22/x06 bucket joins survive
+    // every growing join in the x69 mining core is sized by AQE under
+    // the standard threshold conf, and the x22/x06 bucket joins survive
     // the flip — bitwise-equal output, no cartesian anywhere
     val queries = Seq("x69_hard_negatives", "x22_knn_join", "x06_ann_lsh")
     val defaults = queries.map { q =>
@@ -507,45 +472,5 @@ class SimilaritySpec extends AnyFunSuite with SparkTestSession {
       assert(got.exists(_ > Int.MaxValue.toLong),
         s"$name must be able to return past-2^31 ids")
     }
-  }
-
-  test("a failed anchor count cancels the index build instead of waiting it out") {
-    import org.apache.hadoop.fs.Path
-    val root = java.nio.file.Files.createTempDirectory("graft-overlap-cancel")
-    val path = s"$root/artifact"
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val slowMs = 60000L
-    // a build whose one Spark job runs for slowMs unless its tasks are
-    // killed (they poll the kill flag, so a cancel frees the cores)
-    def slowBuild(staging: Path): Unit = {
-      spark.sparkContext.parallelize(1 to 2, 2).foreach { _ =>
-        val t0 = System.currentTimeMillis()
-        while (!org.apache.spark.TaskContext.get().isInterrupted() &&
-          System.currentTimeMillis() - t0 < slowMs) Thread.sleep(20)
-      }
-      fs.mkdirs(staging)
-      fs.create(new Path(staging, "_MARKER")).close()
-    }
-    val t0 = System.nanoTime()
-    val err = intercept[IllegalStateException] {
-      SimilarityOps.overlapped(spark, "slow build")(
-        ArtifactBuild.ensure(spark, path, "_MARKER")(slowBuild)) {
-        Thread.sleep(1000)   // the build's job is running by now
-        throw new IllegalStateException("anchor count failed")
-      }
-    }
-    val secs = (System.nanoTime() - t0) / 1e9
-    assert(err.getMessage === "anchor count failed", "the count stays primary")
-    assert(err.getSuppressed.nonEmpty, "the build's failure rides along")
-    assert(secs < slowMs / 2000.0, s"the failure took $secs s to surface")
-    // the cancelled build left no marker and released its lock, so the
-    // next ensure rebuilds the artifact from scratch
-    assert(!fs.exists(new Path(path, "_MARKER")))
-    assert(!fs.exists(new Path(path + ".lock")))
-    ArtifactBuild.ensure(spark, path, "_MARKER") { staging =>
-      fs.mkdirs(staging)
-      fs.create(new Path(staging, "_MARKER")).close()
-    }
-    assert(fs.exists(new Path(path, "_MARKER")))
   }
 }
