@@ -9,11 +9,21 @@ import graft.operators.SearchOps
   * the serving index (x33b's shape) kept current per micro-batch
   * instead of rebuilt corpus-wide: each batch of (append-only)
   * documents contributes its own postings partial and one stats row,
-  * partitioned by (batch_id, term-bucket). Documents are disjoint
-  * across batches, so the union of retained postings IS the retained
-  * window's postings relation — exact, like the report card's algebra
-  * and unlike the HLL estimates — and serving reads only the query
-  * terms' bucket directories within each retained batch.
+  * each partitioned by batch_id. Documents are disjoint across batches,
+  * so the union of retained postings IS the retained window's postings
+  * relation — exact, like the report card's algebra and unlike the HLL
+  * estimates.
+  *
+  * The term bucket `tb` is a data column, not a partition: a batch's
+  * postings land as one file per write task in its batch_id dir, sorted
+  * by (tb, term), instead of one small file in each of the ~27 bucket
+  * dirs a small batch touches (each file a create and, on a local file
+  * system without libhadoop, a forked `chmod`). Serving pushes
+  * `tb IN … AND term IN …` down to parquet, whose row-group statistics
+  * over the sorted rows skip the other buckets' rows once a batch spans
+  * several row groups. A state dir written while `tb` was a partition
+  * still serves (the reader takes `tb` from the path); a write to one is
+  * refused, and the state is rebuilt from its batch inputs.
   *
   * REPLAY SAFETY: dynamic partition overwrite keyed by batch_id (the
   * CMS/HLL/report discipline) — an at-least-once replay rewrites its
@@ -33,7 +43,7 @@ object SearchStream {
       StructField("tf", LongType),
       StructField("dl", LongType),
       StructField("tb", IntegerType)))
-  }, extras = Seq("tb"))
+  }, sortBy = Seq("tb", "term"))
 
   /** Corpus stats re-add across batches. */
   private val stats = new StateMaintenance.PartialTable("stats", {
@@ -45,13 +55,14 @@ object SearchStream {
     sum(col("sum_dl")).as("sum_dl")))
 
   /** One micro-batch of documents: tokenize once, land the batch's
-    * stats row and its postings (bucketed like the static index) into
-    * the batch's own partitions. */
+    * postings (bucketed like the static index, sorted by bucket and
+    * term) and its stats row into the batch's own partitions. Postings
+    * go first, so a state dir refused for its layout gets neither. */
   def processPostingsBatch(batch: DataFrame, stateDir: String,
                            batchId: Long): Unit = {
     val toks = SearchOps.tokenizedOf(batch).localCheckpoint(false)
-    stats.append(SearchOps.statsOf(toks), stateDir, batchId)
     postings.append(SearchOps.postingsOf(toks), stateDir, batchId)
+    stats.append(SearchOps.statsOf(toks), stateDir, batchId)
   }
 
   /** Start the index-maintenance stream over a parquet file-drop of
@@ -66,8 +77,8 @@ object SearchStream {
     }
 
   /** BM25 for the fixed query over the RETAINED window: corpus stats
-    * re-add across surviving batch partitions, the hits scan prunes to
-    * the query terms' buckets within each batch, and scoring is the
+    * re-add across surviving batch partitions, the hits scan pushes the
+    * query terms' buckets and terms down to parquet, and scoring is the
     * shared x33/x33b arithmetic — so the answer equals the scan form
     * run over exactly the retained documents. */
   def servedBm25(spark: SparkSession, stateDir: String): DataFrame = {
@@ -79,8 +90,8 @@ object SearchStream {
     SearchOps.scoreFromHits(hits, stats.merged(spark, stateDir))
   }
 
-  /** Fold a committed prefix of batches: postings keep their
-    * term-bucket partitioning, stats re-add. */
+  /** Fold a committed prefix of batches: postings are rewritten
+    * sorted by (tb, term), stats re-add. */
   def compact(spark: SparkSession, stateDir: String, upTo: Long): Unit = {
     postings.compact(spark, stateDir, upTo)
     stats.compact(spark, stateDir, upTo)

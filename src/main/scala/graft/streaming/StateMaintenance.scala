@@ -36,6 +36,16 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    maintenance process that owns the state dir (the same ownership
   *    the stream's checkpoint already implies), as parquet compaction
   *    jobs do everywhere.
+  *
+  * Checkpoints: every stream here starts through
+  * `installCheckpointFileManager`, which points the session at
+  * [[LocalCheckpointFileManager]] unless the deployment chose a manager
+  * itself. On a local path each checkpoint log write is then a temp file
+  * plus one POSIX rename (about 4 ms), not Spark's default FileContext
+  * rename (about 15 ms on a host without libhadoop); other schemes keep
+  * Spark's default. The setting stays on the session after `start()`:
+  * the file source writes its first log after `start()` returns, from
+  * the stream thread, and reads the manager off the caller's session.
   */
 object StateMaintenance {
 
@@ -57,10 +67,15 @@ object StateMaintenance {
     * directory under the state dir ("" = the state dir itself), `data`
     * the schema of the rows a batch lands (the `extras` partition
     * columns included), and `merge` the associative re-aggregation of
-    * batch_id-stripped partial rows into one partial row-set. */
+    * batch_id-stripped partial rows into one partial row-set. Every
+    * write (append, compaction, removal) sorts each file's rows by
+    * `sortBy`, so parquet's row-group statistics can skip rows on a
+    * filter over those columns where a partition column would have
+    * pruned directories. */
   final class PartialTable(sub: String, data: StructType,
                            extras: Seq[String] = Seq.empty,
-                           merge: DataFrame => DataFrame = identity) {
+                           merge: DataFrame => DataFrame = identity,
+                           sortBy: Seq[String] = Seq.empty) {
     // data columns, then batch_id, then the extra partition columns —
     // the order partition discovery gives
     private val schema = StructType(
@@ -72,8 +87,8 @@ object StateMaintenance {
 
     /** The table's dir, after refusing one whose oldest batch is split
       * by an undeclared partition column (a `bands/` written while
-      * `band` was one): a write would mix two layouts, which no read
-      * can list. A listing; reads no data. */
+      * `band` was one, a `postings/` while `tb` was): a write would mix
+      * two layouts, which no read can list. A listing; reads no data. */
     private def writable(spark: SparkSession, stateDir: String): String = {
       val dir = path(stateDir)
       batchPartitions(spark, dir).minByOption(_._1).foreach { case (_, p) =>
@@ -94,7 +109,7 @@ object StateMaintenance {
     /** Land rows that already carry their batch_id: every partition
       * they touch commits in ONE job. */
     def overwrite(rows: DataFrame, stateDir: String): Unit =
-      overwritePartitions(rows, writable(rows.sparkSession, stateDir), extras)
+      overwritePartitions(rows, writable(rows.sparkSession, stateDir), extras, sortBy)
 
     /** Every retained partial row with its batch_id, or an empty frame
       * when no batch has landed yet — first-serve-before-first-batch
@@ -123,7 +138,7 @@ object StateMaintenance {
             .filter(col("batch_id") <= upTo).drop("batch_id"))
           .withColumn("batch_id", lit(upTo))
           .localCheckpoint(true)
-        overwritePartitions(folded, dir, extras)
+        overwritePartitions(folded, dir, extras, sortBy)
         // marker AFTER the merged write: from here the fold is complete
         // at upTo and recovery only needs to finish the deletes
         val out = f.create(marker(dir), true)
@@ -187,7 +202,7 @@ object StateMaintenance {
       val survivors = state.filter(col("batch_id").isin(affected: _*))
         .filter(!col("doc_id").isin(removedIds: _*))
         .localCheckpoint(true)
-      overwritePartitions(survivors, dir, extras)
+      overwritePartitions(survivors, dir, extras, sortBy)
       val still = survivors.select(col("batch_id")).distinct()
         .collect().map(_.getLong(0)).toSet
       affected.filterNot(still).foreach(b => fs(spark, dir).delete(
@@ -196,13 +211,36 @@ object StateMaintenance {
   }
 
   /** The replay-safe write: dynamic overwrite replaces exactly the
-    * (batch_id +: extras) partitions `rows` carries and no other. */
+    * (batch_id +: extras) partitions `rows` carries and no other. With
+    * `sortBy`, each task's rows are sorted by the partition columns and
+    * then `sortBy`, which the writer's own partition ordering accepts
+    * as is. */
   private def overwritePartitions(rows: DataFrame, dir: String,
-                                  extras: Seq[String]): Unit =
-    rows.write.mode("overwrite")
+                                  extras: Seq[String],
+                                  sortBy: Seq[String]): Unit =
+    (if (sortBy.isEmpty) rows
+     else rows.sortWithinPartitions((("batch_id" +: extras) ++ sortBy).map(col): _*))
+      .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id" +: extras: _*)
       .parquet(dir)
+
+  /** Run `spark`'s stream checkpoints through [[LocalCheckpointFileManager]]
+    * unless the deployment already chose a manager, in the session or
+    * in its Hadoop configuration (a cloud store's own manager, say),
+    * which then wins. Called before every `start()` here.
+    *
+    * The setting is not restored after `start()`, unlike `startIngest`'s
+    * state width: a file source creates its `sources/0` log on the
+    * stream thread after `start()` returns, through the caller's
+    * session, so a restored setting would send that log back through
+    * Spark's default manager. */
+  def installCheckpointFileManager(spark: SparkSession): Unit = {
+    val key = LocalCheckpointFileManager.ClassKey
+    if (spark.conf.getOption(key).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(key) == null)
+      spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+  }
 
   /** The shared file-drop reader: a parquet readStream over `inputDir`
     * with the schema sniffed from the files already there, and at most
@@ -225,6 +263,7 @@ object StateMaintenance {
                           checkpointDir: String,
                           maxFilesPerTrigger: Option[Int])(
       processor: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
+    installCheckpointFileManager(spark)
     fileDropReader(spark, inputDir, maxFilesPerTrigger)
       .writeStream
       .outputMode("append")

@@ -1,9 +1,28 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
-import graft.streaming.GhIngest
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.streaming.{DocCuration, GhIngest, LocalCheckpointFileManager, StateMaintenance}
+
+/** A caller's own checkpoint manager: the local one, recording the path
+  * of every atomic write it is handed. */
+class RecordingCheckpointFileManager(path: Path, conf: Configuration)
+    extends LocalCheckpointFileManager(path, conf) {
+  override def createAtomic(p: Path, overwriteIfPossible: Boolean)
+      : CheckpointFileManager.CancellableFSDataOutputStream = {
+    RecordingCheckpointFileManager.written.add(p.toUri.getPath)
+    super.createAtomic(p, overwriteIfPossible)
+  }
+}
+object RecordingCheckpointFileManager {
+  val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 /** End-to-end ingest semantics over the GitHub-shaped NDJSON fixture
   * (FIXTURES.md §B): corrupt-line tolerance, F1 cleaning, dedup,
@@ -240,6 +259,83 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt")
       .awaitTermination(60000)
     assert(bronzeIds(s"$tmp/out") === Seq("A", "A", "B"))
+  }
+
+  private val managerKey = LocalCheckpointFileManager.ClassKey
+  private val localManager = classOf[LocalCheckpointFileManager].getName
+
+  /** `body` on a session with no checkpoint manager set, as a fresh
+    * deployment's is; the session's setting is restored afterwards. */
+  private def withoutManager[A](body: => A): A = {
+    val prior = spark.conf.getOption(managerKey)
+    spark.conf.unset(managerKey)
+    try body
+    finally prior.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+  }
+
+  private def drained(q: StreamingQuery): Unit = {
+    assert(q.awaitTermination(120000), String.valueOf(q.id))
+    q.exception.foreach(e => throw e)
+  }
+
+  test("every stream start installs the local checkpoint manager; a caller's own is kept") {
+    val root = Files.createTempDirectory("graft-ckpt-manager")
+    val docs = s"$root/docs"
+    Tables.documents(spark, sf).limit(20)
+      .withColumn("event_time", current_timestamp()).write.parquet(docs)
+    val starts: Seq[(String, String => StreamingQuery)] = Seq(
+      "startIngest" -> (GhIngest.startIngest(spark, fixtureDir, s"$root/bronze", _)),
+      "startScoring" ->
+        (GhIngest.startScoring(spark, s"$root/bronze", s"$root/hourly", _)),
+      "startFileDropStream" ->
+        (StateMaintenance.startFileDropStream(spark, docs, _, None)((_, _) => ())),
+      "startCuration" -> (DocCuration.startCuration(spark, docs, s"$root/cur", _)),
+      "startCurationBounded" ->
+        (DocCuration.startCurationBounded(spark, docs, s"$root/curb", _)))
+    for ((name, start) <- starts) withoutManager {
+      drained(start(s"$root/ckpt-$name"))
+      assert(spark.conf.getOption(managerKey) === Some(localManager), name)
+    }
+    // a manager the caller set stays, and every checkpoint write of the
+    // query goes through it: the source log the stream thread creates
+    // after start() returns, offsets, the state delta, the sink log,
+    // commits
+    val own = classOf[RecordingCheckpointFileManager].getName
+    withConf(managerKey, own) {
+      RecordingCheckpointFileManager.written.clear()
+      drained(GhIngest.startIngest(spark, fixtureDir, s"$root/bronze-own", s"$root/ckpt-own"))
+      assert(spark.conf.get(managerKey) === own)
+      val written = RecordingCheckpointFileManager.written.asScala.toSeq
+        .map(_.stripPrefix(root.toString + "/"))
+      for (p <- Seq("ckpt-own/sources/0/0", "ckpt-own/offsets/0", "ckpt-own/commits/0",
+                    "ckpt-own/state/0/0/1.delta", "bronze-own/_spark_metadata/0"))
+        assert(written.contains(p), written)
+    }
+  }
+
+  test("an ingest checkpoint written under Spark's default manager resumes through startIngest") {
+    val in = Files.createTempDirectory("graft-ckpt-resume")
+    val tmp = Files.createTempDirectory("graft-ckpt-resume-out").toString
+    def hourly: Set[(String, String, Long)] =
+      spark.read.parquet(s"$tmp/hourly")
+        .select(date_format($"hour", "yyyy-MM-dd HH"), $"login", $"score")
+        .as[(String, String, Long)].collect().toSet
+    def run(): Unit = {
+      drained(GhIngest.startIngest(spark, in.toString, s"$tmp/out", s"$tmp/ckpt"))
+      drained(GhIngest.startScoring(spark, s"$tmp/out", s"$tmp/hourly", s"$tmp/ckpt-score"))
+    }
+    land(in, "page1", "A" -> "10:00", "B" -> "10:01")
+    withConf(managerKey, classOf[FileContextBasedCheckpointFileManager].getName)(run())
+    assert(hourly === Set(("2025-08-10 10", "octocat", 2L)))
+    // the next page re-sends A and B inside their horizon: the resumed
+    // dedup state drops them, and only C's hour is new
+    land(in, "page2", "A" -> "10:02", "B" -> "10:03", "C" -> "11:04")
+    withoutManager {
+      run()
+      assert(spark.conf.getOption(managerKey) === Some(localManager))
+    }
+    assert(bronzeIds(s"$tmp/out") === Seq("A", "B", "C"))
+    assert(hourly === Set(("2025-08-10 10", "octocat", 2L), ("2025-08-10 11", "octocat", 1L)))
   }
 
   test("streaming/batch parity (W5): backfill equals batch result") {

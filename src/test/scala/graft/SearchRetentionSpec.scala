@@ -50,6 +50,61 @@ class SearchRetentionSpec extends AnyFunSuite with SparkTestSession {
       === hits(SearchOps.bm25SearchOf(b1.union(b2))))
   }
 
+  test("streaming postings: one dir per batch, its files sorted by (tb, term)") {
+    import java.nio.file.Files
+    import org.apache.hadoop.fs.Path
+    val state = s"${Files.createTempDirectory("graft-bm25-flat")}/state"
+    val docs = Tables.documents(spark, sf)
+    for (b <- 0 to 2)
+      SearchStream.processPostingsBatch(docs.filter($"doc_id" % 3 === b), state, b.toLong)
+    SearchStream.compact(spark, state, 1L)   // folds batches 0 and 1
+    val postings = new Path(s"$state/postings")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batches = fs.listStatus(postings).filter(_.isDirectory)
+    assert(batches.map(_.getPath.getName).toSet === Set("batch_id=1", "batch_id=2"))
+    for (b <- batches) {
+      val files = fs.listStatus(b.getPath)
+      assert(files.forall(_.isFile), b.getPath.getName)
+      // a file of one small batch is one split, read back in file order
+      for (f <- files.map(_.getPath).filter(_.getName.endsWith(".parquet"))) {
+        val keys = spark.read.parquet(f.toString).select($"tb", $"term")
+          .as[(Int, String)].collect().toSeq
+        assert(keys.nonEmpty && keys === keys.sorted, f.getName)
+      }
+    }
+    assert(hits(SearchStream.servedBm25(spark, state)) === hits(SearchOps.bm25Search(spark, sf)))
+  }
+
+  test("streaming postings: a tb-partitioned index from an earlier layout serves, and is refused on write") {
+    import java.nio.file.Files
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.functions.lit
+    val state = s"${Files.createTempDirectory("graft-bm25-layout")}/state"
+    val docs = Tables.documents(spark, sf)
+    val b0 = docs.filter($"doc_id" % 2 === 0)
+    SearchStream.processPostingsBatch(b0, state, 0L)
+    // rewrite postings/ as the earlier layout, partitioned by (batch_id, tb)
+    val postings = new Path(s"$state/postings")
+    val fs = postings.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val rows = SearchOps.postingsOf(SearchOps.tokenizedOf(b0))
+      .withColumn("batch_id", lit(0L)).localCheckpoint(true)
+    assert(fs.delete(postings, true))
+    rows.write.partitionBy("batch_id", "tb").parquet(postings.toString)
+    // reading it still works: tb comes from the path
+    assert(hits(SearchStream.servedBm25(spark, state)) === hits(SearchOps.bm25SearchOf(b0)))
+    def refused(op: => Unit): Unit = {
+      val msg = intercept[IllegalArgumentException](op).getMessage
+      assert(msg.contains("'postings'") && msg.contains("'tb'") &&
+        msg.contains("rebuild the state from its batch inputs"), msg)
+    }
+    refused(SearchStream.compact(spark, state, 0L))
+    refused(SearchStream.processPostingsBatch(docs.filter($"doc_id" % 2 === 1), state, 1L))
+    // nothing was mixed in: both tables hold only batch 0
+    for (t <- Seq("postings", "stats"))
+      assert(fs.listStatus(new Path(s"$state/$t")).filter(_.isDirectory)
+        .map(_.getPath.getName).toSet === Set("batch_id=0"), t)
+  }
+
   test("streaming hybrid: fusion over streamed state equals batch x64") {
     // land the documents in the search stream and the embeddings in
     // the ANN stream, then fuse from the SERVED state — the hybrid
