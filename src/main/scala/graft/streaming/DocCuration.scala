@@ -49,7 +49,7 @@ object DocCuration {
     * processes the current backlog and stops (W5 backfill shape). */
   def startCuration(spark: SparkSession, inputDir: String, outDir: String,
                     checkpointDir: String): StreamingQuery = {
-    StateMaintenance.installCheckpointFileManager(spark)
+    StateMaintenance.installLocalFileIo(spark)
     curated(StateMaintenance.fileDropReader(spark, inputDir, None))
       .dropDuplicates(Seq("fp"))
       .writeStream
@@ -77,7 +77,7 @@ object DocCuration {
                            eventTimeCol: String = "event_time",
                            watermarkDelay: String = "300 seconds",
                            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    StateMaintenance.installCheckpointFileManager(spark)
+    StateMaintenance.installLocalFileIo(spark)
     curated(StateMaintenance.fileDropReader(spark, inputDir,
         maxFilesPerTrigger), carryCols = Seq(eventTimeCol))
       .withWatermark(eventTimeCol, watermarkDelay)

@@ -44,7 +44,10 @@ import graft.functions.GhFunctions.hourKey
   *    day table existed, is served by the recompute instead.
   *
   * Every read goes through the schema the writer fixes (`hourlySchema`,
-  * `GhIngest.bronzeSchema`): no schema-inference job per read.
+  * `GhIngest.bronzeSchema`): no schema-inference job per read. Every
+  * hour write first runs `StateMaintenance.installLocalFileIo`, so its
+  * parquet and committer files are created without a `chmod` process
+  * each: a backfill can be a session's first write, before any stream.
   */
 object GhBackfill {
 
@@ -127,6 +130,7 @@ object GhBackfill {
     * `hourlyScoresPartitioned`. */
   private def writeScores(spark: SparkSession, scores: DataFrame,
                           outDir: String, days: Seq[String]): Unit = {
+    StateMaintenance.installLocalFileIo(spark)
     val out = new Path(outDir)
     val fs = fileSystem(spark, out)
     val dayDir = new Path(out, DayTable)

@@ -29,14 +29,17 @@ import graft.functions.GhFunctions._
   *    that hour's bronze partition and overwrites it with the backfill's
   *    writer — the same idempotent table, kept current per trigger.
   *
-  * Checkpoints: both streams start through
-  * `StateMaintenance.installCheckpointFileManager`, so on a local path
-  * their checkpoint logs are written by [[LocalCheckpointFileManager]]:
-  * a temp file and one POSIX rename, about 4 ms a write, where Spark's
-  * default FileContext manager takes about 15 ms without libhadoop. A
-  * live ingest trigger makes five such writes (source log, offsets,
-  * state delta, sink log, commits). A manager the deployment set itself
-  * is kept, and other schemes get Spark's default.
+  * Local file IO: both streams start through
+  * `StateMaintenance.installLocalFileIo`, so on a local path their
+  * checkpoint logs are written by [[LocalCheckpointFileManager]] (a temp
+  * file and one POSIX rename) and every file they create, checkpoint or
+  * parquet, through [[NioLocalFileSystem]], which sets its permissions
+  * without forking `chmod`. A live ingest trigger makes five checkpoint
+  * writes (source log, offsets, state delta, sink log, commits) at
+  * under 1 ms each, where Spark's default FileContext manager over
+  * Hadoop's file system takes about 15 ms without libhadoop. A manager
+  * or file system the deployment set itself is kept, and other schemes
+  * get Spark's defaults.
   *
   * Scale stance: the groupBy(window, login) shuffles once on
   * (window, login) with map-side partial aggregation; hour-partitioned
@@ -254,14 +257,14 @@ object GhIngest {
     * before it evicts, so without that batch an id re-sent after its
     * horizon would be dropped instead of re-admitted.
     *
-    * The query's checkpoint files go through the manager
-    * `StateMaintenance.installCheckpointFileManager` installs (POSIX
-    * rename on a local path; a caller's own manager wins). That
-    * setting, unlike the width, stays on `spark` after `start()`: the
-    * file source writes its `sources/0` log from the stream thread
-    * after `start()` returns, reading the manager off `spark`. The files
-    * and their format are Spark's either way, so a checkpoint written
-    * under Spark's default manager resumes here. */
+    * The query's checkpoint files go through the manager and file
+    * system `StateMaintenance.installLocalFileIo` installs (POSIX
+    * rename, no `chmod` process, on a local path; a caller's own wins).
+    * Those settings, unlike the width, stay on `spark` after
+    * `start()`: the file source writes its `sources/0` log from the
+    * stream thread after `start()` returns, reading the manager off
+    * `spark`. The files and their format are Spark's either way, so a
+    * checkpoint written under Spark's default manager resumes here. */
   def startIngest(spark: SparkSession, inputDir: String, outDir: String,
                   checkpointDir: String,
                   availableNow: Boolean = true,
@@ -277,7 +280,7 @@ object GhIngest {
       .outputMode("append")
     val key = "spark.sql.shuffle.partitions"
     val prior = spark.conf.getAll.get(key)
-    StateMaintenance.installCheckpointFileManager(spark)
+    StateMaintenance.installLocalFileIo(spark)
     spark.conf.set(key, IngestStateWidth.toLong)
     // start() clones the session's conf into the query
     try (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
@@ -312,7 +315,7 @@ object GhIngest {
         "stateful scoring plan, which this stateless plan cannot resume. Use a " +
         "fresh checkpoint directory: it is safe, because scoring recomputes every " +
         "hour it touches from bronze, so replaying bronze rewrites the same scores.")
-    StateMaintenance.installCheckpointFileManager(spark)
+    StateMaintenance.installLocalFileIo(spark)
     spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)

@@ -2,27 +2,32 @@ package graft.streaming
 
 import java.nio.file.{Files, StandardCopyOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, FileSystem, Path, PathFilter}
+import org.apache.hadoop.fs.{FSDataInputStream, FileAlreadyExistsException, FileStatus, FileSystem, Path, PathFilter}
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.CancellableFSDataOutputStream
 
 /** The checkpoint file manager the streams here run with
-  * (`StateMaintenance.installCheckpointFileManager` sets it on the
-  * session). Every durable step of a micro-batch (source log, offsets,
-  * state delta, sink log, commits) is one `createAtomic`: a temp file,
-  * then a rename onto the final name.
+  * (`StateMaintenance.installLocalFileIo` sets it on the session).
+  * Every durable step of a micro-batch (source log, offsets, state
+  * delta, sink log, commits) is one `createAtomic`: a temp file, then a
+  * rename onto the final name.
   *
   *  - On the local file system (`file:`) it writes through Spark's
   *    `FileSystemBasedCheckpointFileManager`, whose rename is one POSIX
   *    `rename(2)`. Spark's default there,
   *    `FileContextBasedCheckpointFileManager`, renames through
   *    FileContext: without libhadoop a log write takes about 15 ms
-  *    there and about 4 ms here (`CheckpointIoProbe` in the tests
-  *    re-measures both). Hadoop's `FileSystem.rename` refuses an
-  *    existing target by contract, so Spark's manager keeps the old file
-  *    and leaves its temp file behind when asked to overwrite (a
-  *    replayed state delta, say); an overwriting write here renames with
-  *    `rename(2)` itself, which replaces the target atomically.
+  *    there, about 4 ms here over Hadoop's file system (its temp file
+  *    and `.crc` each fork a `chmod`), and under 1 ms here over
+  *    [[NioLocalFileSystem]], which the same helper installs
+  *    (`CheckpointIoProbe` in the tests re-measures all three).
+  *    Hadoop's `FileSystem.rename` refuses an existing target by
+  *    contract, so Spark's manager keeps the old file and leaves its
+  *    temp file behind when asked to overwrite (a replayed state delta,
+  *    say); an overwriting write here renames with `rename(2)` itself,
+  *    which replaces the target atomically. A refused non-overwriting
+  *    write deletes its temp file and `.crc` before it throws, which
+  *    Spark's manager leaves behind.
   *  - On any other scheme it is exactly what Spark picks by default
   *    (`CheckpointFileManager.create` with this class's setting
   *    removed), so HDFS, S3 and the rest behave as without it.
@@ -67,12 +72,17 @@ object LocalCheckpointFileManager {
     * then the data file moves by one `rename(2)`, then its sidecar. A
     * crash in between leaves a file that reads unverified (a missing
     * sidecar is allowed), never a data file beside another file's
-    * checksum. */
+    * checksum. A non-overwriting rename refused by an existing target
+    * deletes the temp file and its sidecar, then rethrows: the stream's
+    * `close()` throws before it cleans up, and its `cancel()` is then a
+    * no-op. */
   private final class OverwritingRename(path: Path, conf: Configuration)
       extends FileSystemBasedCheckpointFileManager(path, conf) {
     override def renameTempFile(src: Path, dst: Path,
                                 overwriteIfPossible: Boolean): Unit =
-      if (!overwriteIfPossible) super.renameTempFile(src, dst, overwriteIfPossible)
+      if (!overwriteIfPossible)
+        try super.renameTempFile(src, dst, overwriteIfPossible)
+        catch { case e: FileAlreadyExistsException => fs.delete(src, false); throw e }
       else {
         def local(p: Path) = new java.io.File(fs.makeQualified(p).toUri.getPath).toPath
         def crc(p: Path) = local(new Path(p.getParent, s".${p.getName}.crc"))

@@ -37,21 +37,25 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    the stream's checkpoint already implies), as parquet compaction
   *    jobs do everywhere.
   *
-  * Checkpoints: every stream here starts through
-  * `installCheckpointFileManager`, which points the session at
-  * [[LocalCheckpointFileManager]] unless the deployment chose a manager
-  * itself. On a local path each checkpoint log write is then a temp file
-  * plus one POSIX rename (about 4 ms), not Spark's default FileContext
-  * rename (about 15 ms on a host without libhadoop); other schemes keep
-  * Spark's default. The setting stays on the session after `start()`:
-  * the file source writes its first log after `start()` returns, from
-  * the stream thread, and reads the manager off the caller's session.
+  * Local file IO: every stream here starts through `installLocalFileIo`
+  * (so does `GhBackfill`'s hour write), which points the session at
+  * [[LocalCheckpointFileManager]] and [[NioLocalFileSystem]] unless the
+  * deployment chose its own. On a local path each checkpoint log write
+  * is then a temp file plus one POSIX rename, not Spark's default
+  * FileContext rename, and no file or directory a write creates forks a
+  * `chmod` process (Hadoop's way without libhadoop); other schemes keep
+  * Spark's and Hadoop's defaults. The settings stay on the session
+  * after `start()`: the file source writes its first log after
+  * `start()` returns, from the stream thread, and reads the manager off
+  * the caller's session.
   */
 object StateMaintenance {
 
+  // the session's Hadoop conf, as its queries get it: the compaction
+  // and removal markers are created through the file system that
+  // `installLocalFileIo` set, like the partials themselves
   private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new org.apache.hadoop.fs.Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
 
   /** A parquet table read through the `schema` its writer fixes: no
     * schema-inference job, and a missing dir (nothing written yet) or one
@@ -225,21 +229,36 @@ object StateMaintenance {
       .partitionBy("batch_id" +: extras: _*)
       .parquet(dir)
 
-  /** Run `spark`'s stream checkpoints through [[LocalCheckpointFileManager]]
-    * unless the deployment already chose a manager, in the session or
-    * in its Hadoop configuration (a cloud store's own manager, say),
-    * which then wins. Called before every `start()` here.
+  /** Point `spark`'s local file writes at graft's two local writers:
+    * stream checkpoints at [[LocalCheckpointFileManager]], and every
+    * per-query Hadoop configuration (driver listings, task writers, the
+    * checkpoint and state-store managers) at [[NioLocalFileSystem]] for
+    * `file:`. Each is set only when neither the session nor its Hadoop
+    * configuration names one already: a deployment's own manager or
+    * file system wins. Called before every stream `start()` and hour
+    * write here.
     *
-    * The setting is not restored after `start()`, unlike `startIngest`'s
-    * state width: a file source creates its `sources/0` log on the
-    * stream thread after `start()` returns, through the caller's
-    * session, so a restored setting would send that log back through
-    * Spark's default manager. */
-  def installCheckpointFileManager(spark: SparkSession): Unit = {
-    val key = LocalCheckpointFileManager.ClassKey
-    if (spark.conf.getOption(key).isEmpty &&
-        spark.sparkContext.hadoopConfiguration.get(key) == null)
-      spark.conf.set(key, classOf[LocalCheckpointFileManager].getName)
+    * The file system needs `fs.file.impl.disable.cache`: Hadoop caches
+    * file systems by scheme and user, not by configuration, and the
+    * session's warehouse check has already cached the default `file:`
+    * one. So the file system is per session: driver code that resolves
+    * a path through `sparkContext.hadoopConfiguration` gets the default.
+    *
+    * The settings are not restored after `start()`, unlike
+    * `startIngest`'s state width: a file source creates its `sources/0`
+    * log on the stream thread after `start()` returns, through the
+    * caller's session, so restored settings would send that log back
+    * through Spark's defaults. */
+  def installLocalFileIo(spark: SparkSession): Unit = {
+    def unset(key: String) = spark.conf.getOption(key).isEmpty &&
+      spark.sparkContext.hadoopConfiguration.get(key) == null
+    if (unset(LocalCheckpointFileManager.ClassKey))
+      spark.conf.set(LocalCheckpointFileManager.ClassKey,
+        classOf[LocalCheckpointFileManager].getName)
+    if (unset(NioLocalFileSystem.ImplKey)) {
+      spark.conf.set(NioLocalFileSystem.ImplKey, classOf[NioLocalFileSystem].getName)
+      spark.conf.set(s"${NioLocalFileSystem.ImplKey}.disable.cache", "true")
+    }
   }
 
   /** The shared file-drop reader: a parquet readStream over `inputDir`
@@ -263,7 +282,7 @@ object StateMaintenance {
                           checkpointDir: String,
                           maxFilesPerTrigger: Option[Int])(
       processor: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    installCheckpointFileManager(spark)
+    installLocalFileIo(spark)
     fileDropReader(spark, inputDir, maxFilesPerTrigger)
       .writeStream
       .outputMode("append")

@@ -3,12 +3,14 @@ package graft
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import graft.streaming.{DocCuration, GhIngest, LocalCheckpointFileManager, StateMaintenance}
+import graft.streaming.{DocCuration, GhBackfill, GhIngest, LocalCheckpointFileManager, NioLocalFileSystem, StateMaintenance}
 
 /** A caller's own checkpoint manager: the local one, recording the path
   * of every atomic write it is handed. */
@@ -22,6 +24,20 @@ class RecordingCheckpointFileManager(path: Path, conf: Configuration)
 }
 object RecordingCheckpointFileManager {
   val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** A caller's own local file system: Hadoop's, recording the path of
+  * every file created through it. */
+class RecordingLocalFileSystem extends LocalFileSystem {
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    RecordingLocalFileSystem.created.add(p.toUri.getPath)
+    super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+object RecordingLocalFileSystem {
+  val created = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
 /** End-to-end ingest semantics over the GitHub-shaped NDJSON fixture
@@ -263,14 +279,25 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
 
   private val managerKey = LocalCheckpointFileManager.ClassKey
   private val localManager = classOf[LocalCheckpointFileManager].getName
+  private val fsKey = NioLocalFileSystem.ImplKey
+  private val noCacheKey = s"$fsKey.disable.cache"
+  private val nioFs = classOf[NioLocalFileSystem].getName
 
-  /** `body` on a session with no checkpoint manager set, as a fresh
-    * deployment's is; the session's setting is restored afterwards. */
-  private def withoutManager[A](body: => A): A = {
-    val prior = spark.conf.getOption(managerKey)
-    spark.conf.unset(managerKey)
+  /** `body` on a session with no checkpoint manager or local file
+    * system set, as a fresh deployment's is; the session's settings are
+    * restored afterwards. */
+  private def withoutLocalIo[A](body: => A): A = {
+    val keys = Seq(managerKey, fsKey, noCacheKey)
+    val prior = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.unset)
     try body
-    finally prior.fold(spark.conf.unset(managerKey))(spark.conf.set(managerKey, _))
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def installed(what: String): Unit = {
+    assert(spark.conf.getOption(managerKey) === Some(localManager), what)
+    assert(spark.conf.getOption(fsKey) === Some(nioFs), what)
+    assert(spark.conf.getOption(noCacheKey) === Some("true"), what)
   }
 
   private def drained(q: StreamingQuery): Unit = {
@@ -292,9 +319,15 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
       "startCuration" -> (DocCuration.startCuration(spark, docs, s"$root/cur", _)),
       "startCurationBounded" ->
         (DocCuration.startCurationBounded(spark, docs, s"$root/curb", _)))
-    for ((name, start) <- starts) withoutManager {
+    for ((name, start) <- starts) withoutLocalIo {
       drained(start(s"$root/ckpt-$name"))
-      assert(spark.conf.getOption(managerKey) === Some(localManager), name)
+      installed(name)
+    }
+    // a backfill can be a session's first write, before any stream
+    withoutLocalIo {
+      GhBackfill.backfillMissingHours(spark,
+        GhIngest.cleanEvents(raw), s"$root/backfill")
+      installed("backfillMissingHours")
     }
     // a manager the caller set stays, and every checkpoint write of the
     // query goes through it: the source log the stream thread creates
@@ -330,12 +363,31 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     // the next page re-sends A and B inside their horizon: the resumed
     // dedup state drops them, and only C's hour is new
     land(in, "page2", "A" -> "10:02", "B" -> "10:03", "C" -> "11:04")
-    withoutManager {
+    withoutLocalIo {
       run()
-      assert(spark.conf.getOption(managerKey) === Some(localManager))
+      installed("resume")
     }
     assert(bronzeIds(s"$tmp/out") === Seq("A", "B", "C"))
     assert(hourly === Set(("2025-08-10 10", "octocat", 2L), ("2025-08-10 11", "octocat", 1L)))
+  }
+
+  test("a caller's own local file system is kept and receives the data writes") {
+    val root = Files.createTempDirectory("graft-own-fs")
+    withConf(fsKey, classOf[RecordingLocalFileSystem].getName) {
+      withConf(noCacheKey, "true") {
+        RecordingLocalFileSystem.created.clear()
+        drained(GhIngest.startIngest(spark, fixtureDir, s"$root/bronze", s"$root/ckpt"))
+        drained(GhIngest.startScoring(spark, s"$root/bronze", s"$root/hourly", s"$root/ckpt-s"))
+        assert(spark.conf.get(fsKey) === classOf[RecordingLocalFileSystem].getName)
+      }
+    }
+    val created = RecordingLocalFileSystem.created.asScala.toSeq
+      .map(_.stripPrefix(root.toString + "/"))
+    // the hour write stages its files under hourly/.spark-staging-<job>/
+    for ((table, part) <- Seq("bronze/" -> "event_date=", "hourly/" -> "score_date="))
+      assert(created.exists(p => p.startsWith(table) && p.contains(part) &&
+        p.endsWith(".parquet")), created)
+    assert(created.exists(_.startsWith("ckpt/offsets/")), created)
   }
 
   test("streaming/batch parity (W5): backfill equals batch result") {

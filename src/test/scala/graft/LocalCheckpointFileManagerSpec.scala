@@ -57,8 +57,8 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     intercept[FileAlreadyExistsException](write("second", overwrite = false))
     assert(read(target) === "first")
     // the overwrite moves its temp file and sidecar onto the target's:
-    // no file is added (the refused write's temp file is Spark's to
-    // leave), and the read verifies against the replaced checksum
+    // no file is added (the refused write removed its own temp file),
+    // and the read verifies against the replaced checksum
     val before = dir.toFile.list().toSet
     write("third", overwrite = true)
     assert(read(target) === "third")
@@ -71,5 +71,19 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     assert(fresh.toFile.list().exists(_.endsWith(".tmp")))
     out.cancel()
     assert(fresh.toFile.list().isEmpty, fresh.toFile.list().toSeq)
+  }
+
+  test("a refused write leaves no temp file or sidecar behind") {
+    val dir = Files.createTempDirectory("graft-cfm-refused")
+    val fm = new LocalCheckpointFileManager(new Path(dir.toUri), conf)
+    val target = new Path(dir.toUri.toString, "0")
+    def write(text: String): Unit = {
+      val out = fm.createAtomic(target, overwriteIfPossible = false)
+      out.write(text.getBytes(UTF_8))
+      try out.close() catch { case e: Throwable => out.cancel(); throw e }
+    }
+    write("first")
+    intercept[FileAlreadyExistsException](write("second"))
+    assert(dir.toFile.list().toSet === Set("0", ".0.crc"))
   }
 }
