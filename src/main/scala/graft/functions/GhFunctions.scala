@@ -60,8 +60,4 @@ object GhFunctions {
     * (`update-contributor-scores.js:246`). */
   def dayKey(ts: Column): Column =
     concat(date_format(ts, "yyyy-MM-dd"), lit(":sum"))
-
-  /** P2 — flatten a struct column to a JSON string at output boundaries
-    * (`insert-events-into-db.lua:17-30`); internally we keep structs. */
-  def flattenToJson(c: Column): Column = to_json(c)
 }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -17,14 +16,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * a fetch step): `spark.read.format("gharchive").option("start",
   * "2024-01-15-0").option("end", "2024-01-15-23").load()` yields
   * `(date STRING, hour INT, line STRING)` — one row per raw NDJSON
-  * event line, one input partition per archive hour. The same table
-  * also reads as a STREAM (`spark.readStream.format("gharchive")`):
-  * each micro-batch consumes the next published hours, so tail-follow
-  * and backfill unify under one source instead of the fetch-then-read
-  * landing-dir hop.
+  * event line, one input partition per archive hour. It is the one
+  * route archive hours take into the engine: `GhArchivePipeline` reads
+  * the missing hours of its walk through it, and
+  * `GhIngest.parseEventLines` parses the `line` column.
   *
-  * Why a DSv2 rather than fetch-then-read (`GhFetch` remains for the
-  * reference's land-to-disk pipeline): the catalog integration makes
+  * Why a DSv2 rather than fetch-then-read: the catalog integration makes
   * hour PRUNING a planner concern — `WHERE hour BETWEEN 9 AND 17` (or
   * a date range) reaches `pushFilters`, and non-matching hours are
   * never planned, never fetched, never gunzipped. At a month of
@@ -74,6 +71,9 @@ class GhArchiveSource extends TableProvider with DataSourceRegister {
 }
 
 object GhArchiveSource {
+  /** The public archive; the `baseUrl` option's default. */
+  val DefaultBaseUrl = "https://data.gharchive.org"
+
   val Schema: StructType = StructType(Seq(
     StructField("date", StringType, nullable = false),
     StructField("hour", IntegerType, nullable = false),
@@ -151,30 +151,6 @@ object GhArchiveSource {
     conn.setReadTimeout(net.readTimeoutMs)
     conn.getInputStream
   }
-
-  /** Is the hour's archive file published? HEAD for http(s) (no body
-    * transfer), open-and-close otherwise — the streaming frontier
-    * probe. */
-  private[sources] def hourExists(url: String, net: GhNetConf): Boolean =
-    try {
-      new java.net.URI(url).toURL.openConnection() match {
-        case http: java.net.HttpURLConnection =>
-          http.setConnectTimeout(net.connectTimeoutMs)
-          http.setReadTimeout(net.readTimeoutMs)
-          http.setRequestMethod("HEAD")
-          val ok = http.getResponseCode == 200
-          http.disconnect()
-          ok
-        case other =>
-          other.setConnectTimeout(net.connectTimeoutMs)
-          other.setReadTimeout(net.readTimeoutMs)
-          val in = other.getInputStream
-          in.close()
-          true
-      }
-    } catch {
-      case _: java.io.FileNotFoundException => false
-    }
 }
 
 /** Serializable network discipline for the hour readers — ships to
@@ -201,20 +177,16 @@ private[sources] class GhArchiveTable(props: Map[String, String])
     s"gharchive(${props("start")}..${props("end")})"
   override def schema(): StructType = GhArchiveSource.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GhArchiveScanBuilder(
-      props.getOrElse("baseurl",
-        graft.streaming.GhFetch.DefaultArchiveUrl),
-      props("start"), props("end"), GhNetConf.fromProps(props),
-      props.get("maxhourspertrigger").map(_.toInt))
+      props.getOrElse("baseurl", GhArchiveSource.DefaultBaseUrl),
+      props("start"), props("end"), GhNetConf.fromProps(props))
 }
 
 private[sources] class GhArchiveScanBuilder(baseUrl: String, start: String,
-                                            end: String, net: GhNetConf,
-                                            maxHoursPerTrigger: Option[Int])
+                                            end: String, net: GhNetConf)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns {
   private var pushed: Array[Filter] = Array.empty
@@ -246,98 +218,7 @@ private[sources] class GhArchiveScanBuilder(baseUrl: String, start: String,
 
     override def createReaderFactory(): PartitionReaderFactory =
       new GhHourReaderFactory(required.fieldNames)
-
-    override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-      new GhArchiveMicroBatch(baseUrl, start, end, net,
-        maxHoursPerTrigger, pushed, required.fieldNames)
   }
-}
-
-/** Stream offset = count of hours (from `start`) already consumed. */
-private[sources] case class GhHourOffset(n: Int) extends Offset {
-  override def json(): String = n.toString
-}
-
-/** The hour range as a MICRO-BATCH stream: each trigger consumes the
-  * next PUBLISHED hours. The frontier probe walks forward while the
-  * next hour's file exists (HEAD for http) — the same EXISTS early
-  * break as `GhFetch`'s hour walk, matching the archive's sequential
-  * publication: the first absent hour is the tail, not a hole.
-  * (Historical holes — archive outages — belong to the batch path,
-  * which treats them as empty partitions; a stream pointed at one
-  * waits there by design, exactly like the reference's poll loop.)
-  *
-  * `maxhourspertrigger` caps each batch's advance, bounding per-batch
-  * task count and download volume — honored through
-  * SupportsAdmissionControl, so `Trigger.AvailableNow` (native via
-  * SupportsTriggerAvailableNow: the frontier is captured once at
-  * prepare and drained across rate-limited batches) and continuous
-  * triggers both respect it. Offsets are hour counts, so a restarted
-  * stream resumes exactly where the checkpoint committed — replayed
-  * hour files re-read identically (the archive is immutable), and the
-  * downstream dedup/watermark discipline already absorbs
-  * at-least-once delivery. */
-private[sources] class GhArchiveMicroBatch(baseUrl: String, start: String,
-                                           end: String, net: GhNetConf,
-                                           maxHoursPerTrigger: Option[Int],
-                                           pushed: Array[Filter],
-                                           fields: Array[String])
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
-  private val hours = GhArchiveSource.hoursInRange(start, end)
-  // hours known published — monotone; probed forward on demand
-  private var published = 0
-  // AvailableNow target: the frontier captured at prepare time
-  private var target: Option[Int] = None
-
-  override def initialOffset(): Offset = GhHourOffset(0)
-
-  private def probe(upTo: Int): Unit =
-    while (published < upTo && GhArchiveSource.hourExists(
-        urlOf(hours(published)), net))
-      published += 1
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    probe(hours.length)
-    target = Some(published)
-  }
-
-  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
-
-  override def latestOffset(): Offset =
-    throw new UnsupportedOperationException(
-      "latestOffset(Offset, ReadLimit) is used (SupportsAdmissionControl)")
-
-  override def latestOffset(startOff: Offset, limit: ReadLimit): Offset = {
-    val from = startOff.asInstanceOf[GhHourOffset].n
-    val lim = target.getOrElse(hours.length)
-    val cap = maxHoursPerTrigger.fold(lim)(m => math.min(lim, from + m))
-    probe(cap)
-    GhHourOffset(math.max(from, math.min(published, cap)))
-  }
-
-  override def reportLatestOffset(): Offset = GhHourOffset(published)
-
-  private def urlOf(h: (String, Int)): String =
-    s"$baseUrl/${h._1}-${h._2}.json.gz"
-
-  override def planInputPartitions(startOff: Offset,
-                                   endOff: Offset): Array[InputPartition] =
-    hours.slice(startOff.asInstanceOf[GhHourOffset].n,
-        endOff.asInstanceOf[GhHourOffset].n)
-      .filter { case (d, h) =>
-        pushed.forall(GhArchiveSource.matches(d, h, _)) }
-      .map { case (d, h) =>
-        GhHourPartition(baseUrl, d, h, net): InputPartition }
-      .toArray
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GhHourReaderFactory(fields)
-
-  override def deserializeOffset(json: String): Offset =
-    GhHourOffset(json.trim.toInt)
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 private[sources] case class GhHourPartition(baseUrl: String, date: String,

@@ -18,8 +18,8 @@ import graft.functions.GhFunctions._
   *    poll-sized trigger pays a store commit per partition (see
   *    `startIngest` for the bound, the no-data batches it keeps, and
   *    older checkpoints).
-  *  - backfill (`update-contributor-scores.js`): batch read of hour
-  *    files (`.json.gz` decompresses natively) → F2+F3 filters →
+  *  - backfill (`update-contributor-scores.js`): the `gharchive`
+  *    source's hour lines, parsed by `parseEventLines` → F2+F3 filters →
   *    1-hour tumbling-window count per login (A1) → idempotent
   *    per-hour-partition overwrite; daily rollup = each touched day
   *    re-aggregated from hourly and stored beside it (A2;
@@ -94,17 +94,23 @@ object GhIngest {
     * of failing the job — the analogue of the reference's per-line
     * try/catch (`update-contributor-scores.js:147-150`). */
   def readEventsJson(spark: SparkSession, path: String): DataFrame =
-    readEventsJson(spark, Seq(path))
-
-  /** Multi-path form — the archive pipeline reads exactly the hour
-    * files its fetch walk landed, not whatever else the directory
-    * holds. */
-  def readEventsJson(spark: SparkSession, paths: Seq[String]): DataFrame =
     spark.read
       .schema(ghEventSchema)
       .option("mode", "PERMISSIVE")
       .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(paths: _*)
+      .json(path)
+
+  /** `readEventsJson` for a LINE-shaped relation (the `gharchive`
+    * source's `line` column): the same schema and the same PERMISSIVE
+    * quarantine into `_corrupt_record`, through `from_json`. One
+    * difference: `payload` holds the nested object re-written compact,
+    * where the file reader keeps its raw text. They differ only in
+    * whitespace, and GHArchive's lines are compact already. */
+  def parseEventLines(lines: DataFrame): DataFrame =
+    lines.select(from_json(col("line"), ghEventSchema,
+        Map("mode" -> "PERMISSIVE",
+          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("e"))
+      .select(col("e.*"))
 
   /** Rows unusable downstream: failed to parse fully (PERMISSIVE mode
     * keeps any prefix fields it managed to read) or missing the event
@@ -210,21 +216,6 @@ object GhIngest {
       .withWatermark("created_at", DedupWatermark)
       .dropDuplicatesWithinWatermark(Seq("id"))
   }
-
-  /** `streamClean` for a LINE-shaped streaming relation (the
-    * `ghevents` DSv2 poll source's `line` column): the SAME
-    * schema-on-read (PERMISSIVE quarantine via from_json's corrupt
-    * column), bot filter, watermark, and id dedup as the file-drop
-    * path — one definition of clean, so the two ingest fronts cannot
-    * drift (parity spec-pinned). */
-  def streamCleanLines(lines: DataFrame): DataFrame =
-    cleanEvents(lines
-        .select(from_json(col("line"), ghEventSchema,
-          Map("mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> "_corrupt_record")).as("e"))
-        .select(col("e.*")))
-      .withWatermark("created_at", DedupWatermark)
-      .dropDuplicatesWithinWatermark(Seq("id"))
 
   /** Number of dedup state partitions (the "state width") a fresh
     * ingest checkpoint is started with. */

@@ -67,12 +67,14 @@ object SubstringStream {
     * Refuses when the marker disagrees, or when state exists with NO
     * marker — an unmarked dir's key format is unknown (v1 hex keys and
     * early v2 binary keys were both written unmarked), so it must be
-    * rebuilt, not mixed into. A blank marker reads as a missing one. */
+    * rebuilt, not mixed into. A blank marker reads as a missing one.
+    * The marker resolves through the session's Hadoop conf, as the
+    * partials do, so its temp file is created through the file system
+    * `StateMaintenance.installLocalFileIo` set. */
   private def checkFormat(spark: SparkSession, stateDir: String,
                           stampIfNew: Boolean): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val marker = formatPath(stateDir)
-    val fs = marker.getFileSystem(conf)
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
     val found =
       if (!fs.exists(marker)) ""
       else {

@@ -15,8 +15,8 @@ import graft.operators.{ArtifactBuild, SimilarityOps}
   * private staging dir and publication is one atomic rename; this
   * spec probes that claim DURING the mutation window instead of
   * asserting it from either side (EnsureIncrementalSpec pins the
-  * before/after equivalences; GhEventsSourceSpec pioneered the
-  * kill-window style this copies). */
+  * before/after equivalences; ArtifactChaosSpec and
+  * DedupStreamChaosSpec kill inside the same window). */
 class ArtifactChaosReaderSpec extends AnyFunSuite with SparkTestSession {
   import spark.implicits._
 

@@ -96,6 +96,40 @@ class GhArchiveSourceSpec extends AnyFunSuite with SparkTestSession {
     val parsed = spark.read.json(lines)
     assert(parsed.select($"id").as[String].collect().sorted.toSeq ===
       Seq("1", "2", "3"))
+
+    // parity: the source's lines through `parseEventLines` clean to the
+    // same rows as the file reader over the same hour files, and the
+    // fixture's one malformed (truncated) line is quarantined on both
+    // sides. `payload` is compared as JSON: the file reader keeps a
+    // nested object's raw text, which in this fixture has spaces after
+    // its separators, and `from_json` writes it compact
+    import graft.streaming.GhIngest
+    val events = {
+      val in = getClass.getResourceAsStream("/gh_events.ndjson")
+      val src = scala.io.Source.fromInputStream(in, "UTF-8")
+      try src.getLines().filter(_.trim.nonEmpty).toList finally src.close()
+    }
+    val dir = Files.createTempDirectory("graft-gharchive-parity")
+    val (h12, rest) = events.partition(_.contains("2025-08-10T12:"))
+    writeHour(dir, "2025-08-10", 12, h12)
+    writeHour(dir, "2025-08-10", 13, rest)
+    val viaSource = GhIngest.parseEventLines(
+      read(s"file://$dir", "2025-08-10-12", "2025-08-10-13"))
+    val viaFiles = GhIngest.readEventsJson(spark, dir.toString)
+    val om = new com.fasterxml.jackson.databind.ObjectMapper()
+    def rows(raw: org.apache.spark.sql.DataFrame) = {
+      val clean = GhIngest.cleanEvents(raw)
+      val p = clean.schema.fieldIndex("payload")
+      clean.collect().toSeq.map(r => r.toSeq.updated(p, om.readTree(r.getString(p))))
+        .sortBy(_.toString)
+    }
+    assert(rows(viaSource).nonEmpty)
+    assert(rows(viaSource) === rows(viaFiles))
+    def quarantined(raw: org.apache.spark.sql.DataFrame) =
+      GhIngest.corruptRecords(raw).select($"_corrupt_record").as[String].collect().toSeq
+    assert(quarantined(viaSource).size === 1)
+    assert(quarantined(viaSource).head.startsWith("""{"id": "1018""""))
+    assert(quarantined(viaFiles) === quarantined(viaSource))
   }
 
   test("a pushed In filter containing null prunes safely (no planning NPE)") {
@@ -159,60 +193,5 @@ class GhArchiveSourceSpec extends AnyFunSuite with SparkTestSession {
       // the stall was bounded by the configured timeout, not a hang
       assert(secs < 30, s"open took ${secs}s — timeout did not bite")
     } finally server.stop(0)
-  }
-
-  test("micro-batch stream drains the published hours ≡ the batch read") {
-    import org.apache.spark.sql.streaming.Trigger
-    val (dir, base) = fixture()
-    val root = Files.createTempDirectory("graft-gharchive-stream")
-    val (ckpt, out) = (s"$root/ckpt", s"$root/out")
-    def drain(): Unit = {
-      val q = spark.readStream.format("gharchive")
-        .option("baseUrl", base)
-        // the range stretches past the published frontier (hour 6):
-        // the stream must stop at the first absent hour, not error
-        .option("start", "2024-01-15-3").option("end", "2024-01-15-6")
-        .load()
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000))
-    }
-    def sunk(): Seq[(String, Int, String)] =
-      spark.read.parquet(out).as[(String, Int, String)]
-        .collect().sortBy(_._3).toSeq
-    drain()
-    assert(sunk() === read(base, "2024-01-15-3", "2024-01-15-4")
-      .as[(String, Int, String)].collect().sortBy(_._3).toSeq)
-    // tail-follow: hour 5 publishes later; a restart from the same
-    // checkpoint consumes exactly the new hour (exactly-once through
-    // the file sink — no re-emission of hours 3–4)
-    writeHour(dir, "2024-01-15", 5, Seq("""{"id":"7","type":"IssuesEvent"}"""))
-    drain()
-    assert(sunk() === read(base, "2024-01-15-3", "2024-01-15-5")
-      .as[(String, Int, String)].collect().sortBy(_._3).toSeq)
-  }
-
-  test("maxHoursPerTrigger bounds each micro-batch's advance") {
-    val (_, base) = fixture()
-    val ckpt = Files.createTempDirectory("graft-gharchive-rate").toString
-    val q = spark.readStream.format("gharchive")
-      .option("baseUrl", base)
-      .option("start", "2024-01-15-3").option("end", "2024-01-15-6")
-      .option("maxHoursPerTrigger", "1")
-      .load()
-      .writeStream.format("memory").queryName("gh_rate")
-      .option("checkpointLocation", ckpt)
-      .start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("gh_rate").as[(String, Int, String)]
-        .collect().sortBy(_._3).toSeq
-      assert(got === read(base, "2024-01-15-3", "2024-01-15-4")
-        .as[(String, Int, String)].collect().sortBy(_._3).toSeq)
-      // the two published hours arrived in (at least) two batches
-      assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
-        "rate limit must split the hours across micro-batches")
-    } finally q.stop()
   }
 }

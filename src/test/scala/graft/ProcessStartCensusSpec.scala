@@ -6,7 +6,7 @@ import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.col
-import graft.streaming.{GhBackfill, GhIngest, ReportStream}
+import graft.streaming.{GhBackfill, GhIngest, ReportStream, SubstringStream}
 
 /** The processes the write paths start, counted by JFR's
   * `jdk.ProcessStart` event in this JVM: creating local files and
@@ -20,6 +20,8 @@ class ProcessStartCensusSpec extends AnyFunSuite with SparkTestSession {
     Files.copy(getClass.getResourceAsStream("/gh_events.ndjson"),
       fixture.resolve("gh_events.ndjson"))
     val root = Files.createTempDirectory("graft-census").toString
+    val docDrop = s"$root/docs"
+    Tables.documents(spark, sf).select("doc_id", "text").limit(20).write.parquet(docDrop)
     val fresh = spark.newSession()
     def drained(q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
       assert(q.awaitTermination(120000), String.valueOf(q.id))
@@ -39,7 +41,10 @@ class ProcessStartCensusSpec extends AnyFunSuite with SparkTestSession {
         for (b <- 0L to 1L)
           ReportStream.processReportBatch(docs.filter(col("doc_id") % 2 === b), s"$root/report", b)
         ReportStream.compact(fresh, s"$root/report", 1L)
-      })
+      },
+      // its first batch stamps the state dir's `_format` marker
+      "SubstringStream" -> (() => drained(SubstringStream.startDocStream(
+        fresh, docDrop, s"$root/substring", s"$root/ckpt-d"))))
     val started = steps.map { case (name, run) => name -> processesStarted(run()) }
     val chmods = started.map { case (name, cmds) =>
       val own = cmds.filter(_.startsWith("chmod"))
