@@ -256,7 +256,9 @@ private[sources] class GhHourReader(p: GhHourPartition,
   // open eagerly, tolerating ONLY known absence (HTTP 404 / missing
   // file → FileNotFoundException): the reference's per-hour
   // log-and-continue. Transient open failures (connect/read timeout,
-  // reset) retry with linear backoff up to net.maxRetries; a corrupt
+  // reset) retry with linear backoff up to net.maxRetries. A payload
+  // that is not gzip (ZipException, itself an IOException) fails the
+  // task on its first open: reopening serves the same bytes. A corrupt
   // or half-served payload mid-read still throws and fails the task —
   // retriable by the scheduler, never silently empty.
   {
@@ -268,6 +270,7 @@ private[sources] class GhHourReader(p: GhHourPartition,
         case _: java.io.FileNotFoundException =>
           System.err.println(s"[gharchive] $url absent — empty hour")
           reader = null; opened = true
+        case e: java.util.zip.ZipException => throw e
         case e: java.io.IOException if attempt < p.net.maxRetries =>
           attempt += 1
           System.err.println(

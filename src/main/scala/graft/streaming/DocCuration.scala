@@ -49,16 +49,15 @@ object DocCuration {
     * processes the current backlog and stops (W5 backfill shape). */
   def startCuration(spark: SparkSession, inputDir: String, outDir: String,
                     checkpointDir: String): StreamingQuery = {
-    StateMaintenance.installLocalFileIo(spark)
-    curated(StateMaintenance.fileDropReader(spark, inputDir, None))
-      .dropDuplicates(Seq("fp"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateMaintenance.startStream(spark,
+      curated(StateMaintenance.fileDropReader(spark, inputDir, None))
+        .dropDuplicates(Seq("fp"))
+        .writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpointDir)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()))
   }
 
   /** BOUNDED-STATE streaming curation — the 24/7 deployment shape the
@@ -77,18 +76,17 @@ object DocCuration {
                            eventTimeCol: String = "event_time",
                            watermarkDelay: String = "300 seconds",
                            maxFilesPerTrigger: Option[Int] = None): StreamingQuery = {
-    StateMaintenance.installLocalFileIo(spark)
-    curated(StateMaintenance.fileDropReader(spark, inputDir,
-        maxFilesPerTrigger), carryCols = Seq(eventTimeCol))
-      .withWatermark(eventTimeCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark(Seq("fp"))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateMaintenance.startStream(spark,
+      curated(StateMaintenance.fileDropReader(spark, inputDir,
+          maxFilesPerTrigger), carryCols = Seq(eventTimeCol))
+        .withWatermark(eventTimeCol, watermarkDelay)
+        .dropDuplicatesWithinWatermark(Seq("fp"))
+        .writeStream
+        .format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", checkpointDir)
+        .outputMode("append")
+        .trigger(Trigger.AvailableNow()))
   }
 
   // ---- near-dup gate (streaming) ----------------------------------------

@@ -29,17 +29,21 @@ import graft.functions.GhFunctions._
   *    that hour's bronze partition and overwrites it with the backfill's
   *    writer — the same idempotent table, kept current per trigger.
   *
-  * Local file IO: both streams start through
-  * `StateMaintenance.installLocalFileIo`, so on a local path their
-  * checkpoint logs are written by [[LocalCheckpointFileManager]] (a temp
-  * file and one POSIX rename) and every file they create, checkpoint or
-  * parquet, through [[NioLocalFileSystem]], which sets its permissions
-  * without forking `chmod`. A live ingest trigger makes five checkpoint
-  * writes (source log, offsets, state delta, sink log, commits) at
-  * under 1 ms each, where Spark's default FileContext manager over
-  * Hadoop's file system takes about 15 ms without libhadoop. A manager
-  * or file system the deployment set itself is kept, and other schemes
-  * get Spark's defaults.
+  * Stream starts: both streams start through `StateMaintenance.startStream`.
+  * On a local path their checkpoint logs are written by
+  * [[LocalCheckpointFileManager]] (a temp file and one POSIX rename) and
+  * every file they create, checkpoint or parquet, through
+  * [[NioLocalFileSystem]], which sets its permissions without forking
+  * `chmod`. A live ingest trigger makes five checkpoint writes (source
+  * log, offsets, state delta, sink log, commits) at under 1 ms each,
+  * where Spark's default FileContext manager over Hadoop's file system
+  * takes about 15 ms without libhadoop. A manager or file system the
+  * deployment set itself is kept, and other schemes get Spark's
+  * defaults. Each query starts with artifact isolation off (unless the
+  * deployment set it), so its clone session runs in the executors'
+  * shared class loader: the poll loop restarts both drains every wave,
+  * and a restart reuses the code the previous drain generated instead
+  * of compiling its plan again.
   *
   * Scale stance: the groupBy(window, login) shuffles once on
   * (window, login) with map-side partial aggregation; hour-partitioned
@@ -184,11 +188,17 @@ object GhIngest {
     bronze.orderBy(col("created_at").desc, col("id")).limit(k)
 
   /** T4 — stream metadata (the `XINFO STREAM` analogue): entry count,
-    * partition count, and event-time bounds of the bronze table. */
+    * partition count, and event-time bounds of the bronze table. One
+    * aggregation: the partitions are counted as the size of the set of
+    * (date, hour) pairs, which runs in the same pass as the other
+    * three, where a distinct count is planned as a second aggregation
+    * (one more job a read). The two counts agree because neither column
+    * is ever null: `startIngest` drops rows without an event time. */
   def streamInfo(spark: SparkSession, bronzeDir: String): DataFrame =
     readBronze(spark, bronzeDir).agg(
       count("*").as("n_entries"),
-      countDistinct(col("event_date"), col("event_hour")).as("n_partitions"),
+      size(collect_set(struct(col("event_date"), col("event_hour"))))
+        .cast("long").as("n_partitions"),
       min(col("created_at")).as("first_entry"),
       max(col("created_at")).as("last_entry"))
 
@@ -227,20 +237,21 @@ object GhIngest {
     * then stops, the W5 catch-up semantics.
     *
     * The query starts with `spark.sql.shuffle.partitions` set to
-    * `IngestStateWidth`, 1 (the caller's value is restored once
-    * `start()` returns, so other queries on `spark` keep theirs): a
-    * trigger runs one scan task and one task that dedups, commits the
-    * single state store and writes one file per touched (date, hour). A
-    * poll-sized trigger is mostly fixed cost, and every state partition
-    * adds a store commit to it. One partition is enough: the state holds
-    * at most one `DedupWatermark` horizon of event ids, O(10⁵) ids at
-    * GitHub's public event rate (SCALE.md, State), a few MB in one
-    * store; bulk history goes through the batch backfill, not this
-    * stream. Spark records the width in the checkpoint's offset log
-    * when the query first runs, and that recorded width governs every
-    * restart: a checkpoint started at another width resumes at it. Keep
-    * such a checkpoint rather than starting a fresh one, which would
-    * re-ingest the whole input directory.
+    * `IngestStateWidth`, 1 (one of `StateMaintenance.startStream`'s
+    * `confs`, restored once `start()` returns, so other queries on
+    * `spark` keep theirs): a trigger runs one scan task and one task
+    * that dedups, commits the single state store and writes one file
+    * per touched (date, hour). A poll-sized trigger is mostly fixed
+    * cost, and every state partition adds a store commit to it. One
+    * partition is enough: the state holds at most one `DedupWatermark`
+    * horizon of event ids, O(10⁵) ids at GitHub's public event rate
+    * (SCALE.md, State), a few MB in one store; bulk history goes
+    * through the batch backfill, not this stream. Spark records the
+    * width in the checkpoint's offset log when the query first runs,
+    * and that recorded width governs every restart: a checkpoint
+    * started at another width resumes at it. Keep such a checkpoint
+    * rather than starting a fresh one, which would re-ingest the whole
+    * input directory.
     *
     * No-data micro-batches stay on (the default): `AvailableNow` ends
     * its drain with a batch that only advances the watermark and evicts
@@ -248,14 +259,13 @@ object GhIngest {
     * before it evicts, so without that batch an id re-sent after its
     * horizon would be dropped instead of re-admitted.
     *
-    * The query's checkpoint files go through the manager and file
-    * system `StateMaintenance.installLocalFileIo` installs (POSIX
-    * rename, no `chmod` process, on a local path; a caller's own wins).
-    * Those settings, unlike the width, stay on `spark` after
-    * `start()`: the file source writes its `sources/0` log from the
-    * stream thread after `start()` returns, reading the manager off
-    * `spark`. The files and their format are Spark's either way, so a
-    * checkpoint written under Spark's default manager resumes here. */
+    * `startStream` also installs graft's local checkpoint manager and
+    * file system (POSIX rename, no `chmod` process, on a local path; a
+    * caller's own wins), which stay on `spark`, and starts the query
+    * without artifact isolation, so a restarted drain compiles only its
+    * new batches' watermark predicates. The checkpoint files and their
+    * format are Spark's either way, so a checkpoint written under
+    * Spark's default manager resumes here. */
   def startIngest(spark: SparkSession, inputDir: String, outDir: String,
                   checkpointDir: String,
                   availableNow: Boolean = true,
@@ -269,13 +279,9 @@ object GhIngest {
       .option("checkpointLocation", checkpointDir)
       .partitionBy("event_date", "event_hour")
       .outputMode("append")
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getAll.get(key)
-    StateMaintenance.installLocalFileIo(spark)
-    spark.conf.set(key, IngestStateWidth.toLong)
-    // start() clones the session's conf into the query
-    try (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    StateMaintenance.startStream(spark,
+      if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer,
+      Map("spark.sql.shuffle.partitions" -> IngestStateWidth.toString))
   }
 
   /** Streaming hourly scoring over the bronze table, by recompute: a
@@ -296,7 +302,16 @@ object GhIngest {
     *
     * The recompute runs on `spark`, not the micro-batch's own session,
     * which has adaptive execution off: with it on, a rewritten hour is
-    * one file. */
+    * one file.
+    *
+    * Each micro-batch scans its own rows for the touched hours (a
+    * `distinct` over the two partition columns), which is also what
+    * makes the batch report its `numInputRows`: a trigger that named
+    * its hours from the batch's file list instead would report 0 input
+    * rows, and a progress reader would drop it as empty. The query
+    * starts through `StateMaintenance.startStream` (local file IO,
+    * artifact isolation off), so a restarted drain reuses the code the
+    * previous one generated. */
   def startScoring(spark: SparkSession, bronzeDir: String, hourlyDir: String,
                    checkpointDir: String): StreamingQuery = {
     val state = new Path(checkpointDir, "state")
@@ -306,20 +321,19 @@ object GhIngest {
         "stateful scoring plan, which this stateless plan cannot resume. Use a " +
         "fresh checkpoint directory: it is safe, because scoring recomputes every " +
         "hour it touches from bronze, so replaying bronze rewrites the same scores.")
-    StateMaintenance.installLocalFileIo(spark)
-    spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val touched = batch.select("event_date", "event_hour").distinct().collect()
-        if (touched.nonEmpty)
-          GhBackfill.writeHourlyScores(spark,
-            readBronze(spark, bronzeDir).filter(touched.map(r =>
-              col("event_date") === lit(r.get(0)) && col("event_hour") === lit(r.get(1))
-            ).reduce(_ || _)),
-            hourlyDir, touched.map(_.get(0).toString).distinct.toSeq)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StateMaintenance.startStream(spark,
+      spark.readStream.schema(bronzeSchema).parquet(bronzeDir)
+        .writeStream
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val touched = batch.select("event_date", "event_hour").distinct().collect()
+          if (touched.nonEmpty)
+            GhBackfill.writeHourlyScores(spark,
+              readBronze(spark, bronzeDir).filter(touched.map(r =>
+                col("event_date") === lit(r.get(0)) && col("event_hour") === lit(r.get(1))
+              ).reduce(_ || _)),
+              hourlyDir, touched.map(_.get(0).toString).distinct.toSeq)
+        }
+        .trigger(Trigger.AvailableNow()))
   }
 }

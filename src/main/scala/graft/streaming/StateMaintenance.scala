@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** The partial-state policy of the 13 incremental serving structures,
@@ -37,17 +38,20 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    the stream's checkpoint already implies), as parquet compaction
   *    jobs do everywhere.
   *
-  * Local file IO: every stream here starts through `installLocalFileIo`
-  * (so does `GhBackfill`'s hour write), which points the session at
-  * [[LocalCheckpointFileManager]] and [[NioLocalFileSystem]] unless the
-  * deployment chose its own. On a local path each checkpoint log write
-  * is then a temp file plus one POSIX rename, not Spark's default
-  * FileContext rename, and no file or directory a write creates forks a
-  * `chmod` process (Hadoop's way without libhadoop); other schemes keep
-  * Spark's and Hadoop's defaults. The settings stay on the session
-  * after `start()`: the file source writes its first log after
-  * `start()` returns, from the stream thread, and reads the manager off
-  * the caller's session.
+  * Stream starts: every stream here starts through `startStream`. It
+  * points the session's local file writes at [[LocalCheckpointFileManager]]
+  * and [[NioLocalFileSystem]] (`installLocalFileIo`, which `GhBackfill`'s
+  * hour write also runs), unless the deployment chose its own. On a
+  * local path each checkpoint log write is then a temp file plus one
+  * POSIX rename, not Spark's default FileContext rename, and no file or
+  * directory a write creates forks a `chmod` process (Hadoop's way
+  * without libhadoop); other schemes keep Spark's and Hadoop's defaults.
+  * Those settings stay on the session after `start()`: the file source
+  * writes its first log after `start()` returns, from the stream
+  * thread, and reads the manager off the caller's session. The query's
+  * own settings (a state width, artifact isolation off) hold only
+  * while `start()` clones the session, so a restarted drain reuses the
+  * code its previous run generated.
   */
 object StateMaintenance {
 
@@ -235,8 +239,8 @@ object StateMaintenance {
     * checkpoint and state-store managers) at [[NioLocalFileSystem]] for
     * `file:`. Each is set only when neither the session nor its Hadoop
     * configuration names one already: a deployment's own manager or
-    * file system wins. Called before every stream `start()` and hour
-    * write here.
+    * file system wins. Called by `startStream` and by `GhBackfill`'s
+    * hour write.
     *
     * The file system needs `fs.file.impl.disable.cache`: Hadoop caches
     * file systems by scheme and user, not by configuration, and the
@@ -245,7 +249,7 @@ object StateMaintenance {
     * a path through `sparkContext.hadoopConfiguration` gets the default.
     *
     * The settings are not restored after `start()`, unlike
-    * `startIngest`'s state width: a file source creates its `sources/0`
+    * `startStream`'s `confs`: a file source creates its `sources/0`
     * log on the stream thread after `start()` returns, through the
     * caller's session, so restored settings would send that log back
     * through Spark's defaults. */
@@ -273,6 +277,51 @@ object StateMaintenance {
     reader.parquet(inputDir)
   }
 
+  /** The artifact-isolation key: the clone session `start()` makes for
+    * the query copies it with the rest of the caller's conf. */
+  private val IsolationKey = "spark.sql.artifact.isolation.enabled"
+
+  /** Start `writer`'s query: the one stream start of the program.
+    * Local file IO is installed first (`installLocalFileIo`, kept on
+    * the session). Then `confs`, plus `IsolationKey` = false unless the
+    * session set that key itself, are set on `spark` around
+    * `writer.start()`, which clones the session (conf included) into
+    * the query, and every value is restored once it returns: a key the
+    * session had not set is unset again, so other queries on `spark`
+    * keep theirs.
+    *
+    * Why isolation is off: Spark caches generated code by (context
+    * class loader, code). With isolation on, which is Spark's default,
+    * the executors give each query's clone session a class loader of
+    * its own, so every restart of a drain compiles its whole plan again
+    * (about 17 classes for an ingest drain, 6 to 8 for a scoring drain).
+    * Without it the clone runs in the executors' shared class loader
+    * and a restart compiles only what changed, such as the watermark
+    * predicates of a new batch. The trade:
+    *  - a clone without isolation cannot see artifacts the caller added
+    *    with `addArtifact`;
+    *  - the stream plans here use only classes on the application class
+    *    path, so they need none;
+    *  - a deployment that sets the key keeps its value. The key is read
+    *    from `spark.conf.getAll`, not `getOption`, which would report
+    *    the default as a value the session set;
+    *  - Spark fixes a session's own isolation at its first use of its
+    *    artifacts, so a session whose first action is a stream start
+    *    fixes it there, with the key false, and runs its later queries
+    *    without isolation too. */
+  def startStream(spark: SparkSession, writer: DataStreamWriter[_],
+                  confs: Map[String, String] = Map.empty): StreamingQuery = {
+    installLocalFileIo(spark)
+    val own = spark.conf.getAll
+    val set = confs ++
+      (if (own.contains(IsolationKey)) Map.empty else Map(IsolationKey -> "false"))
+    try {
+      set.foreach { case (k, v) => spark.conf.set(k, v) }
+      writer.start()
+    }
+    finally set.keys.foreach(k => own.get(k).fold(spark.conf.unset(k))(spark.conf.set(k, _)))
+  }
+
   /** The shared file-drop maintenance-stream skeleton: `fileDropReader`
     * → foreachBatch(processor) → AvailableNow
     * (drain-and-stop; a 24/7 deployment swaps in a processing-time
@@ -281,16 +330,13 @@ object StateMaintenance {
   def startFileDropStream(spark: SparkSession, inputDir: String,
                           checkpointDir: String,
                           maxFilesPerTrigger: Option[Int])(
-      processor: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    installLocalFileIo(spark)
-    fileDropReader(spark, inputDir, maxFilesPerTrigger)
+      processor: (DataFrame, Long) => Unit): StreamingQuery =
+    startStream(spark, fileDropReader(spark, inputDir, maxFilesPerTrigger)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch(processor)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-  }
+      .trigger(Trigger.AvailableNow()))
 
   private def batchPartitions(spark: SparkSession,
                               dir: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {

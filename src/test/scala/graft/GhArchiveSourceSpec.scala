@@ -69,6 +69,40 @@ class GhArchiveSourceSpec extends AnyFunSuite with SparkTestSession {
     assert(byDate.count() === 2)
   }
 
+  test("a corrupt hour fails on its first open, without retries") {
+    import com.sun.net.httpserver.{HttpExchange, HttpServer}
+    import java.net.InetSocketAddress
+    import java.util.concurrent.atomic.AtomicInteger
+    val hits = new AtomicInteger(0)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", (ex: HttpExchange) => {
+      hits.incrementAndGet()
+      val body = "not gzip at all".getBytes("UTF-8")
+      ex.sendResponseHeaders(200, body.length)
+      ex.getResponseBody.write(body); ex.close()
+    })
+    server.start()
+    val err = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(err, true, "UTF-8"))
+    try {
+      val e = intercept[org.apache.spark.SparkException] {
+        spark.read.format("gharchive")
+          .option("baseUrl", s"http://127.0.0.1:${server.getAddress.getPort}")
+          .option("start", "2024-01-15-3").option("end", "2024-01-15-3")
+          .option("maxRetries", "2").option("retryBackoffMs", "10")
+          .load().count()
+      }
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.util.zip.ZipException]), e)
+    } finally {
+      System.setErr(stderr)
+      server.stop(0)
+    }
+    assert(hits.get() === 1)
+    assert(!err.toString("UTF-8").contains("retry"), err.toString("UTF-8"))
+  }
+
   test("pushed filters stay residual: partition-level pruning never over-keeps rows") {
     val (_, base) = fixture()
     // hour >= 4 prunes hour 3's partition AND Spark re-applies the

@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -278,6 +279,7 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
   }
 
   private val managerKey = LocalCheckpointFileManager.ClassKey
+  private val isolationKey = "spark.sql.artifact.isolation.enabled"
   private val localManager = classOf[LocalCheckpointFileManager].getName
   private val fsKey = NioLocalFileSystem.ImplKey
   private val noCacheKey = s"$fsKey.disable.cache"
@@ -322,6 +324,8 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
     for ((name, start) <- starts) withoutLocalIo {
       drained(start(s"$root/ckpt-$name"))
       installed(name)
+      // the query's own settings are not left on the caller's session
+      assert(!spark.conf.getAll.contains(isolationKey), name)
     }
     // a backfill can be a session's first write, before any stream
     withoutLocalIo {
@@ -388,6 +392,104 @@ class GhIngestSpec extends AnyFunSuite with SparkTestSession {
       assert(created.exists(p => p.startsWith(table) && p.contains(part) &&
         p.endsWith(".parquet")), created)
     assert(created.exists(_.startsWith("ckpt/offsets/")), created)
+  }
+
+  /** Classes Spark's code generator compiled while `body` ran: its
+    * compile-time histogram counts one sample per cache miss. */
+  private def compiles(body: => Unit): Long = {
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** Classes compiled by a restarted ingest drain and a restarted
+    * scoring drain, each over one new page, after one warm drain of
+    * each on the same checkpoints. */
+  private def restartCompiles(): (Long, Long) = {
+    val in = Files.createTempDirectory("graft-restart")
+    val tmp = Files.createTempDirectory("graft-restart-out").toString
+    def ingest() = drained(GhIngest.startIngest(spark, in.toString, s"$tmp/bronze", s"$tmp/ckpt"))
+    def scoring() = drained(GhIngest.startScoring(spark, s"$tmp/bronze", s"$tmp/hourly", s"$tmp/ckpt-s"))
+    land(in, "page1", "A" -> "10:00", "B" -> "10:01")
+    ingest(); scoring()
+    land(in, "page2", "C" -> "10:02", "D" -> "11:03")
+    val ingestCompiles = compiles(ingest())
+    val scoringCompiles = compiles(scoring())
+    assert(bronzeIds(s"$tmp/bronze") === Seq("A", "B", "C", "D"))
+    (ingestCompiles, scoringCompiles)
+  }
+
+  test("a restarted drain reuses the code its previous run generated") {
+    val (ingest, scoring) = restartCompiles()
+    info(s"classes compiled on restart: ingest $ingest, scoring $scoring")
+    // the new batches' watermark predicates, and nothing of the plans
+    assert(ingest <= 4, s"$ingest classes compiled by the restarted ingest drain")
+    assert(scoring <= 1, s"$scoring classes compiled by the restarted scoring drain")
+  }
+
+  test("a session that keeps artifact isolation on still compiles every restart") {
+    withConf(isolationKey, "true") {
+      val (ingest, scoring) = restartCompiles()
+      info(s"classes compiled on restart: ingest $ingest, scoring $scoring")
+      assert(ingest > 4, s"$ingest classes compiled by the restarted ingest drain")
+      assert(scoring > 1, s"$scoring classes compiled by the restarted scoring drain")
+      assert(spark.conf.getAll.get(isolationKey) === Some("true"))
+    }
+  }
+
+  test("a stream start restores the caller's confs; a key the caller had not set stays unset") {
+    val width = "spark.sql.shuffle.partitions"
+    val root = Files.createTempDirectory("graft-start-confs")
+    assert(!spark.conf.getAll.contains(isolationKey))
+    withConf(width, "4") {
+      drained(GhIngest.startIngest(spark, fixtureDir, s"$root/bronze", s"$root/ckpt"))
+      assert(spark.conf.getAll.get(width) === Some("4"))
+      assert(!spark.conf.getAll.contains(isolationKey))
+    }
+    val own = spark.conf.getAll.get(width)
+    spark.conf.unset(width)
+    try {
+      val q = StateMaintenance.startStream(spark,
+        spark.readStream.schema(GhIngest.bronzeSchema).parquet(s"$root/bronze")
+          .writeStream.format("noop").option("checkpointLocation", s"$root/ckpt-n")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()),
+        Map(width -> "1"))
+      drained(q)
+      assert(!spark.conf.getAll.contains(width))
+      assert(!spark.conf.getAll.contains(isolationKey))
+    } finally own.foreach(spark.conf.set(width, _))
+  }
+
+  test("a fresh session whose first action is a stream start runs without isolation from then on") {
+    // Spark fixes a session's isolation at its first use of its
+    // artifacts, reading the key then; a start on a session that has
+    // run nothing yet makes that first use while the key is false
+    val fresh = spark.newSession()
+    val root = Files.createTempDirectory("graft-fresh")
+    drained(GhIngest.startIngest(fresh, fixtureDir, s"$root/bronze", s"$root/ckpt"))
+    assert(!fresh.conf.getAll.contains(isolationKey))
+    val artifacts = fresh.sessionState.artifactManager
+    // the session's artifact state: null when it is not isolated
+    assert(artifacts.getClass.getMethod("state").invoke(artifacts) === null)
+  }
+
+  test("streamInfo's one aggregation returns the distinct count's row") {
+    val root = Files.createTempDirectory("graft-info")
+    drained(GhIngest.startIngest(spark, fixtureDir, s"$root/bronze", s"$root/ckpt"))
+    Files.createDirectories(root.resolve("empty"))
+    def distinctCount(dir: String) = GhIngest.readBronze(spark, dir).agg(
+      count("*").as("n_entries"),
+      countDistinct($"event_date", $"event_hour").as("n_partitions"),
+      min($"created_at").as("first_entry"),
+      max($"created_at").as("last_entry"))
+    for (dir <- Seq(s"$root/bronze", s"$root/empty")) {
+      val info = GhIngest.streamInfo(spark, dir)
+      val expected = distinctCount(dir)
+      assert(info.schema === expected.schema)
+      assert(info.collect().toSeq === expected.collect().toSeq)
+    }
+    // the fixture's 15 events span four (date, hour) partitions
+    assert(GhIngest.streamInfo(spark, s"$root/bronze").head().getLong(1) === 4L)
   }
 
   test("streaming/batch parity (W5): backfill equals batch result") {

@@ -72,6 +72,32 @@ class GhScoringStreamSpec extends AnyFunSuite with SparkTestSession {
       GhIngest.dedupEvents(spark.read.parquet(bronze)))))
   }
 
+  test("each scoring micro-batch reports the bronze rows it added as its input rows") {
+    val root = Files.createTempDirectory("graft-scoring-progress")
+    val in = root.resolve("in"); Files.createDirectories(in)
+    val bronze = s"$root/bronze"
+    var seen = 0L
+    // the batch's own scan for its touched hours is what counts its
+    // rows: a trigger that read no batch rows would report 0 and look
+    // empty to every progress reader
+    def wave(): Unit = {
+      val ingest = GhIngest.startIngest(spark, in.toString, bronze, s"$root/ckpt-ingest")
+      assert(ingest.awaitTermination(60000)); ingest.exception.foreach(e => throw e)
+      val total = spark.read.parquet(bronze).count()
+      val q = GhIngest.startScoring(spark, bronze, s"$root/hourly", s"$root/ckpt-score")
+      assert(q.awaitTermination(60000)); q.exception.foreach(e => throw e)
+      assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq === Seq(total - seen))
+      seen = total
+    }
+    Files.copy(getClass.getResourceAsStream("/gh_events.ndjson"), in.resolve("batch1.ndjson"))
+    wave()
+    Files.write(in.resolve("batch2.ndjson"), Seq(
+      push("5001", "octocat", "2025-08-11T00:05:00Z"),
+      push("5002", "nightowl", "2025-08-11T01:00:00Z")).mkString("\n").getBytes("UTF-8"))
+    wave()
+    assert(seen === 17)
+  }
+
   private def scored(scores: DataFrame): Set[(String, String, Long)] =
     scores
       .select(date_format($"hour", "yyyy-MM-dd HH").as("h"), $"login", $"score")

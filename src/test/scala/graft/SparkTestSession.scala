@@ -18,9 +18,11 @@ trait SparkTestSession {
   }
   val sf: String = "/root/testdata/sf0.001"
 
-  /** `body` with one session conf set, restored afterwards. */
+  /** `body` with one session conf set, restored afterwards: a key the
+    * session had not set is unset again (`getAll`, not `getOption`,
+    * which reports a registered key's default as its value). */
   def withConf[A](key: String, value: String)(body: => A): A = {
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     spark.conf.set(key, value)
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
